@@ -50,9 +50,10 @@ def series_key_expr(metric: Column, tags: Column) -> Column:
     (core/tsdb_keys.go) carries the identical injectivity assumption.
     Operators that group by series_key and take first(tags) (downsample's
     grouped aggregate, the emit-empty grid, the tdigest join) rely on it.
-    Escaping is deliberately NOT added here: the unescaped key is the
-    reference's wire format and appears verbatim in query output; a
-    deployment ingesting adversarial tag values must sanitize upstream.
+    Escaping is deliberately NOT added here: the unescaped key mirrors
+    the reference's legacy string key with printable separators and
+    appears verbatim in query output; a deployment ingesting adversarial
+    tag values must sanitize upstream.
     """
     kv = F.transform(
         F.array_sort(F.map_entries(tags)),

@@ -165,6 +165,64 @@ def _serialized(fn):
     return wrapper
 
 
+def _validated_regex(spark: SparkSession, pattern: str) -> str:
+    """Reject an invalid =~ / !~ pattern at PLAN time as NBQLError.
+    rlike compiles the pattern inside whole-stage codegen, so a bad
+    client pattern otherwise aborts the whole Spark JOB with a raw
+    PatternSyntaxException out of an executor task (found by matcher
+    fuzzing). Validated against java.util.regex itself — the exact
+    dialect the executor uses (Python's re accepts e.g. 'a{,' which
+    Java rejects, so re.compile would under-reject)."""
+    from nexusbase_spark.nbql.parser import NBQLError
+
+    try:
+        spark._jvm.java.util.regex.Pattern.compile(pattern)
+    except Exception as e:
+        # Only a PatternSyntaxException is a CLIENT error; anything else
+        # (dead gateway, connection reset) is a server fault and must
+        # propagate as one, not be misreported as a bad pattern
+        # (ADVICE r8). The throwable rides on `java_exception` for a
+        # raw Py4JJavaError and on `_origin` after pyspark's
+        # capture-conversion (PatternSyntaxException arrives as a
+        # captured IllegalArgumentException).
+        je = getattr(e, "java_exception", None)
+        if je is None:
+            je = getattr(e, "_origin", None)
+        try:
+            jclass = je.getClass().getName() if je is not None else None
+        except Exception:
+            jclass = None
+        if jclass != "java.util.regex.PatternSyntaxException":
+            raise
+        msg = je.getMessage()
+        raise NBQLError(
+            f"invalid tag matcher regex {pattern!r}: "
+            f"{str(msg).splitlines()[0]}") from None
+    return pattern
+
+
+def apply_tag_matchers(df: DataFrame, matchers) -> DataFrame:
+    """Filter ``df`` by NBQL's non-equality tag matchers, ``(key, op,
+    value)`` with op ``!=``, ``=~`` or ``!~``: the tag must EXIST and
+    differ / (not) match. These are scan-side predicates; equality rides
+    the catalog IN-list instead. A future optimization is resolving
+    regexes against the catalog too (series-sized), then pushing the
+    same IN-list."""
+    for k, op, v in (matchers or []):
+        tv = F.col("tags").getItem(k)
+        if op == "!=":
+            df = df.filter(tv.isNotNull() & (tv != v))
+        elif op == "=~":
+            df = df.filter(tv.isNotNull()
+                           & tv.rlike(_validated_regex(df.sparkSession, v)))
+        elif op == "!~":
+            df = df.filter(tv.isNotNull()
+                           & ~tv.rlike(_validated_regex(df.sparkSession, v)))
+        else:
+            raise ValueError(f"unknown tag matcher op: {op!r}")
+    return df
+
+
 class NexusEngine:
     def __init__(self, spark: SparkSession, warehouse: str,
                  l0_trigger: int = 4, cache_capacity: int = 0,
@@ -698,41 +756,6 @@ class NexusEngine:
             return df
         return self.spark.createDataFrame([], schema)
 
-    def _validated_regex(self, pattern: str) -> str:
-        """Reject an invalid =~ / !~ pattern at PLAN time as NBQLError.
-        rlike compiles the pattern inside whole-stage codegen, so a bad
-        client pattern otherwise aborts the whole Spark JOB with a raw
-        PatternSyntaxException out of an executor task (found by matcher
-        fuzzing). Validated against java.util.regex itself — the exact
-        dialect the executor uses (Python's re accepts e.g. 'a{,' which
-        Java rejects, so re.compile would under-reject)."""
-        from nexusbase_spark.nbql.parser import NBQLError
-
-        try:
-            self.spark._jvm.java.util.regex.Pattern.compile(pattern)
-        except Exception as e:
-            # Only a PatternSyntaxException is a CLIENT error; anything else
-            # (dead gateway, connection reset) is a server fault and must
-            # propagate as one, not be misreported as a bad pattern
-            # (ADVICE r8). The throwable rides on `java_exception` for a
-            # raw Py4JJavaError and on `_origin` after pyspark's
-            # capture-conversion (PatternSyntaxException arrives as a
-            # captured IllegalArgumentException).
-            je = getattr(e, "java_exception", None)
-            if je is None:
-                je = getattr(e, "_origin", None)
-            try:
-                jclass = je.getClass().getName() if je is not None else None
-            except Exception:
-                jclass = None
-            if jclass != "java.util.regex.PatternSyntaxException":
-                raise
-            msg = je.getMessage()
-            raise NBQLError(
-                f"invalid tag matcher regex {pattern!r}: "
-                f"{str(msg).splitlines()[0]}") from None
-        return pattern
-
     def points(self, metric: str | None = None,
                tags: dict[str, str] | None = None,
                start: int | None = None, end: int | None = None,
@@ -776,21 +799,7 @@ class NexusEngine:
             else:  # catalog absent or too many series: scan-side filter
                 for k, v in tags.items():
                     df = df.filter(F.col("tags").getItem(k) == v)
-        for k, op, v in (matchers or []):
-            # non-equality matchers (grammar extension) are scan-side
-            # predicates: the tag must EXIST and differ / (not) match.
-            # Equality still rides the catalog IN-list fast path above; a
-            # future optimization is resolving regexes against the
-            # catalog too (series-sized), then pushing the same IN-list.
-            tv = F.col("tags").getItem(k)
-            if op == "!=":
-                df = df.filter(tv.isNotNull() & (tv != v))
-            elif op == "=~":
-                df = df.filter(tv.isNotNull() & tv.rlike(self._validated_regex(v)))
-            elif op == "!~":
-                df = df.filter(tv.isNotNull() & ~tv.rlike(self._validated_regex(v)))
-            else:
-                raise ValueError(f"unknown tag matcher op: {op!r}")
+        df = apply_tag_matchers(df, matchers)
         if start is not None:
             df = df.filter(F.col("ts") >= start)
             if self.day_partitioned:  # directory-level day pruning
@@ -1531,16 +1540,7 @@ class NexusEngine:
                       .select(*cols))
             for k, v in (q.tags or {}).items():
                 df = df.filter(F.col("tags").getItem(k) == v)
-            for k, op, v in (q.tag_matchers or []):
-                tv = F.col("tags").getItem(k)
-                if op == "!=":
-                    df = df.filter(tv.isNotNull() & (tv != v))
-                elif op == "=~":
-                    df = df.filter(tv.isNotNull()
-                                   & tv.rlike(self._validated_regex(v)))
-                elif op == "!~":
-                    df = df.filter(tv.isNotNull()
-                                   & ~tv.rlike(self._validated_regex(v)))
+            df = apply_tag_matchers(df, q.tag_matchers)
             if q.start is not None:
                 df = df.filter(F.col("window_start") >= q.start)
             if q.end is not None:

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nexusbase_spark.store import ParquetStore
+
 
 def daily_user_sketches(events: DataFrame, day_col: Column, *,
                         key: str = "user_id", metric: str = "event_type",
@@ -130,48 +132,34 @@ def cms_estimate(sketch: DataFrame, items: list[str], depth: int = 4,
             .agg(F.min("c").cast("long").alias("estimate")))
 
 
-class CMSStore:
-    """Persistent count-min sketch under continuous ingest — the same
-    mergeable-delta store contract as CorpusStats/DriftMonitor: each
+# the CMSStore layer cms_candidate_gate appends its threshold-crossers to
+_CANDIDATES = "candidates"
+
+
+class CMSStore(ParquetStore):
+    """Persistent count-min sketch under continuous ingest: each
     micro-batch appends its own d x w cell table (O(d*w) rows, never a
     history rewrite), readers SUM cells, ``compact()`` folds the delta
     layers. Gives a stream approximate per-item counts in fixed space —
     the pre-filter in front of exact heavy-hitter verification when the
     key space is unbounded."""
 
-    def __init__(self, spark, path: str):
-        self.spark = spark
-        self.path = path
-
     @classmethod
     def build(cls, spark, path: str, *, col: str = "tok",
               depth: int = 4, width: int = 256) -> "CMSStore":
-        import json
-        import os
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump({"col": col, "depth": depth, "width": width}, f)
-        (spark.createDataFrame([], "j int, cell long, cnt long")
-         .coalesce(1).write.mode("overwrite")
-         .parquet(os.path.join(path, "cells")))
-        return cls(spark, path)
-
-    def _meta(self) -> dict:
-        import json
-        import os
-        with open(os.path.join(self.path, "meta.json")) as f:
-            return json.load(f)
+        st = cls(spark, path)
+        st._write_meta({"col": col, "depth": depth, "width": width})
+        st._write_layer(spark.createDataFrame([], "j int, cell long, cnt long")
+                        .coalesce(1), "cells", "overwrite")
+        return st
 
     def update(self, batch: DataFrame) -> None:
-        import os
         m = self._meta()
-        (cms_build(batch, m["col"], m["depth"], m["width"])
-         .coalesce(1).write.mode("append")
-         .parquet(os.path.join(self.path, "cells")))
+        self._write_layer(cms_build(batch, m["col"], m["depth"], m["width"])
+                          .coalesce(1), "cells")
 
     def _cells(self) -> DataFrame:
-        import os
-        return (self.spark.read.parquet(os.path.join(self.path, "cells"))
+        return (self._layer("cells")
                 .groupBy("j", "cell").agg(F.sum("cnt").alias("cnt")))
 
     def estimate(self, items: list[str]) -> dict[str, int]:
@@ -183,26 +171,21 @@ class CMSStore:
     def compact(self) -> None:
         import os
         folded = self._cells().localCheckpoint(eager=True)
-        (folded.coalesce(1).write.mode("overwrite")
-         .parquet(os.path.join(self.path, "cells")))
+        self._write_layer(folded.coalesce(1), "cells", "overwrite")
         # The candidate-gate table (one small appended file per batch that
         # crossed the threshold) folds too: distinct items, one file. Its
         # batch_id provenance is compaction-scoped by design — the gate's
         # contract is the distinct candidate SET, which dedup preserves.
-        cand_path = _gate_candidates_path(self)
-        if os.path.isdir(cand_path):
-            cand = (self.spark.read.parquet(cand_path)
+        if os.path.isdir(os.path.join(self.path, _CANDIDATES)):
+            cand = (self._layer(_CANDIDATES)
                     .groupBy("item")
                     .agg(F.max("estimate").alias("estimate"),
                          F.max("batch_id").alias("batch_id"))
                     .localCheckpoint(eager=True))
-            (cand.coalesce(1).write.mode("overwrite").parquet(cand_path))
+            self._write_layer(cand.coalesce(1), _CANDIDATES, "overwrite")
 
     def for_each_batch(self):
-        def run(batch: DataFrame, batch_id: int) -> None:
-            if batch.head(1):
-                self.update(batch)
-        return run
+        return self._sink(lambda batch, _: self.update(batch))
 
 
 def cms_estimate_df(sketch: DataFrame, probe: DataFrame, col: str,
@@ -225,11 +208,6 @@ def cms_estimate_df(sketch: DataFrame, probe: DataFrame, col: str,
             .agg(F.min("c").cast("long").alias("estimate")))
 
 
-def _gate_candidates_path(store: "CMSStore") -> str:
-    import os
-    return os.path.join(store.path, "candidates")
-
-
 def cms_candidate_gate(store: "CMSStore", threshold: int):
     """CMS-backed streaming heavy-hitter pre-filter (foreachBatch): fold
     each micro-batch into the persistent sketch, then estimate the
@@ -247,20 +225,15 @@ def cms_candidate_gate(store: "CMSStore", threshold: int):
     O(d*w) regardless of vocabulary, which is the whole point — an
     exact running count per token would hold the unbounded key space.
     """
-    from pyspark.sql import DataFrame as _DF  # noqa: F401
-
-    def run(batch: DataFrame, batch_id: int) -> None:
-        if not batch.head(1):
-            return
+    def fold(batch: DataFrame, batch_id: int) -> None:
         m = store._meta()
         store.update(batch)
         est = cms_estimate_df(store._cells(), batch, m["col"],
                               m["depth"], m["width"])
-        (est.filter(F.col("estimate") >= threshold)
-         .withColumn("batch_id", F.lit(int(batch_id)))
-         .coalesce(1).write.mode("append")
-         .parquet(_gate_candidates_path(store)))
-    return run
+        store._write_layer(est.filter(F.col("estimate") >= threshold)
+                           .withColumn("batch_id", F.lit(int(batch_id)))
+                           .coalesce(1), _CANDIDATES)
+    return store._sink(fold)
 
 
 def gate_candidates(store: "CMSStore") -> DataFrame:
@@ -269,10 +242,9 @@ def gate_candidates(store: "CMSStore") -> DataFrame:
     that is the legitimate "no heavy hitters yet" state, so it reads as
     an empty (item) frame, not a missing-path error."""
     import os
-    path = _gate_candidates_path(store)
-    if not os.path.isdir(path):
+    if not os.path.isdir(os.path.join(store.path, _CANDIDATES)):
         return store.spark.createDataFrame([], "item string")
-    return store.spark.read.parquet(path).select(F.col("item")).distinct()
+    return store._layer(_CANDIDATES).select(F.col("item")).distinct()
 
 
 def verify_gate_candidates(corpus: DataFrame, store: "CMSStore",

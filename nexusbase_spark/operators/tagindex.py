@@ -61,8 +61,19 @@ class SeriesCatalog:
     # ------------------------------------------------------------ writes
 
     def _write_file(self, table: pa.Table) -> None:
+        """Publish one catalog file atomically. A concurrent ``resolve``
+        must never list a half-written file, so the table is written
+        under a hidden, non-``.parquet`` name (skipped by pyarrow and
+        Spark discovery and by ``exists``) and renamed into place."""
         os.makedirs(self.path, exist_ok=True)
-        pq.write_table(table, os.path.join(self.path, f"cat-{uuid.uuid4().hex}.parquet"))
+        uid = uuid.uuid4().hex
+        tmp = os.path.join(self.path, f".cat-{uid}.tmp")
+        try:
+            pq.write_table(table, tmp)
+            os.replace(tmp, os.path.join(self.path, f"cat-{uid}.parquet"))
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
 
     def append_points(self, points: list[tuple[str, dict[str, str], str]]) -> None:
         """Driver-side append for the put/put_batch path:
@@ -106,19 +117,6 @@ class SeriesCatalog:
             .distinct()
         )
         cat.write.mode("overwrite").parquet(self.path)
-
-    def compact(self) -> None:
-        """Merge the tiny per-put files into one deduped file."""
-        if not self.exists():
-            return
-        import pyarrow.dataset as ds
-        table = ds.dataset(self.path, format="parquet").to_table()
-        dedup = table.to_pandas().drop_duplicates()
-        for name in os.listdir(self.path):
-            if name.endswith(".parquet"):
-                os.unlink(os.path.join(self.path, name))
-        self._write_file(pa.Table.from_pandas(dedup, schema=ARROW_SCHEMA,
-                                              preserve_index=False))
 
     # ------------------------------------------------------------- reads
 

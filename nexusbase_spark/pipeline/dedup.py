@@ -37,6 +37,11 @@ from nexusbase_spark.pipeline.text import tokens_col, word_shingles
 # with max_bucket=None explicitly.
 DEFAULT_MAX_BUCKET = 1000
 
+# sentinel: "caller didn't pass max_bucket" — the index streaming sinks
+# resolve it to DEFAULT_MAX_BUCKET, while an explicit None stays the
+# documented lossless (unbounded) opt-out
+_SINK_DEFAULT = object()
+
 
 def curation_keepers(docs: DataFrame, threshold: float = 0.8,
                      id_col: str = "doc_id", text_col: str = "text",
@@ -153,26 +158,6 @@ def shingle_sets(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
         .select(F.col(id_col), F.explode(
             F.array_distinct(shingles_of_tokens(F.col("__toks"), n)))
             .alias("shingle"))
-    )
-
-
-def shingle_arrays(df: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text", n: int = 3) -> DataFrame:
-    """(id, shset: array<string>) — the doc's distinct shingles, computed
-    NARROWLY (no explode, no shuffle). Docs too short to have any shingle
-    are dropped, matching the explode form's semantics. Tokenizes in its
-    own projection (see shingle_sets, r9)."""
-    from nexusbase_spark.pipeline.text import shingles_of_tokens, tokens_col
-    return (
-        df.select(F.col(id_col), tokens_col(F.col(text_col)).alias("__toks"))
-        # size(__toks) >= n  ⇔  the doc has at least one shingle (same
-        # null semantics); filtering on size(shset) pushed the predicate
-        # below the projection with the shingle pipeline re-inlined —
-        # 6 split() copies per row at the scan just to test emptiness.
-        .filter(F.size("__toks") >= n)
-        .select(F.col(id_col),
-                F.array_distinct(shingles_of_tokens(F.col("__toks"), n))
-                .alias("shset"))
     )
 
 
@@ -554,11 +539,11 @@ def bucket_clusters(df: DataFrame, id_col: str = "doc_id",
     candidate set at all -> (doc_id, canonical_id) for every doc sharing
     at least one band bucket with another doc.
 
-    The scale motivation (measured in tools/pipeline_scale_probe.py):
-    when dup cliques are large, the verified-pairs path's OUTPUT is
-    inherently quadratic — a 20-strong clique is 190 pairs before
-    clustering collapses them again. For the dedup endgame (pick one doc
-    per group) the pairs are scaffolding; this operator skips them.
+    The scale motivation (SCALE.md, "Pipeline scale probe — 100k docs /
+    200k vectors"): when dup cliques are large, the verified-pairs path's
+    OUTPUT is inherently quadratic — a 20-strong clique is 190 pairs
+    before clustering collapses them again. For the dedup endgame (pick
+    one doc per group) the pairs are scaffolding; this operator skips them.
     Per bucket it emits STAR EDGES doc -> bucket-min (linear: one edge
     per doc per band), and connected components over those stars equal
     components over full bucket cliques — co-membership is what defines

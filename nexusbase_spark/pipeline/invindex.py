@@ -26,19 +26,16 @@ Per-term document frequencies are EXACT from the pruned postings read
 (count of postings), so idf needs no separate df store.
 
 The reference has no text retrieval at all; this is training-pipeline
-surface (build brief: similarity/search family), sharing the
-verify/resync audit contract of DedupIndex and VectorIndex.
+surface (build brief: similarity/search family).
 """
 
 from __future__ import annotations
-
-import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nexusbase_spark.pipeline.text import tokens_col
+from nexusbase_spark.store import ParquetStore
 
 
 def _postings_of(docs: DataFrame, id_col: str, text_col: str,
@@ -64,10 +61,8 @@ def _postings_of(docs: DataFrame, id_col: str, text_col: str,
     return postings, glob
 
 
-class InvertedIndex:
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
+class InvertedIndex(ParquetStore):
+    _layout = {"postings": ("bucket", "token")}
 
     # ---------------------------------------------------------------- build
 
@@ -75,31 +70,18 @@ class InvertedIndex:
     def build(cls, spark: SparkSession, path: str, docs: DataFrame, *,
               id_col: str = "doc_id", text_col: str = "text",
               n_buckets: int = 64) -> "InvertedIndex":
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump({"id_col": id_col, "text_col": text_col,
-                       "n_buckets": n_buckets}, f)
-        postings, glob = _postings_of(docs, id_col, text_col, n_buckets)
-        (postings.repartition("bucket").sortWithinPartitions("token")
-         .write.mode("overwrite").partitionBy("bucket")
-         .parquet(os.path.join(path, "postings")))
-        glob.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, "globals"))
-        return cls(spark, path)
-
-    def _meta(self) -> dict:
-        with open(os.path.join(self.path, "meta.json")) as f:
-            return json.load(f)
-
-    def _postings(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "postings"))
+        ix = cls(spark, path)
+        ix._write_meta({"id_col": id_col, "text_col": text_col,
+                        "n_buckets": n_buckets})
+        ix._fold(docs, "overwrite")
+        return ix
 
     def _globals(self) -> tuple[int, float]:
         # cached per instance: serving reads this once, appends/resyncs
         # invalidate (the globals delta table is tiny either way — the
         # cache only saves the per-query job-submission latency)
         if getattr(self, "_globals_cache", None) is None:
-            g = (self.spark.read.parquet(os.path.join(self.path, "globals"))
+            g = (self._layer("globals")
                  .agg(F.sum("n_docs").alias("n"), F.sum("sum_dl").alias("s"))
                  .collect()[0])
             n = int(g["n"] or 0)
@@ -111,26 +93,21 @@ class InvertedIndex:
     def append(self, docs: DataFrame) -> None:
         """Fold a new document batch in: append its postings under their
         buckets and one globals delta row. Never touches history."""
+        self._fold(docs, "append")
+
+    def _fold(self, docs: DataFrame, mode: str) -> None:
         meta = self._meta()
         postings, glob = _postings_of(docs, meta["id_col"],
                                       meta["text_col"], meta["n_buckets"])
-        (postings.repartition("bucket").sortWithinPartitions("token")
-         .write.mode("append").partitionBy("bucket")
-         .parquet(os.path.join(self.path, "postings")))
-        glob.coalesce(1).write.mode("append").parquet(
-            os.path.join(self.path, "globals"))
+        self._write_layer(postings, "postings", mode)
+        self._write_layer(glob.coalesce(1), "globals", mode)
         self._globals_cache = None
 
     def for_each_batch(self):
         """Structured-Streaming sink: fold each document micro-batch into
-        the postings store (state = the parquet store, restart-safe,
-        shared with batch readers — the same contract as
-        DedupIndex/CorpusStats.for_each_batch). Retrieval served from the
-        index stays current under continuous ingest."""
-        def run(batch: DataFrame, batch_id: int) -> None:
-            if batch.head(1):
-                self.append(batch)
-        return run
+        the postings store. Retrieval served from the index stays current
+        under continuous ingest."""
+        return self._sink(lambda batch, _: self.append(batch))
 
     # --------------------------------------------------------------- search
 
@@ -139,7 +116,7 @@ class InvertedIndex:
         token predicate (row-group min/max inside token-sorted files)."""
         meta = self._meta()
         buckets = self._buckets_of(terms, meta["n_buckets"])
-        return (self._postings()
+        return (self._layer("postings")
                 .filter(F.col("bucket").isin(buckets))
                 .filter(F.col("token").isin(list(terms))))
 
@@ -189,33 +166,29 @@ class InvertedIndex:
 
     # ---------------------------------------------------------------- audit
 
+    def _tokened_ids(self, docs: DataFrame, meta: dict) -> DataFrame:
+        """Base ids the index should hold: a token-less doc legitimately
+        has no postings — it is counted in globals but can never be
+        "missing" from the postings store."""
+        return self._ids(docs.filter(
+            F.size(tokens_col(F.col(meta["text_col"]))) > 0), meta["id_col"])
+
     def verify(self, docs: DataFrame, sample: int | None = None,
                salt: str = "verify-v1") -> dict:
-        """Sampled consistency audit against the base corpus (the shared
-        DedupIndex/VectorIndex contract): stale = indexed doc gone from
-        the base; missing = base doc never indexed; mismatched = for a
-        deterministic salted-md5 sample of shared ids, the recomputed
-        (token, tf, dl) postings differ from the stored ones. Globals are
-        audited exactly (n_docs/sum_dl vs the base recount)."""
+        """Sampled consistency audit against the base corpus: stale =
+        indexed doc gone from the base; missing = base doc never indexed;
+        mismatched = for a deterministic salted-md5 sample of shared ids,
+        the recomputed (token, tf, dl) postings differ from the stored
+        ones. Globals are audited exactly (n_docs/sum_dl vs the base
+        recount)."""
         meta = self._meta()
         idc = meta["id_col"]
-        base_ids = docs.select(F.col(idc).alias("doc_id")).distinct()
-        store_ids = self._postings().select("doc_id").distinct()
-        stale = store_ids.join(base_ids, "doc_id", "left_anti").count()
-        # a token-less doc legitimately has no postings — it is counted
-        # in globals but can never be "missing" from the postings store
-        has_toks = docs.filter(
-            F.size(tokens_col(F.col(meta["text_col"]))) > 0
-        ).select(F.col(idc).alias("doc_id")).distinct()
-        missing = has_toks.join(store_ids, "doc_id", "left_anti").count()
-
-        shared = store_ids.join(base_ids, "doc_id")
-        if sample is not None:
-            rank = F.md5(F.concat(F.lit(salt), F.lit(":"),
-                                  F.col("doc_id").cast("string")))
-            shared = shared.orderBy(rank, "doc_id").limit(sample)
-        shared = shared.localCheckpoint(eager=True)
-        checked = shared.count()
+        base_ids = self._ids(docs, idc)
+        store_ids = self._ids(self._layer("postings"))
+        has_toks = self._tokened_ids(docs, meta)
+        stale, missing = self._stale_missing(store_ids, base_ids, has_toks)
+        shared, checked = self._pinned_sample(store_ids, base_ids, sample,
+                                              salt)
         mismatched = 0
         if checked:
             picked = docs.join(shared.withColumnRenamed("doc_id", idc), idc)
@@ -224,7 +197,7 @@ class InvertedIndex:
             keys = ["doc_id", "token"]
             r = rec.select(*keys, F.col("tf").alias("__rtf"),
                            F.col("dl").alias("__rdl"))
-            s = (self._postings().join(shared, "doc_id")
+            s = (self._layer("postings").join(shared, "doc_id")
                  .select(*keys, F.col("tf").alias("__stf"),
                          F.col("dl").alias("__sdl")))
             mismatched = (s.join(r, keys, "full_outer")
@@ -257,30 +230,19 @@ class InvertedIndex:
         re-scan: dl lives in the postings)."""
         meta = self._meta()
         idc = meta["id_col"]
-        base_ids = docs.select(F.col(idc).alias("doc_id")).distinct()
-        posts = self._postings()
-        stale_ids = (posts.select("doc_id").distinct()
-                     .join(base_ids, "doc_id", "left_anti")
-                     .localCheckpoint(eager=True))
-        n_stale = stale_ids.count()
+        n_stale = self._drop_ids(
+            self._ids(self._layer("postings"))
+            .join(self._ids(docs, idc), "doc_id", "left_anti"), "postings")
         if n_stale:
-            kept = (posts.join(stale_ids, "doc_id", "left_anti")
-                    .localCheckpoint(eager=True))
-            (kept.repartition("bucket").sortWithinPartitions("token")
-             .write.mode("overwrite").partitionBy("bucket")
-             .parquet(os.path.join(self.path, "postings")))
             # rebuild globals exactly from surviving per-doc lengths
-            g = (self._postings().groupBy("doc_id")
+            g = (self._layer("postings").groupBy("doc_id")
                  .agg(F.first("dl").alias("dl"))
                  .agg(F.count(F.lit(1)).alias("n_docs"),
                       F.coalesce(F.sum("dl"), F.lit(0)).alias("sum_dl"))
                  .localCheckpoint(eager=True))
-            g.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(self.path, "globals"))
-        has_toks = docs.filter(
-            F.size(tokens_col(F.col(meta["text_col"]))) > 0
-        ).select(F.col(idc).alias("doc_id")).distinct()
-        missing = (has_toks.join(self._postings().select("doc_id").distinct(),
+            self._write_layer(g.coalesce(1), "globals", "overwrite")
+        has_toks = self._tokened_ids(docs, meta)
+        missing = (has_toks.join(self._ids(self._layer("postings")),
                                  "doc_id", "left_anti")
                    .withColumnRenamed("doc_id", idc))
         n_missing = missing.count()

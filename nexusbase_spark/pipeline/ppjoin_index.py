@@ -22,9 +22,6 @@ them per batch:
   speedup WIDENS with history (1.9x -> 3.2x at 50k -> 200k docs); use
   the MinHash DedupIndex when flat probes matter more than lossless
   recall.
-
-Same store contract as DedupIndex/VectorIndex/InvertedIndex/CorpusStats:
-parquet layers, verify()/resync() audits, a foreachBatch streaming sink.
 """
 
 from __future__ import annotations
@@ -35,13 +32,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nexusbase_spark.pipeline.dedup import DEFAULT_MAX_BUCKET, _SINK_DEFAULT
 from nexusbase_spark.pipeline.text import tokens_col
-
-# sentinel: "caller didn't pass max_bucket" — the streaming sinks default
-# to dedup.DEFAULT_MAX_BUCKET (VERDICT r6 #5) while explicit None remains
-# the documented lossless opt-out
-_SINK_DEFAULT = object()
-
+from nexusbase_spark.store import ParquetStore
 
 _N_BUCKETS = 32
 
@@ -60,10 +53,8 @@ def _tok_arrays(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
             .filter(F.size("toks") > 0))
 
 
-class ExactDupIndex:
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
+class ExactDupIndex(ParquetStore):
+    _layout = {"prefix": ("bucket", "tok")}
 
     # ---------------------------------------------------------------- build
 
@@ -74,42 +65,30 @@ class ExactDupIndex:
         """Materialize ``dfreq/`` (the frozen token order), ``prefix/``
         (token -> doc postings at min_threshold) and ``docs/`` (token
         arrays for exact verification)."""
-        os.makedirs(path, exist_ok=True)
         num = int(round(min_threshold * 10_000))
         ix = cls(spark, path)
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump({"id_col": id_col, "text_col": text_col,
-                       "min_num": num, "den": 10_000}, f)
+        ix._write_meta({"id_col": id_col, "text_col": text_col,
+                        "min_num": num, "den": 10_000})
         t = _tok_arrays(docs, id_col, text_col).localCheckpoint(eager=True)
         tok = t.select("doc_id", F.explode("toks").alias("tok"))
         dfreq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
         dfreq = dfreq.localCheckpoint(eager=True)
-        (dfreq.sortWithinPartitions("tok").coalesce(4)
-         .write.mode("overwrite").parquet(os.path.join(path, "dfreq")))
-        (t.select("doc_id", "toks", F.size("toks").alias("sz"))
-         .write.mode("overwrite").parquet(os.path.join(path, "docs")))
-        pref = ix._prefix_of(t, num, dfreq=dfreq)
-        (pref.withColumn("bucket", _bucket_of(F.col("tok")))
-         .repartition("bucket").sortWithinPartitions("tok")
-         .write.mode("overwrite").partitionBy("bucket")
-         .parquet(os.path.join(path, "prefix")))
+        ix._write_layer(dfreq.sortWithinPartitions("tok").coalesce(4),
+                        "dfreq", "overwrite")
+        ix._write_docs(t, num, "overwrite", dfreq=dfreq)
         return ix
 
-    def _meta(self) -> dict:
-        with open(os.path.join(self.path, "meta.json")) as f:
-            return json.load(f)
-
-    def _dfreq(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "dfreq"))
-
-    def _docs(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "docs"))
-
-    def _prefix(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "prefix"))
+    def _write_docs(self, t: DataFrame, num: int, mode: str = "append",
+                    dfreq: DataFrame | None = None) -> None:
+        """Land token-array frame ``t``: docs rows + prefix postings."""
+        self._write_layer(t.select("doc_id", "toks",
+                                   F.size("toks").alias("sz")), "docs", mode)
+        self._write_layer(self._prefix_of(t, num, dfreq=dfreq)
+                          .withColumn("bucket", _bucket_of(F.col("tok"))),
+                          "prefix", mode)
 
     def doc_count(self) -> int:
-        return self._docs().count()
+        return self._layer("docs").count()
 
     def _prefix_of(self, t: DataFrame, num: int,
                    dfreq: DataFrame | None = None) -> DataFrame:
@@ -122,7 +101,8 @@ class ExactDupIndex:
         den = self._meta()["den"]
         tok = t.select("doc_id", F.size("toks").alias("__sz"),
                        F.explode("toks").alias("tok"))
-        ranked = (tok.join(dfreq if dfreq is not None else self._dfreq(),
+        ranked = (tok.join(dfreq if dfreq is not None
+                           else self._layer("dfreq"),
                            "tok", "left")
                   .withColumn("__df", F.coalesce("df", F.lit(0))))
         w = Window.partitionBy("doc_id").orderBy("__df", "tok")
@@ -151,6 +131,16 @@ class ExactDupIndex:
         whose only shared prefix tokens are the dropped ones are lost
         (default None = exhaustively lossless)."""
         meta = self._meta()
+        num = self._num_of(meta, threshold)
+        t = _tok_arrays(new_docs, meta["id_col"], meta["text_col"])
+        t = t.localCheckpoint(eager=True)
+        return self._probe_from(t, num, max_bucket=max_bucket)
+
+    @staticmethod
+    def _num_of(meta: dict, threshold: float | None) -> int:
+        """Threshold as the store's rational numerator (over ``den``);
+        None means the index min. Below the min the stored prefixes are
+        too short for the prefix-filter theorem, so that is refused."""
         den = meta["den"]
         num = (meta["min_num"] if threshold is None
                else int(round(threshold * den)))
@@ -159,9 +149,7 @@ class ExactDupIndex:
                 f"threshold {num / den} below index min "
                 f"{meta['min_num'] / den}: stored prefixes are too short "
                 f"to be lossless — rebuild with a lower min_threshold")
-        t = _tok_arrays(new_docs, meta["id_col"], meta["text_col"])
-        t = t.localCheckpoint(eager=True)
-        return self._probe_from(t, num, max_bucket=max_bucket)
+        return num
 
     def _probe_from(self, t: DataFrame, num: int,
                     max_bucket: int | None = None) -> DataFrame:
@@ -175,7 +163,7 @@ class ExactDupIndex:
         buckets = [r["b"] for r in new_pref
                    .select(_bucket_of(F.col("tok")).alias("b"))
                    .distinct().collect()]
-        store_pref = (self._prefix()
+        store_pref = (self._layer("prefix")
                       .filter(F.col("bucket").isin(buckets))
                       .withColumnRenamed("doc_id", "old_id"))
         if max_bucket is not None:
@@ -187,8 +175,8 @@ class ExactDupIndex:
                 .select("new_id", "old_id").distinct())
         ta = t.select(F.col("doc_id").alias("new_id"),
                       F.col("toks").alias("__ta"))
-        tb = self._docs().select(F.col("doc_id").alias("old_id"),
-                                 F.col("toks").alias("__tb"))
+        tb = self._layer("docs").select(F.col("doc_id").alias("old_id"),
+                                        F.col("toks").alias("__tb"))
         ver = (cand.join(ta, "new_id").join(tb, "old_id")
                .select("new_id", "old_id",
                        F.size(F.array_intersect("__ta", "__tb"))
@@ -216,20 +204,10 @@ class ExactDupIndex:
         meta = self._meta()
         t = _tok_arrays(new_docs, meta["id_col"], meta["text_col"])
         t = t.localCheckpoint(eager=True)
-        den = meta["den"]
-        num = (meta["min_num"] if threshold is None
-               else int(round(threshold * den)))
-        if num < meta["min_num"]:
-            raise ValueError("threshold below index min")
+        num = self._num_of(meta, threshold)
         matches = self._probe_from(t, num, max_bucket=max_bucket) \
             .localCheckpoint(eager=True)
-        (t.select("doc_id", "toks", F.size("toks").alias("sz"))
-         .write.mode("append").parquet(os.path.join(self.path, "docs")))
-        (self._prefix_of(t, meta["min_num"])
-         .withColumn("bucket", _bucket_of(F.col("tok")))
-         .repartition("bucket").sortWithinPartitions("tok")
-         .write.mode("append").partitionBy("bucket")
-         .parquet(os.path.join(self.path, "prefix")))
+        self._write_docs(t, meta["min_num"])
         return matches
 
     # ----------------------------------------------------------- audit/heal
@@ -241,23 +219,23 @@ class ExactDupIndex:
         meta = self._meta()
         base = _tok_arrays(docs, meta["id_col"], meta["text_col"])
         base = base.localCheckpoint(eager=True)
-        store = self._docs()
-        stale = (store.select("doc_id")
-                 .join(base.select("doc_id"), "doc_id", "left_anti")
-                 .count())
-        missing = (base.select("doc_id")
-                   .join(store.select("doc_id"), "doc_id", "left_anti")
-                   .count())
-        mismatched = (store.select("doc_id",
-                                   F.array_sort("toks").alias("__s"))
-                      .join(base.select("doc_id",
-                                        F.array_sort("toks").alias("__r")),
-                            "doc_id")
-                      .filter(F.col("__s") != F.col("__r")).count())
+        store = self._layer("docs")
+        stale, missing = self._stale_missing(self._ids(store),
+                                             self._ids(base))
+        mismatched = self._rewritten(store, base).count()
         return {"docs_store": store.count(), "docs_base": base.count(),
                 "stale": stale, "missing": missing,
                 "mismatched": mismatched,
                 "ok": stale == 0 and missing == 0 and mismatched == 0}
+
+    @staticmethod
+    def _rewritten(store: DataFrame, base: DataFrame) -> DataFrame:
+        """Ids whose stored token array differs from the base recompute."""
+        return (store.select("doc_id", F.array_sort("toks").alias("__s"))
+                .join(base.select("doc_id",
+                                  F.array_sort("toks").alias("__r")),
+                      "doc_id")
+                .filter(F.col("__s") != F.col("__r")).select("doc_id"))
 
     def resync(self, docs: DataFrame) -> dict:
         """Drop stale entries via narrow filtered rewrites (no
@@ -268,37 +246,16 @@ class ExactDupIndex:
         meta = self._meta()
         base = _tok_arrays(docs, meta["id_col"], meta["text_col"])
         base = base.localCheckpoint(eager=True)
-        store = self._docs()
-        bad = (store.select("doc_id", F.array_sort("toks").alias("__s"))
-               .join(base.select("doc_id",
-                                 F.array_sort("toks").alias("__r")),
-                     "doc_id")
-               .filter(F.col("__s") != F.col("__r")).select("doc_id"))
-        drop = (store.select("doc_id")
-                .join(base.select("doc_id"), "doc_id", "left_anti")
-                .union(bad).distinct().localCheckpoint(eager=True))
-        n_drop = drop.count()
-        if n_drop:
-            kept_docs = (store.join(drop, "doc_id", "left_anti")
-                         .localCheckpoint(eager=True))
-            kept_pref = (self._prefix().join(drop, "doc_id", "left_anti")
-                         .localCheckpoint(eager=True))
-            kept_docs.write.mode("overwrite").parquet(
-                os.path.join(self.path, "docs"))
-            (kept_pref.repartition("bucket").sortWithinPartitions("tok")
-             .write.mode("overwrite").partitionBy("bucket")
-             .parquet(os.path.join(self.path, "prefix")))
-        miss = (base.join(self._docs().select("doc_id"), "doc_id",
+        store = self._layer("docs")
+        n_drop = self._drop_ids(
+            self._ids(store).join(self._ids(base), "doc_id", "left_anti")
+            .union(self._rewritten(store, base)).distinct(),
+            "docs", "prefix")
+        miss = (base.join(self._layer("docs").select("doc_id"), "doc_id",
                           "left_anti").localCheckpoint(eager=True))
         n_miss = miss.count()
         if n_miss:
-            (miss.select("doc_id", "toks", F.size("toks").alias("sz"))
-             .write.mode("append").parquet(os.path.join(self.path, "docs")))
-            (self._prefix_of(miss, meta["min_num"])
-             .withColumn("bucket", _bucket_of(F.col("tok")))
-             .repartition("bucket").sortWithinPartitions("tok")
-             .write.mode("append").partitionBy("bucket")
-             .parquet(os.path.join(self.path, "prefix")))
+            self._write_docs(miss, meta["min_num"])
         return {"dropped": n_drop, "indexed_missing": n_miss}
 
     # ------------------------------------------------------------ streaming
@@ -320,12 +277,9 @@ class ExactDupIndex:
         run report a stream operator reads, since foreachBatch warnings
         otherwise die on an executor-thread stderr."""
         import warnings as _warnings
-        from nexusbase_spark.pipeline.dedup import DEFAULT_MAX_BUCKET
         mb = DEFAULT_MAX_BUCKET if max_bucket is _SINK_DEFAULT else max_bucket
 
-        def run(batch: DataFrame, batch_id: int) -> None:
-            if not batch.head(1):
-                return
+        def fold(batch: DataFrame, batch_id: int) -> None:
             with _warnings.catch_warnings(record=True) as caught:
                 _warnings.simplefilter("always", RuntimeWarning)
                 m = self.append(batch, threshold, max_bucket=mb)
@@ -345,4 +299,4 @@ class ExactDupIndex:
             for w in caught:
                 _warnings.warn_explicit(w.message, w.category,
                                         w.filename, w.lineno)
-        return run
+        return self._sink(fold)

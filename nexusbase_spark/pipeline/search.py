@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nexusbase_spark.pipeline.text import tokens_col
+from nexusbase_spark.store import ParquetStore
 
 
 def _tf(toks, term: str):
@@ -225,7 +226,7 @@ def mmr_select(shortlist: DataFrame, k: int = 5, *,
     return spark.createDataFrame(picked, out_schema)
 
 
-class CorpusStats:
+class CorpusStats(ParquetStore):
     """Incrementally-maintained BM25 corpus statistics — the streaming
     composition of ``bm25_scores``'s one-row aggregate (VERDICT r3 next
     #8): under continuous ingest the N/avgdl/df statistics are kept
@@ -248,37 +249,45 @@ class CorpusStats:
     delta + compact + pushdown-lookup pattern as the engine's rollups.
     """
 
-    def __init__(self, spark, path: str):
-        self.spark = spark
-        self.path = path
+    _layout = {"df": (None, "token")}
 
     # ---------------------------------------------------------------- build
 
     @classmethod
     def build(cls, spark, path: str, docs: DataFrame, *,
               text_col: str = "text", id_col: str = "doc_id") -> "CorpusStats":
-        import json
-        import os
-        os.makedirs(path, exist_ok=True)
         st = cls(spark, path)
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump({"text_col": text_col, "id_col": id_col}, f)
+        st._write_meta({"text_col": text_col, "id_col": id_col})
         # seed with empty globals so a lookup before any update is defined
-        spark.createDataFrame([(0, 0)], "n_docs long, sum_dl long") \
-            .coalesce(1).write.mode("overwrite") \
-            .parquet(os.path.join(path, "globals"))
-        spark.createDataFrame([], "token string, df long") \
-            .coalesce(1).write.mode("overwrite") \
-            .parquet(os.path.join(path, "df"))
+        st._write_layer(
+            spark.createDataFrame([(0, 0)], "n_docs long, sum_dl long")
+            .coalesce(1), "globals", "overwrite")
+        st._write_layer(
+            spark.createDataFrame([], "token string, df long").coalesce(1),
+            "df", "overwrite")
         if docs is not None and docs.head(1):
             st.update(docs)
         return st
 
-    def _meta(self) -> dict:
-        import json
-        import os
-        with open(os.path.join(self.path, "meta.json")) as f:
-            return json.load(f)
+    def _deltas(self, docs: DataFrame,
+                sign: int = 1) -> tuple[DataFrame, DataFrame]:
+        """One tokenize of ``docs`` -> its (n_docs, sum_dl) row and its
+        per-token distinct-doc (token, df) rows, scaled by ``sign``."""
+        toks = tokens_col(F.col(self._meta()["text_col"]))
+        d = docs.select(F.array_distinct(toks).alias("__t"),
+                        F.size(toks).alias("__dl"))
+        d = d.localCheckpoint(eager=True)  # one tokenize, two consumers
+        glob = d.agg((sign * F.count(F.lit(1))).alias("n_docs"),
+                     (sign * F.coalesce(F.sum("__dl"), F.lit(0)))
+                     .alias("sum_dl"))
+        df_t = (d.select(F.explode("__t").alias("token"))
+                .groupBy("token").agg((sign * F.count(F.lit(1))).alias("df")))
+        return glob, df_t
+
+    def _append_deltas(self, docs: DataFrame, sign: int) -> None:
+        glob, df_t = self._deltas(docs, sign)
+        self._write_layer(glob.coalesce(1), "globals")
+        self._write_layer(df_t, "df")
 
     # --------------------------------------------------------------- update
 
@@ -286,21 +295,7 @@ class CorpusStats:
         """Fold one document batch into the store: one narrow pass for
         (n_docs, sum_dl), one distinct-token explode for df deltas.
         Append-only — never reads or rewrites existing stats."""
-        import os
-        meta = self._meta()
-        toks = tokens_col(F.col(meta["text_col"]))
-        d = batch.select(F.col(meta["id_col"]).alias("__id"),
-                         F.array_distinct(toks).alias("__t"),
-                         F.size(toks).alias("__dl"))
-        d = d.localCheckpoint(eager=True)  # one tokenize, two consumers
-        (d.agg(F.count(F.lit(1)).alias("n_docs"),
-               F.coalesce(F.sum("__dl"), F.lit(0)).alias("sum_dl"))
-         .coalesce(1).write.mode("append")
-         .parquet(os.path.join(self.path, "globals")))
-        (d.select(F.explode("__t").alias("token"))
-         .groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-         .sortWithinPartitions("token")
-         .write.mode("append").parquet(os.path.join(self.path, "df")))
+        self._append_deltas(batch, 1)
 
     def retire(self, removed: DataFrame) -> None:
         """Retention-event fold: subtract a batch of aged-out documents
@@ -311,59 +306,37 @@ class CorpusStats:
         mergeable-delta contract as ``update``. Retention always knows
         which docs it drops, so the removed frame is free at the call
         site; when it is NOT available, fall back to ``resync``."""
-        import os
-        meta = self._meta()
-        toks = tokens_col(F.col(meta["text_col"]))
-        d = removed.select(F.array_distinct(toks).alias("__t"),
-                           F.size(toks).alias("__dl"))
-        d = d.localCheckpoint(eager=True)  # one tokenize, two consumers
-        (d.agg((-F.count(F.lit(1))).alias("n_docs"),
-               (-F.coalesce(F.sum("__dl"), F.lit(0))).alias("sum_dl"))
-         .coalesce(1).write.mode("append")
-         .parquet(os.path.join(self.path, "globals")))
-        (d.select(F.explode("__t").alias("token"))
-         .groupBy("token").agg((-F.count(F.lit(1))).alias("df"))
-         .sortWithinPartitions("token")
-         .write.mode("append").parquet(os.path.join(self.path, "df")))
+        self._append_deltas(removed, -1)
 
     # ----------------------------------------------------------- audit/heal
 
     def verify(self, docs: DataFrame) -> dict:
-        """Exact audit against the base corpus (the shared DedupIndex /
-        VectorIndex / InvertedIndex contract, VERDICT r4 next #5):
-        recompute (n_docs, sum_dl) and the per-token df table from the
-        base and compare with the summed store. ``df_mismatched`` counts
-        tokens whose summed df differs (full-outer, so both phantom and
-        lost tokens count). One tokenize pass + one anti-joined rollup —
-        O(corpus vocabulary), the audit's inherent cost."""
-        import os
-        meta = self._meta()
-        toks = tokens_col(F.col(meta["text_col"]))
-        base = docs.select(F.array_distinct(toks).alias("__t"),
-                           F.size(toks).alias("__dl"))
-        base = base.localCheckpoint(eager=True)
-        want = base.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("__dl"), F.lit(0)).alias("s")).collect()[0]
-        g = (self.spark.read.parquet(os.path.join(self.path, "globals"))
+        """Exact audit against the base corpus: recompute (n_docs,
+        sum_dl) and the per-token df table from the base and compare
+        with the summed store. ``df_mismatched`` counts tokens whose
+        summed df differs (full-outer, so both phantom and lost tokens
+        count). One tokenize pass + one anti-joined rollup — O(corpus
+        vocabulary), the audit's inherent cost."""
+        want_g, want_df = self._deltas(docs)
+        want = want_g.collect()[0]
+        want_df = want_df.withColumnRenamed("df", "__wdf")
+        g = (self._layer("globals")
              .agg(F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n"),
                   F.coalesce(F.sum("sum_dl"), F.lit(0)).alias("s"))
              .collect()[0])
-        want_df = (base.select(F.explode("__t").alias("token"))
-                   .groupBy("token").agg(F.count(F.lit(1)).alias("__wdf")))
-        have_df = (self.spark.read.parquet(os.path.join(self.path, "df"))
+        have_df = (self._layer("df")
                    .groupBy("token").agg(F.sum("df").alias("__hdf"))
                    .filter(F.col("__hdf") != 0))  # fully-retired tokens
         df_mismatched = (have_df.join(want_df, "token", "full_outer")
                          .filter(F.coalesce(F.col("__hdf"), F.lit(0))
                                  != F.coalesce(F.col("__wdf"), F.lit(0)))
                          .count())
-        n_ok = int(g["n"]) == int(want["n"])
-        s_ok = int(g["s"]) == int(want["s"])
-        return {"n_docs_store": int(g["n"]), "n_docs_base": int(want["n"]),
-                "sum_dl_store": int(g["s"]), "sum_dl_base": int(want["s"]),
+        n_want, s_want = int(want["n_docs"]), int(want["sum_dl"])
+        return {"n_docs_store": int(g["n"]), "n_docs_base": n_want,
+                "sum_dl_store": int(g["s"]), "sum_dl_base": s_want,
                 "df_mismatched": df_mismatched,
-                "ok": n_ok and s_ok and df_mismatched == 0}
+                "ok": (int(g["n"]) == n_want and int(g["s"]) == s_want
+                       and df_mismatched == 0)}
 
     def resync(self, docs: DataFrame) -> dict:
         """Heal after an untracked corpus rewrite: rebuild both layers
@@ -371,22 +344,10 @@ class CorpusStats:
         postings stores there is no per-doc narrow rewrite — O(corpus),
         the heal-path cost; TRACKED retention should use ``retire``,
         which is O(batch)). Returns the rebuilt globals."""
-        import os
-        meta = self._meta()
-        toks = tokens_col(F.col(meta["text_col"]))
-        d = docs.select(F.array_distinct(toks).alias("__t"),
-                        F.size(toks).alias("__dl"))
-        d = d.localCheckpoint(eager=True)
-        g = (d.agg(F.count(F.lit(1)).alias("n_docs"),
-                   F.coalesce(F.sum("__dl"), F.lit(0)).alias("sum_dl"))
-             .localCheckpoint(eager=True))
-        df_t = (d.select(F.explode("__t").alias("token"))
-                .groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-                .sortWithinPartitions("token")
-                .localCheckpoint(eager=True))
-        g.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self.path, "globals"))
-        df_t.write.mode("overwrite").parquet(os.path.join(self.path, "df"))
+        g, df_t = self._deltas(docs)
+        g = g.localCheckpoint(eager=True)
+        self._write_layer(g.coalesce(1), "globals", "overwrite")
+        self._write_layer(df_t, "df", "overwrite")
         row = g.collect()[0]
         return {"n_docs": int(row["n_docs"]), "sum_dl": int(row["sum_dl"])}
 
@@ -395,19 +356,16 @@ class CorpusStats:
         one token-aggregated, token-sorted layer (row-group pruning for
         term lookups). Tokens whose df nets to zero (fully retired via
         negative deltas) are dropped from the compacted layer."""
-        import os
-        g = (self.spark.read.parquet(os.path.join(self.path, "globals"))
+        g = (self._layer("globals")
              .agg(F.sum("n_docs").alias("n_docs"),
                   F.sum("sum_dl").alias("sum_dl"))
              .localCheckpoint(eager=True))
-        df_t = (self.spark.read.parquet(os.path.join(self.path, "df"))
+        df_t = (self._layer("df")
                 .groupBy("token").agg(F.sum("df").alias("df"))
                 .filter(F.col("df") != 0)
-                .sortWithinPartitions("token")
                 .localCheckpoint(eager=True))
-        g.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self.path, "globals"))
-        df_t.write.mode("overwrite").parquet(os.path.join(self.path, "df"))
+        self._write_layer(g.coalesce(1), "globals", "overwrite")
+        self._write_layer(df_t, "df", "overwrite")
 
     # --------------------------------------------------------------- lookup
 
@@ -415,13 +373,12 @@ class CorpusStats:
         """(n_docs, avgdl, df per term). Globals sum a handful of delta
         rows; term dfs come from a pushed-down IN-filter over the df
         table — k terms, a few row groups, never the vocabulary."""
-        import os
-        g = (self.spark.read.parquet(os.path.join(self.path, "globals"))
+        g = (self._layer("globals")
              .agg(F.sum("n_docs").alias("n"), F.sum("sum_dl").alias("s"))
              .collect()[0])
         n_docs = int(g["n"] or 0)
         avgdl = (float(g["s"]) / n_docs) if n_docs else 0.0
-        rows = (self.spark.read.parquet(os.path.join(self.path, "df"))
+        rows = (self._layer("df")
                 .filter(F.col("token").isin(list(query_terms)))
                 .groupBy("token").agg(F.sum("df").alias("df"))
                 .collect())
@@ -432,13 +389,8 @@ class CorpusStats:
 
     def for_each_batch(self):
         """Structured-Streaming sink: fold each micro-batch of documents
-        into the stats store (state = the parquet store, restart-safe,
-        shared with batch readers — same pattern as
-        ``DedupIndex.for_each_batch``)."""
-        def run(batch: DataFrame, batch_id: int) -> None:
-            if batch.head(1):
-                self.update(batch)
-        return run
+        into the stats store."""
+        return self._sink(lambda batch, _: self.update(batch))
 
 
 def bm25_topk_served(df: DataFrame, stats: CorpusStats,

@@ -25,9 +25,7 @@ grow or the assignment distribution drifts.
 
 from __future__ import annotations
 
-import json
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,12 +33,21 @@ from pyspark.sql import functions as F
 from nexusbase_spark.pipeline.similarity import (
     centroids, cosine_topk, kmeans_assign,
 )
+from nexusbase_spark.store import ParquetStore
 
 
-class VectorIndex:
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
+def _residual(vec, cents: dict[int, list[float]]):
+    """``vec - centroid(cluster)`` elementwise, from a driver-side table of
+    the (6dp-rounded) cluster centroids."""
+    centmap = F.create_map(*[
+        part for c in sorted(cents)
+        for part in (F.lit(c), F.array(*[F.lit(float(v)) for v in cents[c]]))])
+    return F.zip_with(vec, centmap[F.col("cluster")],
+                      lambda x, y: x.cast("double") - y)
+
+
+class VectorIndex(ParquetStore):
+    _layout = {"vectors": ("cluster", None)}
 
     # ---------------------------------------------------------------- build
 
@@ -90,14 +97,8 @@ class VectorIndex:
                         float(r["v"])
                 res_cents = {c: [d[p] for p in sorted(d)]
                              for c, d in by_c.items()}
-                centmap = F.create_map(*[
-                    part for c in sorted(res_cents)
-                    for part in (F.lit(c),
-                                 F.array(*[F.lit(v) for v in res_cents[c]]))])
                 assigned = assigned.withColumn(
-                    "__res", F.zip_with(F.col(vec_col),
-                                        centmap[F.col("cluster")],
-                                        lambda x, y: x.cast("double") - y))
+                    "__res", _residual(F.col(vec_col), res_cents))
                 enc_src_col = "__res"
             assigned, bk = pq_encode(assigned, m_sub=pq_m, k_codes=pq_codes,
                                      iters=pq_iters, dim=dim, id_col=id_col,
@@ -105,37 +106,32 @@ class VectorIndex:
             assigned = assigned.drop("__res")
             books = {f"{s}:{c}": v for (s, c), v in bk.items()}
             cols += [f"code_{s}" for s in range(pq_m)]
-        (assigned.select(*cols)
-         .write.mode("overwrite").partitionBy("cluster")
-         .parquet(os.path.join(path, "vectors")))
-        cents = centroids(assigned, "cluster", vec_col)
-        cents.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-        n = assigned.count()
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump({"nlist": nlist, "iters": iters, "n_vectors": n,
-                       "id_col": id_col, "vec_col": vec_col,
-                       "pq_m": pq_m, "pq_codes": pq_codes,
-                       "pq_iters": pq_iters, "pq_books": books,
-                       "pq_residual": bool(pq_residual),
-                       "residual_centroids":
-                           ({str(c): v for c, v in res_cents.items()}
-                            if res_cents else None)}, f)
-        return cls(spark, path)
+        ix = cls(spark, path)
+        ix._write_layer(assigned.select(*cols), "vectors", "overwrite")
+        ix._write_layer(centroids(assigned, "cluster", vec_col), "centroids",
+                        "overwrite")
+        ix._write_meta({"nlist": nlist, "iters": iters,
+                        "n_vectors": assigned.count(),
+                        "id_col": id_col, "vec_col": vec_col,
+                        "pq_m": pq_m, "pq_codes": pq_codes,
+                        "pq_iters": pq_iters, "pq_books": books,
+                        "pq_residual": bool(pq_residual),
+                        "residual_centroids":
+                            ({str(c): v for c, v in res_cents.items()}
+                             if res_cents else None)})
+        return ix
 
     # --------------------------------------------------------------- search
 
     def _centroids_local(self) -> list[tuple[int, list[float]]]:
-        rows = self.spark.read.parquet(
-            os.path.join(self.path, "centroids")).collect()
+        rows = self._layer("centroids").collect()
         return sorted((int(r["cluster"]), [float(x) for x in r["centroid"]])
                       for r in rows)
 
-    def search(self, probe: list[float], k: int = 10, nprobe: int = 2,
-               exclude_id: int | None = None) -> DataFrame:
-        """ANN top-k: rank centroids driver-side (nlist rows — no Spark
-        job), scan ONLY the probed clusters' files, exact cosine rescore.
-        Ties in centroid ranking break by cluster id (deterministic)."""
-        meta = self._meta()
+    def _probed(self, probe: list[float], nprobe: int) -> list[int]:
+        """The ``nprobe`` clusters whose centroids are most cosine-similar
+        to ``probe``, ranked driver-side (nlist rows — no Spark job).
+        Ties break by cluster id (deterministic)."""
         pn = math.sqrt(sum(x * x for x in probe))
         scored = []
         for cid, c in self._centroids_local():
@@ -143,9 +139,16 @@ class VectorIndex:
             cs = (sum(a * b for a, b in zip(probe, c)) / (cn * pn)
                   if cn > 0 and pn > 0 else -2.0)
             scored.append((-cs, cid))
-        probed = [cid for _, cid in sorted(scored)[:nprobe]]
-        vecs = self.spark.read.parquet(os.path.join(self.path, "vectors"))
-        pruned = vecs.filter(F.col("cluster").isin(probed))
+        return [cid for _, cid in sorted(scored)[:nprobe]]
+
+    def search(self, probe: list[float], k: int = 10, nprobe: int = 2,
+               exclude_id: int | None = None) -> DataFrame:
+        """ANN top-k: rank centroids driver-side (nlist rows — no Spark
+        job), scan ONLY the probed clusters' files, exact cosine rescore.
+        Ties in centroid ranking break by cluster id (deterministic)."""
+        meta = self._meta()
+        pruned = self._layer("vectors").filter(
+            F.col("cluster").isin(self._probed(probe, nprobe)))
         return cosine_topk(pruned, probe, k, meta["id_col"],
                            meta["vec_col"], exclude_id)
 
@@ -158,8 +161,6 @@ class VectorIndex:
         touched until re-rank, and parquet's column pruning makes that
         real I/O savings), shortlist ``rerank`` candidates, exact cosine
         re-rank. Requires an index built with ``pq_m > 0``."""
-        import math as _m
-
         meta = self._meta()
         if not meta.get("pq_m"):
             raise ValueError("index was built without PQ codes")
@@ -167,18 +168,8 @@ class VectorIndex:
                  for key, vec in meta["pq_books"].items()}
         m_sub = meta["pq_m"]
         sub_len = len(probe) // m_sub
-
-        pn = _m.sqrt(sum(x * x for x in probe))
-        scored = []
-        for cid, c in self._centroids_local():
-            cn = _m.sqrt(sum(x * x for x in c))
-            cs = (sum(a * b for a, b in zip(probe, c)) / (cn * pn)
-                  if cn > 0 and pn > 0 else -2.0)
-            scored.append((-cs, cid))
-        probed = [cid for _, cid in sorted(scored)[:nprobe]]
-
-        vecs = self.spark.read.parquet(os.path.join(self.path, "vectors"))
-        pruned = vecs.filter(F.col("cluster").isin(probed))
+        probed = self._probed(probe, nprobe)
+        pruned = self._layer("vectors").filter(F.col("cluster").isin(probed))
         # residual coding: the probe's distance table differs per probed
         # cluster (q - centroid_c is the query in that cluster's residual
         # space), so table keys become cluster * k_codes + code — still
@@ -187,7 +178,7 @@ class VectorIndex:
                       (meta.get("residual_centroids") or {}).items()}
                      if meta.get("pq_residual") else None)
         k_codes = meta["pq_codes"]
-        q6 = lambda x: _m.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
+        q6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
         adist = F.lit(0.0)
         for s in range(m_sub):
             qs = probe[s * sub_len:(s + 1) * sub_len]
@@ -232,24 +223,13 @@ class VectorIndex:
         the EXECUTED pruned scan (DataFrame.inputFiles() reports the
         relation's full listing, pre-pushdown, and would show no
         pruning)."""
-        vecs = self.spark.read.parquet(os.path.join(self.path, "vectors"))
+        vecs = self._layer("vectors")
         total = len(vecs.inputFiles())
-        pn = math.sqrt(sum(x * x for x in probe))
-        scored = []
-        for cid, c in self._centroids_local():
-            cn = math.sqrt(sum(x * x for x in c))
-            cs = (sum(a * b for a, b in zip(probe, c)) / (cn * pn)
-                  if cn > 0 and pn > 0 else -2.0)
-            scored.append((-cs, cid))
-        probed = [cid for _, cid in sorted(scored)[:nprobe]]
-        touched = (vecs.filter(F.col("cluster").isin(probed))
+        touched = (vecs.filter(F.col("cluster").isin(
+                       self._probed(probe, nprobe)))
                    .select(F.input_file_name().alias("f"))
                    .distinct().count())
         return touched, total
-
-    def _meta(self) -> dict:
-        with open(os.path.join(self.path, "meta.json")) as f:
-            return json.load(f)
 
     # ---------------------------------------------------------------- audit
 
@@ -272,31 +252,23 @@ class VectorIndex:
         "mismatched", "ok"}."""
         meta = self._meta()
         idc, vc = meta["id_col"], meta["vec_col"]
-        vecs = self.spark.read.parquet(os.path.join(self.path, "vectors"))
-        base_ids = df.select(F.col(idc).alias("__id")).distinct()
-        store_ids = vecs.select(F.col(idc).alias("__id")).distinct()
-        stale = store_ids.join(base_ids, "__id", "left_anti").count()
-        missing = base_ids.join(store_ids, "__id", "left_anti").count()
-
-        shared = store_ids.join(base_ids, "__id")
-        if sample is not None:
-            rank = F.md5(F.concat(F.lit(salt), F.lit(":"),
-                                  F.col("__id").cast("string")))
-            shared = shared.orderBy(rank, "__id").limit(sample)
-        shared = shared.localCheckpoint(eager=True)
-        checked = shared.count()
+        vecs = self._layer("vectors").withColumnRenamed(idc, "doc_id")
+        base_ids = self._ids(df, idc)
+        store_ids = self._ids(vecs)
+        stale, missing = self._stale_missing(store_ids, base_ids)
+        shared, checked = self._pinned_sample(store_ids, base_ids, sample,
+                                              salt)
         mismatched = 0
         if checked:
-            st = (vecs.join(shared, vecs[idc] == shared["__id"])
-                  .select(F.col(idc).alias("__id"),
-                          F.col(vc).alias("__sv"),
+            st = (vecs.join(shared, "doc_id")
+                  .select("doc_id", F.col(vc).alias("__sv"),
                           F.col("cluster").alias("__sc")))
             bs = (self.assign_to(df.join(
-                      shared.withColumnRenamed("__id", idc), idc), vc)
-                  .select(F.col(idc).alias("__id"),
+                      shared.withColumnRenamed("doc_id", idc), idc), vc)
+                  .select(F.col(idc).alias("doc_id"),
                           F.col(vc).alias("__bv"),
                           F.col("cluster").alias("__bc")))
-            mismatched = (st.join(bs, "__id", "full_outer")
+            mismatched = (st.join(bs, "doc_id", "full_outer")
                           .filter(F.col("__sv").isNull()
                                   | F.col("__bv").isNull()
                                   | (F.col("__sv") != F.col("__bv"))
@@ -317,37 +289,20 @@ class VectorIndex:
         {"dropped_stale", "assigned_missing"}."""
         meta = self._meta()
         idc, vc = meta["id_col"], meta["vec_col"]
-        vdir = os.path.join(self.path, "vectors")
-        vecs = self.spark.read.parquet(vdir)
-        base_ids = df.select(F.col(idc).alias("__id")).distinct()
-        stale_ids = (vecs.select(F.col(idc).alias("__id")).distinct()
-                     .join(base_ids, "__id", "left_anti")
-                     .localCheckpoint(eager=True))
-        n_stale = stale_ids.count()
-        if n_stale:
-            kept = (vecs.join(stale_ids, vecs[idc] == stale_ids["__id"],
-                              "left_anti")
-                    .localCheckpoint(eager=True))
-            (kept.write.mode("overwrite").partitionBy("cluster")
-             .parquet(vdir))
-        missing = (base_ids.join(
-            self.spark.read.parquet(vdir).select(
-                F.col(idc).alias("__id")).distinct(),
-            "__id", "left_anti").withColumnRenamed("__id", idc))
+        base_ids = self._ids(df, idc)
+        n_stale = self._drop_ids(
+            self._ids(self._layer("vectors"), idc)
+            .join(base_ids, "doc_id", "left_anti")
+            .withColumnRenamed("doc_id", idc), "vectors")
+        missing = (base_ids.join(self._ids(self._layer("vectors"), idc),
+                                 "doc_id", "left_anti")
+                   .withColumnRenamed("doc_id", idc))
         n_missing = missing.count()
         if n_missing:
-            fresh = self.assign_to(df.join(missing, idc), vc)
-            cols = [idc, vc, "cluster"]
-            if meta.get("pq_m"):
-                # without re-encoding, appended rows would carry NULL
-                # code_* columns and silently vanish from the ADC scan
-                fresh = self._encode_codes(fresh, meta)
-                cols += [f"code_{s}" for s in range(meta["pq_m"])]
-            (fresh.select(*cols)
-             .write.mode("append").partitionBy("cluster").parquet(vdir))
-        meta["n_vectors"] = self.spark.read.parquet(vdir).count()
-        with open(os.path.join(self.path, "meta.json"), "w") as f:
-            json.dump(meta, f)
+            self._write_vectors(self.assign_to(df.join(missing, idc), vc),
+                                meta)
+        meta["n_vectors"] = self._layer("vectors").count()
+        self._write_meta(meta)
         return {"dropped_stale": n_stale, "assigned_missing": n_missing}
 
     # ----------------------------------------------------------- incremental
@@ -367,13 +322,8 @@ class VectorIndex:
         sub_len = len(next(iter(books.values())))
         src = F.col(meta["vec_col"])
         if meta.get("pq_residual"):
-            res = {int(c): v for c, v in meta["residual_centroids"].items()}
-            centmap = F.create_map(*[
-                part for c in sorted(res)
-                for part in (F.lit(c),
-                             F.array(*[F.lit(float(v)) for v in res[c]]))])
-            src = F.zip_with(src, centmap[F.col("cluster")],
-                             lambda x, y: x.cast("double") - y)
+            src = _residual(src, {int(c): v for c, v in
+                                  meta["residual_centroids"].items()})
         df = df.withColumn("__enc", src)
         for s in range(m_sub):
             entries = []
@@ -400,32 +350,31 @@ class VectorIndex:
         No retraining — retrain (build) when verify() mismatches grow or
         the assignment distribution drifts. Returns rows appended."""
         meta = self._meta()
-        idc, vc = meta["id_col"], meta["vec_col"]
-        assigned = self.assign_to(df, vc).localCheckpoint(eager=True)
+        assigned = (self.assign_to(df, meta["vec_col"])
+                    .localCheckpoint(eager=True))
         n = assigned.count()
         if not n:
             return 0
-        cols = [idc, vc, "cluster"]
+        self._write_vectors(assigned, meta)
+        meta["n_vectors"] = int(meta.get("n_vectors") or 0) + n
+        self._write_meta(meta)
+        return n
+
+    def _write_vectors(self, assigned: DataFrame, meta: dict) -> None:
+        """Append cluster-assigned rows, PQ-encoded when the index
+        carries codes: without re-encoding, appended rows would carry
+        NULL code_* columns and silently vanish from the ADC scan."""
+        cols = [meta["id_col"], meta["vec_col"], "cluster"]
         if meta.get("pq_m"):
             assigned = self._encode_codes(assigned, meta)
             cols += [f"code_{s}" for s in range(meta["pq_m"])]
-        (assigned.select(*cols)
-         .write.mode("append").partitionBy("cluster")
-         .parquet(os.path.join(self.path, "vectors")))
-        meta["n_vectors"] = int(meta.get("n_vectors") or 0) + n
-        with open(os.path.join(self.path, "meta.json"), "w") as f:
-            json.dump(meta, f)
-        return n
+        self._write_layer(assigned.select(*cols), "vectors")
 
     def for_each_batch(self):
         """Structured-Streaming sink: fold each embedding micro-batch
-        into the index (state = the parquet store, restart-safe, shared
-        with batch readers — the DedupIndex/CorpusStats pattern). Serving
-        sees new vectors as soon as their batch lands; no rebuild."""
-        def run(batch: DataFrame, batch_id: int) -> None:
-            if batch.head(1):
-                self.append(batch)
-        return run
+        into the index. Serving sees new vectors as soon as their batch
+        lands; no rebuild."""
+        return self._sink(lambda batch, _: self.append(batch))
 
     def assign_to(self, df: DataFrame, vec_col: str = "embedding") -> DataFrame:
         """Assign NEW vectors to the existing centroids (the incremental

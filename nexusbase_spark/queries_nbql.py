@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nexusbase_spark.datamodel import load_table, series_key_expr, source_ts_ns
+from nexusbase_spark.engine import apply_tag_matchers
 from nexusbase_spark.nbql.parser import parse
 from nexusbase_spark.queries import DAY_NS, T1, T2, register
 
@@ -35,14 +36,7 @@ class StaticEngine:
             df = df.filter(F.col("metric") == metric)
         for k, v in (tags or {}).items():
             df = df.filter(F.col("tags").getItem(k) == v)
-        for k, op, v in (matchers or []):
-            tv = F.col("tags").getItem(k)
-            if op == "!=":
-                df = df.filter(tv.isNotNull() & (tv != v))
-            elif op == "=~":
-                df = df.filter(tv.isNotNull() & tv.rlike(v))
-            elif op == "!~":
-                df = df.filter(tv.isNotNull() & ~tv.rlike(v))
+        df = apply_tag_matchers(df, matchers)
         if start is not None:
             df = df.filter(F.col("ts") >= start)
         if end is not None:

@@ -2636,9 +2636,10 @@ def q_doc_dedup_bucket_clusters(spark, sf_dir):
     """Near-dup clustering from LSH bucket CO-MEMBERSHIP (star edges,
     no pairwise candidate set): the scalable dedup endgame when dup
     cliques are large — a 20-strong clique costs 19 star edges here vs
-    190 verified pairs on the pairwise path (measured quadratic in
-    tools/pipeline_scale_probe.py). No Jaccard verification: banding
-    false positives merge clusters, the standard industrial trade."""
+    190 verified pairs on the pairwise path (measured quadratic: SCALE.md,
+    "Pipeline scale probe — 100k docs / 200k vectors"). No Jaccard
+    verification: banding false positives merge clusters, the standard
+    industrial trade."""
     from nexusbase_spark.pipeline.dedup import bucket_clusters
 
     return bucket_clusters(_docs_aug(spark, sf_dir), num_hashes=8, bands=4)

@@ -35,9 +35,10 @@ _DEFAULTS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # local[N] runs the whole engine in ONE JVM that defaults to a 1g heap
     # — a 32-thread shuffle of array columns OOMs at ~1M docs while the
-    # host sits on >100 GiB free (measured: tools/dedup_index_probe.py at
-    # 800k docs). 16g is the local-harness analog of a real cluster's
-    # per-executor memory; on a cluster this key is set per deployment.
+    # host sits on >100 GiB free (measured at 800k docs: SCALE.md,
+    # "Round-3 DedupIndex probe"). 16g is the local-harness analog of a
+    # real cluster's per-executor memory; on a cluster this key is set per
+    # deployment.
     # Only effective when THIS builder launches the JVM (ignored by
     # getOrCreate when a session already exists, e.g. the grading driver's
     # vanilla session — all oracle queries stay 1g-safe regardless).

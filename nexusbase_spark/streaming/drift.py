@@ -9,9 +9,7 @@ with q the REFERENCE bin distribution (frozen when the model/corpus was
 built) and p the CURRENT one; < 0.1 stable, 0.1-0.25 drifting, > 0.25
 alarm. This module freezes the reference histogram once, then folds each
 ingest micro-batch into a running current histogram and appends a
-(batch ordinal, rows seen, psi) row to a report table — the same
-store-is-the-state pattern as CorpusStats/DedupIndex: restart-safe,
-shared with batch readers, no rebuild.
+(batch ordinal, rows seen, psi) row to a report table.
 
 Scale shape: the reference fit is one agg (lo/hi) + one binned rollup;
 each batch update appends O(bins) rows; the PSI read sums two
@@ -22,11 +20,10 @@ of all ingested rows produces the identical PSI (parity-tested).
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from nexusbase_spark.store import ParquetStore
 
 
 def _bin_expr(col, lo: float, width: float, bins: int):
@@ -62,22 +59,17 @@ def psi_of_counts(ref: list[int], cur: list[int]) -> float:
     return psi
 
 
-class DriftMonitor:
+class DriftMonitor(ParquetStore):
     """Frozen-reference PSI monitor with a parquet store.
 
     Layout: ``meta.json`` (value_col, bins, lo, width, reference
-    counts); ``cur/`` append-only per-batch (bin, cnt) deltas — readers
-    SUM them, the CorpusStats merge contract.
+    counts); ``cur/`` append-only per-batch (bin, cnt) deltas that
+    readers SUM.
     """
-
-    def __init__(self, spark, path: str):
-        self.spark = spark
-        self.path = path
 
     @classmethod
     def build(cls, spark, path: str, reference: DataFrame, *,
               value_col: str = "value", bins: int = 10) -> "DriftMonitor":
-        os.makedirs(path, exist_ok=True)
         st = cls(spark, path)
         g = (reference.filter(F.col(value_col).isNotNull())
              .agg(F.min(value_col).alias("lo"),
@@ -91,29 +83,22 @@ class DriftMonitor:
                   histogram(reference, value_col, lo, width,
                             bins).collect()}
         ref = [counts.get(i, 0) for i in range(bins)]
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump({"value_col": value_col, "bins": bins, "lo": lo,
-                       "width": width, "ref": ref}, f)
-        (spark.createDataFrame([], "bin long, cnt long")
-         .coalesce(1).write.mode("overwrite")
-         .parquet(os.path.join(path, "cur")))
+        st._write_meta({"value_col": value_col, "bins": bins, "lo": lo,
+                        "width": width, "ref": ref})
+        st._write_layer(spark.createDataFrame([], "bin long, cnt long")
+                        .coalesce(1), "cur", "overwrite")
         return st
-
-    def _meta(self) -> dict:
-        with open(os.path.join(self.path, "meta.json")) as f:
-            return json.load(f)
 
     def update(self, batch: DataFrame) -> None:
         """Fold one micro-batch into the current histogram — appends
         O(bins) rows, never reads or rewrites history."""
         m = self._meta()
-        (histogram(batch, m["value_col"], m["lo"], m["width"], m["bins"])
-         .coalesce(1).write.mode("append")
-         .parquet(os.path.join(self.path, "cur")))
+        self._write_layer(histogram(batch, m["value_col"], m["lo"],
+                                    m["width"], m["bins"]).coalesce(1), "cur")
 
     def current_counts(self) -> list[int]:
         m = self._meta()
-        rows = (self.spark.read.parquet(os.path.join(self.path, "cur"))
+        rows = (self._layer("cur")
                 .groupBy("bin").agg(F.sum("cnt").alias("cnt")).collect())
         got = {int(r["bin"]): int(r["cnt"]) for r in rows}
         return [got.get(i, 0) for i in range(m["bins"])]
@@ -126,9 +111,7 @@ class DriftMonitor:
         """Structured-Streaming sink: fold the batch, then append one
         (batch_id, n_seen, psi) report row — the drift trendline an
         alert rule reads (same ingest-gate shape as expectations_sink)."""
-        def run(batch: DataFrame, batch_id: int) -> None:
-            if not batch.head(1):
-                return
+        def fold(batch: DataFrame, batch_id: int) -> None:
             self.update(batch)
             cur = self.current_counts()
             row = [(int(batch_id), int(sum(cur)),
@@ -136,4 +119,4 @@ class DriftMonitor:
             (self.spark.createDataFrame(
                 row, "batch_id long, n_seen long, psi double")
              .coalesce(1).write.mode("append").parquet(report_path))
-        return run
+        return self._sink(fold)

@@ -110,3 +110,28 @@ def test_snapshot_restore_carries_catalog(eng, spark, tmp_path):
     e3 = NexusEngine(spark, str(tmp_path / "wh3"))
     e3.restore(snap)
     assert e3._catalog.resolve("mem", {"host": "a"}) == ["mem|dc=eu,host=a"]
+
+
+def test_failed_catalog_write_never_breaks_resolve(tmp_path, monkeypatch):
+    """A catalog append that dies mid-write (crash, full disk) must leave
+    no half-written file where a concurrent resolve() lists the catalog:
+    the keys appended before still resolve, and exists() is unchanged."""
+    import pyarrow.parquet as pq
+
+    cat = SeriesCatalog(str(tmp_path / "catalog"))
+    cat.append_points([("cpu", {"dc": "eu"}, "cpu|dc=eu,host=a"),
+                       ("cpu", {"dc": "eu"}, "cpu|dc=eu,host=b")])
+
+    def torn_write(table, where, **kwargs):
+        with open(where, "wb") as f:
+            f.write(b"PAR1\x00\x01partial")
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pq, "write_table", torn_write)
+    with pytest.raises(OSError, match="disk full"):
+        cat.append_points([("cpu", {"dc": "eu"}, "cpu|dc=eu,host=c")])
+    monkeypatch.undo()
+
+    assert cat.exists()
+    assert cat.resolve("cpu", {"dc": "eu"}) == ["cpu|dc=eu,host=a",
+                                                "cpu|dc=eu,host=b"]
