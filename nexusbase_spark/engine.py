@@ -10,12 +10,18 @@ Storage layout (the Spark translation of the reference's LSM, SURVEY.md §4):
     <warehouse>/tomb_point/   point tombstones   (series_key, ts, seq)
     <warehouse>/tomb_series/  series tombstones  (series_key, seq)
     <warehouse>/tomb_range/   range tombstones   (series_key, min_ts, max_ts, seq)
+    <warehouse>/_format       format stamp, written once when the warehouse
+                              is created; opening a warehouse that holds
+                              data without this exact stamp raises
 
 Long-format points row (FIXTURES.md; Spark maps are monotyped so each field
 value carries exactly one typed column per core/fields.go:15-21):
 
     (metric, tags, series_key, ts, seq, field, vtype,
      f_double, f_long, f_string, f_bool)
+
+Every point also carries one marker row (field='', vtype='marker', all
+f_* NULL), so count(*) is a plain conditional count, not a distinct.
 
 Every ingest batch appends files with a fresh monotonic seq range — the
 append-only + MVCC-read design of the reference's WAL/memtable/SSTable
@@ -67,6 +73,11 @@ POINTS_SCHEMA = StructType([
 _NAN = float("nan")
 
 DAY_NS = 86_400 * 1_000_000_000
+
+# The one warehouse format: per-point marker rows, points partitioned by
+# (metric, day). Stamped into <warehouse>/_format; byte-identical to the
+# stamp earlier releases wrote, so their warehouses and snapshots open.
+FORMAT_STAMP = "point_markers=1\nlayout=metric_day\n"
 
 
 def _typed(value) -> tuple[str, float | None, int | None, str | None, bool | None]:
@@ -148,6 +159,20 @@ class _ScanLock:
             with self._cond:
                 self._writer = False
                 self._cond.notify_all()
+
+
+def _check_stamp(path: str) -> None:
+    """Raise ValueError unless the file at ``path`` holds FORMAT_STAMP."""
+    try:
+        with open(path) as f:
+            ok = f.read() == FORMAT_STAMP
+    except (OSError, UnicodeDecodeError):
+        ok = False
+    if not ok:
+        raise ValueError(
+            f"{path} is missing or is not the format stamp {FORMAT_STAMP!r}: "
+            "only the per-point-marker, (metric, day)-partitioned "
+            "warehouse format is readable")
 
 
 def _serialized(fn):
@@ -271,29 +296,25 @@ class NexusEngine:
             "range": os.path.join(warehouse, "tomb_range"),
         }
         self._seq = self._load_max_seq() + 1
+        # The format stamp is checked before anything else touches the
+        # warehouse: one without durable rows is stamped, one holding rows
+        # under another stamp (or none) is refused, never half-served.
+        self._format_path = os.path.join(warehouse, "_format")
+        if self._seq == 0 and not os.path.isfile(self._format_path):
+            with open(self._format_path, "w") as f:
+                f.write(FORMAT_STAMP)
+        _check_stamp(self._format_path)
         if self._seq > 0:
             # open-time rescan of existing warehouse state — the WAL
             # replay analog (the parquet appends ARE the durable log)
             self._emit("post_wal_recovery", {"max_seq": self._seq - 1})
         # Tag-index analog (operators/tagindex.py). Invariant: while the
         # engine is live the catalog is COMPLETE (every ingested series
-        # present) or absent; a legacy warehouse without one is indexed here.
+        # present) or absent; a warehouse without one is indexed here.
         self._catalog = SeriesCatalog(os.path.join(warehouse, "catalog"))
         has_data = os.path.isdir(self._points_path) or os.path.isdir(self._l0_path)
         if has_data and not self._catalog.exists():
             self._catalog.rebuild(self._raw())
-        # Format v2: (a) every point carries a marker row (field='',
-        # vtype='marker') so count(*) is a plain count, not a distinct;
-        # (b) points are partitioned by (metric, day) so time-range scans
-        # prune whole day directories — the SSTable key-range skip at the
-        # directory level. Fresh warehouses start at v2; pre-v2 warehouses
-        # stay v1 (mixed markers would undercount) until compact() upgrades.
-        self._format_path = os.path.join(warehouse, "_format")
-        if not has_data and not os.path.isfile(self._format_path):
-            self._write_format()
-        fmt = self._read_format()
-        self.point_markers = fmt.get("point_markers") == "1"
-        self.day_partitioned = fmt.get("layout") == "metric_day"
         self._emit("post_start_engine", {"warehouse": warehouse,
                                          "next_seq": self._seq})
 
@@ -350,21 +371,6 @@ class NexusEngine:
 
     # ------------------------------------------------------------- ingest
 
-    def _write_format(self) -> None:
-        with open(self._format_path, "w") as f:
-            f.write("point_markers=1\nlayout=metric_day\n")
-
-    def _read_format(self) -> dict[str, str]:
-        if not os.path.isfile(self._format_path):
-            return {}
-        out = {}
-        with open(self._format_path) as f:
-            for line in f:
-                if "=" in line:
-                    k, v = line.strip().split("=", 1)
-                    out[k] = v
-        return out
-
     def _l0_batches(self) -> int:
         try:
             with open(self._l0_count_path) as f:
@@ -402,21 +408,15 @@ class NexusEngine:
 
     def _write_points(self, df: DataFrame, path: str | None = None,
                       mode: str = "append",
-                      day_partitioned: bool | None = None,
                       coalesce: int | None = None) -> None:
-        """Append/overwrite into the points layout. v2 layout adds a
-        ``day`` partition column (the point's UTC day start in ns,
-        arithmetic only — no float division of int64 timestamps)."""
-        day = self.day_partitioned if day_partitioned is None else day_partitioned
+        """Append/overwrite into the points layout, partitioned by metric
+        and ``day`` (the point's UTC day start in ns, arithmetic only — no
+        float division of int64 timestamps)."""
         path = path or self._points_path
         if coalesce is not None:
             df = df.coalesce(coalesce)
-        if day:
-            df = df.withColumn(
-                "day", F.col("ts") - F.pmod(F.col("ts"), F.lit(DAY_NS)))
-            df.write.mode(mode).partitionBy("metric", "day").parquet(path)
-        else:
-            df.write.mode(mode).partitionBy("metric").parquet(path)
+        df = df.withColumn("day", F.col("ts") - F.pmod(F.col("ts"), F.lit(DAY_NS)))
+        df.write.mode(mode).partitionBy("metric", "day").parquet(path)
         # a parquet append is the SSTable-create analog (hooks.go:48)
         self._emit("post_sstable_create", {"path": path, "mode": mode})
 
@@ -465,9 +465,8 @@ class NexusEngine:
                 vtype, fd, fl, fs, fb = _typed(fval)
                 rows.append((metric, dict(tags or {}), ts, last_seq,
                              fname, vtype, fd, fl, fs, fb))
-            if self.point_markers:
-                rows.append((metric, dict(tags or {}), ts, last_seq,
-                             "", "marker", None, None, None, None))
+            rows.append((metric, dict(tags or {}), ts, last_seq,
+                         "", "marker", None, None, None, None))
         df = self.spark.createDataFrame(rows, POINTS_SCHEMA)
         df = df.withColumn("series_key", series_key_expr(F.col("metric"), F.col("tags")))
         # driver-side batches are small by definition: one file per
@@ -521,8 +520,7 @@ class NexusEngine:
         if df is None:  # dir born but nothing committed (crashed append)
             self._set_l0_batches(0)
             return
-        if "day" in df.columns:  # re-derived by _write_points
-            df = df.drop("day")
+        df = df.drop("day")  # re-derived by _write_points
         # exclusive vs in-flight scans: between the append and the rmtree
         # a reader would either double-see the L0 rows (raw count(*)
         # overcounts; MVCC paths dedup them but raw scans don't) or plan
@@ -562,19 +560,18 @@ class NexusEngine:
             .withColumn("seq", F.lit(base)
                         + F.pmod(F.xxhash64("series_key", "ts"), F.lit(1 << 32)))
         )
-        if self.point_markers:
-            markers = (
-                out.groupBy("metric", "series_key", "ts", "seq")
-                .agg(F.first("tags").alias("tags"))
-                .withColumns({
-                    "field": F.lit(""), "vtype": F.lit("marker"),
-                    "f_double": F.lit(None).cast("double"),
-                    "f_long": F.lit(None).cast("long"),
-                    "f_string": F.lit(None).cast("string"),
-                    "f_bool": F.lit(None).cast("boolean"),
-                })
-            )
-            out = out.unionByName(markers.select(*out.columns))
+        markers = (
+            out.groupBy("metric", "series_key", "ts", "seq")
+            .agg(F.first("tags").alias("tags"))
+            .withColumns({
+                "field": F.lit(""), "vtype": F.lit("marker"),
+                "f_double": F.lit(None).cast("double"),
+                "f_long": F.lit(None).cast("long"),
+                "f_string": F.lit(None).cast("string"),
+                "f_bool": F.lit(None).cast("boolean"),
+            })
+        )
+        out = out.unionByName(markers.select(*out.columns))
         self._write_points(out)
         if self.hooks is not None and (
                 self.hooks.has_listeners("on_series_create")
@@ -643,11 +640,8 @@ class NexusEngine:
         def sink(batch: DataFrame, batch_id: int) -> None:
             self.ingest_frame(batch)
             if refresh_rollups:
-                base = os.path.join(self.warehouse, "rollups")
-                if os.path.isdir(base):
-                    for name in sorted(os.listdir(base)):
-                        if os.path.isfile(os.path.join(base, name, "meta.json")):
-                            self.refresh_rollup(name)
+                for name in self.rollups():
+                    self.refresh_rollup(name)
 
         on_batch = bus.for_each_batch(sink) if bus is not None else sink
         return (stream.writeStream.queryName("nexusbase_ingest")
@@ -800,16 +794,15 @@ class NexusEngine:
                 for k, v in tags.items():
                     df = df.filter(F.col("tags").getItem(k) == v)
         df = apply_tag_matchers(df, matchers)
+        # the day partition filters prune whole day directories — the
+        # SSTable key-range skip at the directory level
         if start is not None:
-            df = df.filter(F.col("ts") >= start)
-            if self.day_partitioned:  # directory-level day pruning
-                df = df.filter(F.col("day") >= start - start % DAY_NS)
+            df = df.filter((F.col("ts") >= start)
+                           & (F.col("day") >= start - start % DAY_NS))
         if end is not None:
-            df = df.filter(F.col("ts") <= end)
-            if self.day_partitioned:
-                df = df.filter(F.col("day") <= end - end % DAY_NS)
-        if "day" in df.columns:
-            df = df.drop("day")  # partition bookkeeping, not point data
+            df = df.filter((F.col("ts") <= end)
+                           & (F.col("day") <= end - end % DAY_NS))
+        df = df.drop("day")  # partition bookkeeping, not point data
         # whole-point LWW: the latest seq at (series_key, ts) supersedes ALL
         # rows (= the whole fields map) of older seqs
         w = Window.partitionBy("series_key", "ts")
@@ -930,12 +923,18 @@ class NexusEngine:
         if day_filter is not None:
             ws = F.col("ts") - F.pmod(F.col("ts"), F.lit(interval_ns))
             df = df.filter((ws - F.pmod(ws, F.lit(DAY_NS))).isin(*day_filter))
-        return _plan_downsample(df, q, None, None,
-                                point_markers=self.point_markers)
+        return _plan_downsample(df, q, None, None)
 
     def _rollup_meta(self, name: str) -> dict:
         with open(os.path.join(self._rollup_dir(name), "meta.json")) as f:
             return json.load(f)
+
+    def rollups(self) -> dict[str, dict]:
+        """name -> meta of every registered rollup, in name order."""
+        base = os.path.join(self.warehouse, "rollups")
+        names = sorted(os.listdir(base)) if os.path.isdir(base) else []
+        return {n: self._rollup_meta(n) for n in names
+                if os.path.isfile(os.path.join(base, n, "meta.json"))}
 
     def rollup(self, name: str) -> DataFrame:
         """The materialized rollup as a DataFrame (wday is partition
@@ -947,15 +946,7 @@ class NexusEngine:
             fn.endswith(".parquet")
             for _dp, _dn, files in os.walk(data) for fn in files)
         if not has_parts:
-            from pyspark.sql.types import StructType
-            meta = self._rollup_meta(name)
-            if "schema" in meta:
-                schema = StructType.fromJson(json.loads(meta["schema"]))
-            else:  # legacy meta: derive lazily from the compute plan
-                specs = [AggregationSpec(f, fld, al)
-                         for f, fld, al in meta["specs"]]
-                schema = self._rollup_compute(
-                    meta["metric"], meta["interval_ns"], specs).schema
+            schema = StructType.fromJson(json.loads(self._rollup_meta(name)["schema"]))
             return self.spark.createDataFrame([], schema)
         return self.spark.read.parquet(data).drop("wday")
 
@@ -1168,27 +1159,10 @@ class NexusEngine:
         resolved = self.points()
         if retention_cutoff_ns is not None:
             resolved = resolved.filter(F.col("ts") >= retention_cutoff_ns)
-        # (re)build the per-point marker rows — also the v1 -> v2 upgrade
-        # path for warehouses created before markers existed
-        fields_rows = resolved.filter(F.col("vtype") != "marker")
-        markers = (
-            fields_rows.groupBy("metric", "series_key", "ts", "seq")
-            .agg(F.first("tags").alias("tags"))
-            .withColumns({
-                "field": F.lit(""), "vtype": F.lit("marker"),
-                "f_double": F.lit(None).cast("double"),
-                "f_long": F.lit(None).cast("long"),
-                "f_string": F.lit(None).cast("string"),
-                "f_bool": F.lit(None).cast("boolean"),
-            })
-        )
-        resolved = fields_rows.unionByName(markers.select(*fields_rows.columns))
         resolved = resolved.cache()
         resolved.count()
         bytes_read = self._dir_bytes(self._points_path) + self._dir_bytes(self._l0_path)
         tmp = self._points_path + ".compact"
-        # compaction always rewrites into the v2 layout (markers + day
-        # partitioning) — the upgrade path for pre-v2 warehouses
         if cluster:
             day = F.col("ts") - F.pmod(F.col("ts"), F.lit(DAY_NS))
             clustered = (resolved.withColumn("day", day)
@@ -1211,8 +1185,7 @@ class NexusEngine:
             self._emit("post_sstable_create", {"path": tmp,
                                                "mode": "overwrite"})
         else:
-            self._write_points(resolved, path=tmp, mode="overwrite",
-                               day_partitioned=True)
+            self._write_points(resolved, path=tmp, mode="overwrite")
         self._emit("pre_sstable_delete", {"path": self._points_path})
         # the rewrite into tmp above ran lock-free (reads are additive);
         # only the swap excludes readers — the refcounted-SSTable handoff
@@ -1227,8 +1200,6 @@ class NexusEngine:
             # WITH the old tombstones would re-delete resurrected rows
             for path in self._tomb.values():
                 shutil.rmtree(path, ignore_errors=True)
-        self._write_format()
-        self.point_markers = self.day_partitioned = True
         # rebuild the catalog from the surviving view: prunes tombstoned
         # series and merges the tiny per-put index files
         self._catalog.rebuild(self._raw())
@@ -1269,9 +1240,8 @@ class NexusEngine:
                     rel = os.path.relpath(full, self.warehouse)
                     st = os.stat(full)
                     out[rel] = (st.st_size, st.st_mtime_ns)
-        if os.path.isfile(self._format_path):
-            st = os.stat(self._format_path)
-            out["_format"] = (st.st_size, st.st_mtime_ns)
+        st = os.stat(self._format_path)
+        out["_format"] = (st.st_size, st.st_mtime_ns)
         return out
 
     @_serialized
@@ -1286,8 +1256,8 @@ class NexusEngine:
         compactions (parquet parts are immutable; compact() renames the
         whole dir so rewritten files never collide with inherited paths).
         The manifest records the full file set either way; restore
-        resolves inherited files through the parent chain."""
-        import json
+        resolves inherited files through the parent chain — the format
+        stamp included, as it is written once and never changes."""
         self._emit("pre_create_snapshot",
                    {"incremental_from": incremental_from})
         dest = os.path.join(self.warehouse, "snapshots", uuid.uuid4().hex[:12])
@@ -1301,10 +1271,8 @@ class NexusEngine:
         manifest = {"version": 1,
                     "parent": os.path.abspath(incremental_from) if incremental_from else None,
                     "files": {}}
-        for rel, (size, mtime) in files.items():
-            # _format is the one file mutated IN PLACE (version upgrades);
-            # everything else is immutable parquet parts — always store it
-            stored = rel not in parent_files or rel == "_format"
+        for rel, (size, _mtime) in files.items():
+            stored = rel not in parent_files
             manifest["files"][rel] = {"size": size, "stored": stored}
             if stored:
                 src = os.path.join(self.warehouse, rel)
@@ -1319,19 +1287,21 @@ class NexusEngine:
         self._emit("post_create_snapshot", {"path": dest})
         return dest
 
-    def _restore_manifest(self, path: str) -> None:
-        """Materialize a manifest snapshot: each file comes from the
-        nearest snapshot in the parent chain that stores it (shared with
-        the restore-util CLI — nexusbase_spark/snapshots.py)."""
-        from nexusbase_spark.snapshots import restore_files
-        restore_files(path, self.warehouse, overwrite=True)
-
     @_serialized
     def restore(self, path: str, overwrite: bool = False) -> None:
+        """Replace the warehouse with a manifest snapshot, full or
+        incremental: each file comes from the nearest snapshot in the
+        parent chain that stores it (nexusbase_spark/snapshots.py, shared
+        with the restore-util CLI). The whole chain is resolved first —
+        every data file present, the format stamp supplied — so a bad
+        snapshot raises ValueError with the warehouse untouched."""
+        from nexusbase_spark.snapshots import copy_files, resolve_files
         have = any(os.path.isdir(os.path.join(self.warehouse, n))
                    for n in self._SNAPSHOT_DIRS)
         if have and not overwrite:
             raise ValueError("restore target not empty; use WITH OVERWRITE")
+        sources = resolve_files(path)
+        _check_stamp(sources.get("_format") or os.path.join(path, "_format"))
         # restore replaces EVERY warehouse dir — exclusive vs any
         # in-flight scan for the whole swap (the reference blocks reads
         # during RestoreFromSnapshot the same way)
@@ -1339,31 +1309,14 @@ class NexusEngine:
             for name in self._SNAPSHOT_DIRS:
                 shutil.rmtree(os.path.join(self.warehouse, name),
                               ignore_errors=True)
-            # the snapshot's format version wins: a v1 snapshot restored
-            # over a v2 warehouse must drop the marker flag (and vice
-            # versa) — clear _format and let the snapshot re-supply it
-            if os.path.isfile(self._format_path):
-                os.unlink(self._format_path)
-            if os.path.isfile(os.path.join(path, "manifest.json")):
-                self._restore_manifest(path)  # includes _format if captured
-            else:  # legacy manifest-less snapshot: plain directory copy
-                for name in self._SNAPSHOT_DIRS:
-                    src = os.path.join(path, name)
-                    if os.path.isdir(src):
-                        shutil.copytree(src, os.path.join(self.warehouse, name))
-                src_fmt = os.path.join(path, "_format")
-                if os.path.isfile(src_fmt):
-                    shutil.copy(src_fmt, self._format_path)
+            copy_files(sources, self.warehouse)
         self._seq = self._load_max_seq() + 1
         self._set_l0_batches(0)  # pending-batch count died with the old L0
-        # snapshots from before the catalog existed restore without one;
-        # re-index so the completeness invariant holds
+        # a snapshot whose catalog is missing or partial restores without
+        # one; re-index so the completeness invariant holds
         if ((os.path.isdir(self._points_path) or os.path.isdir(self._l0_path))
                 and not self._catalog.exists()):
             self._catalog.rebuild(self._raw())
-        fmt = self._read_format()
-        self.point_markers = fmt.get("point_markers") == "1"
-        self.day_partitioned = fmt.get("layout") == "metric_day"
         self._known_series = self._known_metrics = None  # reload from catalog
         self._write_gen += 1
 
@@ -1485,9 +1438,6 @@ class NexusEngine:
                    and q.end is not None and (q.end + 1) % iv == 0)
         if not aligned:
             return None
-        base = os.path.join(self.warehouse, "rollups")
-        if not os.path.isdir(base):
-            return None
         want = [(a.func, a.field, a.alias) for a in q.aggregations]
         # functions whose coarser windows re-aggregate EXACTLY from finer
         # ones (count/sum add; min/max nest; NaN propagation/blindness is
@@ -1496,12 +1446,7 @@ class NexusEngine:
         # inputs a finer aggregate doesn't carry.
         _REAGG = {"count": F.sum, "sum": F.sum, "min": F.min, "max": F.max}
         exact_hit, coarse_hit = None, None
-        for name in sorted(os.listdir(base)):
-            mp = os.path.join(base, name, "meta.json")
-            if not os.path.isfile(mp):
-                continue
-            with open(mp) as f:
-                meta = json.load(f)
+        for name, meta in self.rollups().items():
             if (meta["metric"] != q.metric
                     or [tuple(s) for s in meta["specs"]] != want
                     or meta["last_seq"] != self._seq - 1):

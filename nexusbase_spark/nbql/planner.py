@@ -8,7 +8,7 @@ groupBy, and cursor/limit become a keyset predicate + TakeOrderedAndProject.
 
 Aggregation over the long format uses CONDITIONAL aggregates — one pass,
 no pivot, no join: every spec compiles to agg expressions gated on its
-field name. count(*) counts POINTS (distinct series_key+ts+seq), not field
+field name. count(*) counts POINTS — the per-point marker rows — not field
 rows (iterator/multi_field_aggregator.go:181-184).
 """
 
@@ -33,24 +33,17 @@ def _order_key() -> Column:
 
 
 def _long_agg_exprs(specs: list[AggregationSpec], *, skip_non_finite: bool,
-                    approx_percentile: bool = False,
-                    point_markers: bool = False) -> list[Column]:
+                    approx_percentile: bool = False) -> list[Column]:
     exprs: list[Column] = []
     for spec in specs:
         func, q = parse_agg_func(spec.func)
         name = spec.alias or f"{spec.func}_{spec.field}"
         if func == "count" and spec.field == "*":
-            # count of points, not field rows. With per-point marker rows
-            # (engine format v2) this is a plain conditional count —
-            # map-side combinable, single-pass even mixed with other aggs.
-            # Without markers it needs a distinct, which Spark plans via
-            # Expand (doubles the agg input) when mixed with plain aggs.
-            if point_markers:
-                exprs.append(F.count(
-                    F.when(F.col("vtype") == "marker", F.lit(1))).alias(name))
-            else:
-                exprs.append(
-                    F.countDistinct("series_key", "ts", "seq").alias(name))
+            # count of points, not field rows: a plain conditional count
+            # over the per-point marker rows — map-side combinable,
+            # single-pass even mixed with other aggs
+            exprs.append(F.count(
+                F.when(F.col("vtype") == "marker", F.lit(1))).alias(name))
             continue
         here = F.col("field") == spec.field
         present = here & (F.col("vtype") != "null")
@@ -137,21 +130,18 @@ def plan_query(engine, q: QueryStatement) -> DataFrame:
                                       matchers=q.tag_matchers)
 
     if q.aggregations:
-        markers = getattr(engine, "point_markers", False)
         if q.downsample_interval:
-            return _plan_downsample(df, q, start, end, point_markers=markers,
-                                    series_df=series_df)
-        return _plan_final(df, q, point_markers=markers)
+            return _plan_downsample(df, q, start, end, series_df=series_df)
+        return _plan_final(df, q)
 
     return _plan_raw(df, q)
 
 
 def _empty_agg(engine, q: QueryStatement) -> DataFrame:
     df = engine.points().filter(F.lit(False))
-    markers = getattr(engine, "point_markers", False)
     if q.downsample_interval:
-        return _plan_downsample(df, q, 0, 1, point_markers=markers)
-    return _plan_final(df, q, point_markers=markers)
+        return _plan_downsample(df, q, 0, 1)
+    return _plan_final(df, q)
 
 
 def _dedup_specs(specs):
@@ -174,19 +164,16 @@ def _dedup_specs(specs):
     return out
 
 
-def _plan_final(df: DataFrame, q: QueryStatement, *,
-                point_markers: bool = False) -> DataFrame:
+def _plan_final(df: DataFrame, q: QueryStatement) -> DataFrame:
     """One row across ALL matching series, keyed by the bare metric
     (engine2/adapter.go:1349-1364); final agg skips NaN/Inf inputs."""
     exprs = _long_agg_exprs(_dedup_specs(q.aggregations),
-                            skip_non_finite=True,
-                            point_markers=point_markers)
+                            skip_non_finite=True)
     return df.groupBy(F.lit(q.metric).alias("metric")).agg(*exprs)
 
 
 def _plan_downsample(df: DataFrame, q: QueryStatement,
                      start: int | None, end: int | None, *,
-                     point_markers: bool = False,
                      series_df: DataFrame | None = None) -> DataFrame:
     """Per-series epoch-aligned tumbling windows; the downsampler does NOT
     skip NaN/Inf inputs (multi_field_downsampling_iterator.go:44-90).
@@ -196,8 +183,7 @@ def _plan_downsample(df: DataFrame, q: QueryStatement,
     iv = q.downsample_interval
     slide = q.downsample_slide or iv
     aggs = _dedup_specs(q.aggregations)
-    exprs = _long_agg_exprs(aggs, skip_non_finite=False,
-                            point_markers=point_markers)
+    exprs = _long_agg_exprs(aggs, skip_non_finite=False)
     if slide != iv:
         ts = F.col("ts")
         first = ts - iv - F.pmod(ts - iv, F.lit(slide)) + slide
@@ -293,7 +279,7 @@ def _plan_raw(df: DataFrame, q: QueryStatement) -> DataFrame:
     (the QueryResult shape — engine2/adapter.go:1490-1621)."""
     from nexusbase_spark.operators.order import decode_cursor, keyset_after, order_points
 
-    # per-point marker rows (format v2) are count(*) bookkeeping, not fields
+    # per-point marker rows are count(*) bookkeeping, not fields
     pts = (
         df.filter(F.col("vtype") != "marker")
         .groupBy("metric", "series_key", "ts", "seq")
@@ -316,20 +302,10 @@ def plan_show(engine, s: ShowStatement) -> DataFrame:
     )
     if s.what == "rollups":
         # rollup inventory comes from the engine's meta files, not points
-        import json as _json
-        import os as _os
-        base = _os.path.join(getattr(engine, "warehouse", ""), "rollups")
-        rows = []
-        if base and _os.path.isdir(base):
-            for name in sorted(_os.listdir(base)):
-                mp = _os.path.join(base, name, "meta.json")
-                if _os.path.isfile(mp):
-                    with open(mp) as f:
-                        m = _json.load(f)
-                    rows.append((name, m["metric"], m["interval_ns"],
-                                 ", ".join(a or f"{fn}_{fl}"
-                                           for fn, fl, a in m["specs"]),
-                                 m["last_seq"]))
+        rows = [(name, m["metric"], m["interval_ns"],
+                 ", ".join(a or f"{fn}_{fl}" for fn, fl, a in m["specs"]),
+                 m["last_seq"])
+                for name, m in engine.rollups().items()]
         return engine.spark.createDataFrame(
             rows, "name string, metric string, interval_ns long, "
                   "aggregates string, last_seq long")

@@ -189,7 +189,7 @@ def winnow_from_hashes(hashes: Column, w: int = 4) -> Column:
     return F.array_distinct(mins)
 
 
-def fingerprint_mink(text: Column | None, n: int = 3, k: int = 4,
+def fingerprint_mink(text: Column | None = None, n: int = 3, k: int = 4,
                      toks: Column | None = None) -> Column:
     """Document fingerprint: bottom-k sketch of word-n-gram hashes,
     concatenated to one hex string. A winnowing-style content signature:
@@ -198,6 +198,8 @@ def fingerprint_mink(text: Column | None, n: int = 3, k: int = 4,
     ``toks``: pre-projected token array — inlined, the shingle slices
     re-derive the whole-text split per reference (6 copies in one
     CodegenFallback projection; see word_shingles)."""
+    if text is None and toks is None:
+        raise ValueError("pass text or toks")
     grams = (word_shingles(text, n) if toks is None
              else shingles_of_tokens(toks, n))
     hashes = F.transform(grams, F.md5)

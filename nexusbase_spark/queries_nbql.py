@@ -17,10 +17,8 @@ from nexusbase_spark.queries import DAY_NS, T1, T2, register
 
 class StaticEngine:
     """Read-only engine facade over a fixed long-format points frame —
-    what NexusEngine.points() returns, minus the warehouse. The frame is
-    format v2 (per-point marker rows), so count(*) plans as a plain count."""
-
-    point_markers = True
+    what NexusEngine.points() returns, minus the warehouse. The frame
+    carries per-point marker rows, as the warehouse does."""
 
     def __init__(self, spark: SparkSession, points: DataFrame):
         self.spark = spark

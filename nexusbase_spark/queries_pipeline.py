@@ -461,8 +461,7 @@ def q_doc_fingerprint(spark, sf_dir):
     toked = docs.select("doc_id", tokens_col(F.col("text")).alias("__toks"))
     return toked.select(
         "doc_id",
-        fingerprint_mink(None, 3, 4,
-                         toks=F.col("__toks")).alias("fingerprint"))
+        fingerprint_mink(n=3, k=4, toks=F.col("__toks")).alias("fingerprint"))
 
 
 @register("doc_winnow_fingerprint", """

@@ -26,20 +26,22 @@ from nexusbase_spark.auth import (
     ROLE_READER, ROLE_WRITER, AuthError, NonAuthenticator,
 )
 from nexusbase_spark.engine import NexusEngine
+from nexusbase_spark.nbql import ast as A
 from nexusbase_spark.nbql.parser import NBQLError
 from nexusbase_spark.operators.order import encode_cursor
 
+_READ_ONLY = (A.QueryStatement, A.ShowStatement, A.ExplainStatement,
+              A.QueryRollupStatement, A.VerifyRollupStatement)
 
-def required_role(query: str) -> str:
-    """Reader for QUERY/SHOW, writer for everything that mutates
-    (PUSH/PUSHS/REMOVE/FLUSH/SNAPSHOT/RESTORE) — the per-operation
-    authorization matrix of server/grpc_server.go:316-318."""
-    from nexusbase_spark.nbql import ast as A
-    from nexusbase_spark.nbql.parser import parse
-    stmt = parse(query)
-    if isinstance(stmt, (A.QueryStatement, A.ShowStatement)):
-        return ROLE_READER
-    return ROLE_WRITER
+
+def required_role(stmt) -> str:
+    """Reader for the statements that only read (QUERY, SHOW, EXPLAIN,
+    QUERY ROLLUP, VERIFY ROLLUP), writer for everything that mutates —
+    the per-operation authorization matrix of
+    server/grpc_server.go:316-318. The one definition of "read-only":
+    both façades authorize with it, and ``execute_to_json`` picks the
+    read guard with it."""
+    return ROLE_READER if isinstance(stmt, _READ_ONLY) else ROLE_WRITER
 
 
 def _json_cell(v):
@@ -50,8 +52,10 @@ def _json_cell(v):
     return v
 
 
-def execute_to_json(engine: NexusEngine, query: str, params=()) -> dict:
+def execute_to_json(engine: NexusEngine, query, params=()) -> dict:
     """Run one NBQL statement, return the HTTP response body dict.
+    ``query`` is NBQL text or an already-parsed statement (the façades
+    parse once, for the role check, and pass the statement on).
 
     Read-only statements run under ``engine.read_guard()`` spanning BOTH
     plan construction (spark.read.parquet lists files) and the collect,
@@ -68,15 +72,11 @@ def execute_to_json(engine: NexusEngine, query: str, params=()) -> dict:
     reference has the same property while compaction waits on an
     iterator's SSTable refcounts. Bound it operationally with LIMIT +
     cursor pagination (each page is a short guard hold)."""
-    from nexusbase_spark.nbql import ast as A
     from nexusbase_spark.nbql.parser import parse, substitute_params
-    if params:
-        query = substitute_params(query, params)
-    stmt = parse(query)
-    read_only = isinstance(stmt, (A.QueryStatement, A.ShowStatement,
-                                  A.ExplainStatement, A.QueryRollupStatement,
-                                  A.VerifyRollupStatement))
-    if not read_only:
+    stmt = query
+    if isinstance(query, str):
+        stmt = parse(substitute_params(query, params) if params else query)
+    if required_role(stmt) == ROLE_WRITER:
         out = engine._dispatch(stmt)
         if out is None:
             return {"results": [], "status": "OK"}
@@ -278,12 +278,11 @@ class _Handler(BaseHTTPRequestHandler):
                 self._reply(400, {"error": "'params' must be a list"})
                 return
             role = self._authenticated_role()
+            from nexusbase_spark.nbql.parser import parse, substitute_params
             params = tuple(payload.get("params", ()))
-            if params:  # role check needs a parseable (substituted) string
-                from nexusbase_spark.nbql.parser import substitute_params
-                query, params = substitute_params(query, params), ()
-            self.authenticator.authorize(role, required_role(query))
-            body = execute_to_json(self.engine, query, params)
+            stmt = parse(substitute_params(query, params) if params else query)
+            self.authenticator.authorize(role, required_role(stmt))
+            body = execute_to_json(self.engine, stmt)
             self._reply(200, body)
         except AuthError as exc:
             self._reply(403 if exc.denied else 401, {"error": str(exc)})

@@ -22,11 +22,23 @@ def read_manifest(snapshot_dir: str) -> dict:
 
 
 def manifest_chain(snapshot_dir: str) -> list[tuple[str, dict]]:
-    """[(path, manifest)] from ``snapshot_dir`` up through its parents."""
+    """[(path, manifest)] from ``snapshot_dir`` up through its parents.
+    ValueError for a missing, unparsable or malformed manifest and for a
+    chain that loops back on itself."""
     chain: list[tuple[str, dict]] = []
+    seen: set[str] = set()
     cur: str | None = snapshot_dir
     while cur is not None:
-        m = read_manifest(cur)
+        if os.path.abspath(cur) in seen:
+            raise ValueError(f"snapshot chain loops back to {cur!r}")
+        seen.add(os.path.abspath(cur))
+        try:
+            m = read_manifest(cur)
+        except (OSError, ValueError) as e:
+            raise ValueError(f"unreadable snapshot manifest in {cur!r}: {e}") from None
+        if not (isinstance(m, dict) and isinstance(m.get("files"), dict)
+                and isinstance(m.get("parent"), (str, type(None)))):
+            raise ValueError(f"malformed snapshot manifest in {cur!r}")
         chain.append((cur, m))
         cur = m.get("parent")
     return chain
@@ -62,39 +74,64 @@ def list_snapshots(base_dir: str) -> list[dict]:
     return out
 
 
-def restore_files(snapshot_dir: str, target_dir: str,
-                  overwrite: bool = False) -> int:
-    """Materialize a snapshot into ``target_dir`` file-by-file: each
-    manifest entry comes from the nearest chain member that stores it.
-    Returns the number of files written. Pure file copy — the first
-    engine attach to the restored warehouse rebuilds derived state
-    (catalog) if the snapshot predates it, exactly like
-    ``NexusEngine.restore``. Refuses a non-empty target without
-    ``overwrite`` (the reference restore-util requires a NEW data dir)."""
-    if os.path.isdir(target_dir) and os.listdir(target_dir) and not overwrite:
-        raise ValueError(f"target {target_dir!r} is not empty "
-                         "(pass overwrite to replace)")
+def _is_catalog(rel: str) -> bool:
+    return rel.split(os.sep, 1)[0] == "catalog"
+
+
+def resolve_files(snapshot_dir: str) -> dict[str, str | None]:
+    """relpath -> the file to restore it from: each manifest entry comes
+    from the nearest chain member that stores it. A catalog file the
+    chain lacks maps to None (derived state, rebuilt on engine attach).
+    Reads only, so a caller can refuse a broken snapshot before deleting
+    anything: ValueError for a bad chain (see ``manifest_chain``), a path
+    that leaves the snapshot, or any other file the chain lacks."""
     chain = manifest_chain(snapshot_dir)
-    top = chain[0][1]["files"]
-    n = 0
-    missing_catalog = False
-    for rel in top:
-        src = None
-        for snap_path, m in chain:
-            entry = m["files"].get(rel)
-            if entry is not None and entry["stored"]:
-                src = os.path.join(snap_path, rel)
-                break
+    out: dict[str, str | None] = {}
+    for rel in chain[0][1]["files"]:
+        if os.path.isabs(rel) or os.path.normpath(rel).split(os.sep)[0] in ("..", "."):
+            raise ValueError(f"snapshot manifest names a path outside it: {rel!r}")
+        try:
+            src = next((os.path.join(p, rel) for p, m in chain
+                        if (m["files"].get(rel) or {}).get("stored")), None)
+        except AttributeError:  # an entry that is not a {size, stored} object
+            raise ValueError(f"malformed snapshot manifest entry {rel!r}") from None
         if src is None or not os.path.isfile(src):
-            if rel.split(os.sep, 1)[0] == "catalog":
-                missing_catalog = True  # derived state, rebuildable
-                continue
-            raise ValueError(f"snapshot chain is missing {rel!r}")
+            if not _is_catalog(rel):
+                raise ValueError(f"snapshot chain is missing {rel!r}")
+            src = None
+        out[rel] = src
+    return out
+
+
+def copy_files(sources: dict[str, str | None], target_dir: str) -> int:
+    """Copy ``resolve_files`` output into ``target_dir``; returns the
+    number of files copied. A catalog the chain holds only in part is
+    left out whole (and a stale one in the target removed), for the first
+    engine attach to rebuild."""
+    partial_catalog = None in sources.values()
+    n = 0
+    for rel, src in sources.items():
+        if partial_catalog and _is_catalog(rel):
+            continue
         dst = os.path.join(target_dir, rel)
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         shutil.copy2(src, dst)
         n += 1
-    if missing_catalog:
-        shutil.rmtree(os.path.join(target_dir, "catalog"),
-                      ignore_errors=True)
+    if partial_catalog:
+        shutil.rmtree(os.path.join(target_dir, "catalog"), ignore_errors=True)
     return n
+
+
+def restore_files(snapshot_dir: str, target_dir: str,
+                  overwrite: bool = False) -> int:
+    """Materialize a snapshot into ``target_dir`` file-by-file (see
+    ``resolve_files``). Returns the number of files written. Pure file
+    copy — the first engine attach to the restored warehouse rebuilds
+    derived state (catalog) if the snapshot lacks it, exactly like
+    ``NexusEngine.restore``. Refuses a non-empty target without
+    ``overwrite`` (the reference restore-util requires a NEW data dir).
+    The whole chain is checked before the first file is written."""
+    if os.path.isdir(target_dir) and os.listdir(target_dir) and not overwrite:
+        raise ValueError(f"target {target_dir!r} is not empty "
+                         "(pass overwrite to replace)")
+    return copy_files(resolve_files(snapshot_dir), target_dir)

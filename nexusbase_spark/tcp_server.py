@@ -28,7 +28,7 @@ from nexusbase_spark.auth import (
 )
 from nexusbase_spark.engine import NexusEngine
 from nexusbase_spark.nbql.parser import NBQLError
-from nexusbase_spark.server import execute_to_json
+from nexusbase_spark.server import execute_to_json, required_role
 
 CMD_PUSH = 0x01
 CMD_PUSHS = 0x02
@@ -50,7 +50,8 @@ AUTH_OK = 0x00
 AUTH_ERR = 0x01
 
 # role needed per command frame (grpc_server.go:316-318 checks writer for
-# Put/Delete and reader for Query before dispatch)
+# Put/Delete and reader for Query before dispatch); a QUERY frame is then
+# checked again on its parsed statement, so it cannot carry a mutation
 _REQUIRED_ROLE = {
     CMD_PUSH: ROLE_WRITER,
     CMD_PUSHS: ROLE_WRITER,
@@ -205,7 +206,10 @@ class _Handler(socketserver.BaseRequestHandler):
             write_frame(self.request, RESP_END, json.dumps({"total_rows": 0}).encode())
             return
         if cmd == CMD_QUERY:
-            body = execute_to_json(self.engine, text)
+            from nexusbase_spark.nbql.parser import parse
+            stmt = parse(text)
+            self.authenticator.authorize(self._role, required_role(stmt))
+            body = execute_to_json(self.engine, stmt)
             rows = body.get("results", [])
             # one framed part per row, then the end frame with the total
             # (server/tcp_connection_handler.go:196-280)

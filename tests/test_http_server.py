@@ -130,6 +130,12 @@ def test_http_auth_roles(spark, tmp_path_factory):
         assert post_as("admin:s3cret", push)[0] == 200
         code, body = post_as("viewer:look", {"query": "QUERY ha.m FROM 0 TO 1000"})
         assert code == 200 and len(body["results"]) == 1
+        # read-only statements beyond QUERY/SHOW are reader operations
+        code, body = post_as("viewer:look",
+                             {"query": "EXPLAIN QUERY ha.m FROM 0 TO 1000"})
+        assert code == 200 and body["results"]
+        assert post_as("viewer:look",
+                       {"query": 'REMOVE SERIES "ha.m"'})[0] == 403
         # params are substituted before the role check parses the string
         code, _ = post_as("viewer:look",
                           {"query": "QUERY ha.m FROM ? TO ?", "params": [0, 1000]})

@@ -327,6 +327,59 @@ def test_snapshot_restore(engine):
     assert row["stored_bytes"] == row["total_bytes"]
 
 
+def test_restore_validates_before_it_deletes(spark, tmp_path_factory):
+    """restore() resolves the whole manifest chain and checks the format
+    stamp BEFORE it deletes anything: a missing snapshot, a stamp-less
+    snapshot, a manifest that loops, leaves the snapshot or is
+    malformed, and a chain that lost a data file all raise ValueError
+    and leave the warehouse answering as before."""
+    import json
+    import os
+    import shutil
+
+    eng = NexusEngine(spark, str(tmp_path_factory.mktemp("rv_wh")))
+    eng.put("rv.m", {}, {"v": 1.0}, 100)
+    full = eng.snapshot()
+    eng.put("rv.m", {}, {"v": 2.0}, 200)
+    inc = eng.snapshot(incremental_from=full)
+    files = sorted(eng._state_files())
+
+    def broken(tag, edit):
+        d = shutil.copytree(full, str(tmp_path_factory.mktemp("rv") / tag))
+        with open(os.path.join(d, "manifest.json")) as f:
+            m = json.load(f)
+        edit(m, d)
+        with open(os.path.join(d, "manifest.json"), "w") as f:
+            json.dump(m, f)
+        return d
+
+    def no_stamp(m, d):
+        del m["files"]["_format"]
+        os.unlink(os.path.join(d, "_format"))
+
+    bad = [("/no/such/snapshot", "manifest"),
+           (broken("s", no_stamp), "_format"),
+           (broken("l", lambda m, d: m.update(parent=d)), "loops"),
+           (broken("e", lambda m, d: m["files"].update(
+               {"../../outside": {"size": 1, "stored": True}})), "outside"),
+           (broken("m", lambda m, d: m["files"].update({"l0/x": 5})),
+            "malformed")]
+    # the incremental child inherits its first point's file from `full`
+    with open(os.path.join(inc, "manifest.json")) as f:
+        lost = next(p for p in json.load(f)["files"]
+                    if p.startswith("l0") and p.endswith(".parquet")
+                    and os.path.isfile(os.path.join(full, p)))
+    os.unlink(os.path.join(full, lost))
+    bad.append((inc, "missing"))
+
+    for path, why in bad:
+        with pytest.raises(ValueError, match=why):
+            eng.restore(path, overwrite=True)
+        assert sorted(eng._state_files()) == files
+        rows = eng.execute("QUERY rv.m FROM 0 TO 1000").collect()
+        assert [r["ts"] for r in rows] == [100, 200]
+
+
 def test_points_wide_typed_export(engine):
     df = engine.points_wide({"latency_ms": "double", "status": "long",
                              "path": "string"})
@@ -387,44 +440,45 @@ def test_bulk_ingest_multifield_point(spark, tmp_path_factory):
 
 
 @pytest.mark.nightly
-def test_count_star_markers_and_v1_upgrade(spark, tmp_path_factory):
-    """Format v2: count(*) rides per-point marker rows — a plain
-    conditional count, no Expand even mixed with other aggs. A v1
-    (marker-less) warehouse still answers via countDistinct and upgrades
-    to v2 through compact()."""
+def test_count_star_markers_and_format_stamp(spark, tmp_path_factory):
+    """count(*) rides per-point marker rows — a plain conditional count,
+    no Expand even mixed with other aggs — and compaction keeps them.
+    A warehouse holding rows without the exact format stamp is refused
+    at open instead of being served."""
     import os
+
+    from nexusbase_spark.engine import FORMAT_STAMP
     wh = str(tmp_path_factory.mktemp("mark_wh"))
     eng = NexusEngine(spark, wh)
-    assert eng.point_markers
     eng.put_batch([("m.c", {"h": "a"}, {"v": 1.0, "k": 7}, 100),
                    ("m.c", {"h": "a"}, {"v": 2.0}, 200),
                    ("m.c", {"h": "b"}, {"v": 4.0}, 200)])
-    df = eng.execute("QUERY m.c FROM 0 TO 1000 AGGREGATE (count(*), sum(v))")
+    q = "QUERY m.c FROM 0 TO 1000 AGGREGATE (count(*), sum(v))"
+    df = eng.execute(q)
     row = df.collect()[0]
     assert (row["count_*"], row["sum_v"]) == (3, 7.0)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Expand" not in plan
     # MVCC: re-push replaces the whole point INCLUDING its marker
     eng.put("m.c", {"h": "a"}, {"v": 9.0}, 100)
-    row = eng.execute("QUERY m.c FROM 0 TO 1000 AGGREGATE (count(*), sum(v))").collect()[0]
+    row = eng.execute(q).collect()[0]
+    assert (row["count_*"], row["sum_v"]) == (3, 15.0)
+    eng.compact()
+    row = eng.execute(q).collect()[0]
     assert (row["count_*"], row["sum_v"]) == (3, 15.0)
 
-    # simulate a v1 warehouse: no _format file, no marker rows
-    wh1 = str(tmp_path_factory.mktemp("mark_v1"))
-    e1 = NexusEngine(spark, wh1)
-    os.unlink(e1._format_path)
-    e1.point_markers = False
-    e1.put_batch([("m.c", {}, {"v": 1.0, "k": 2}, 100),
-                  ("m.c", {}, {"v": 2.0}, 200)])
-    e1 = NexusEngine(spark, wh1)  # reopen: detected as v1
-    assert not e1.point_markers
-    q = "QUERY m.c FROM 0 TO 1000 AGGREGATE (count(*), sum(v))"
-    assert e1.execute(q).collect()[0]["count_*"] == 2  # distinct fallback
-    e1.compact()  # v1 -> v2 upgrade synthesizes markers
-    assert e1.point_markers
-    row = e1.execute(q).collect()[0]
-    assert (row["count_*"], row["sum_v"]) == (2, 3.0)
-    assert "Expand" not in e1.execute(q)._jdf.queryExecution().executedPlan().toString()
+    # no stamp, or any other stamp, over stored rows: ValueError naming
+    # the file; the byte-identical stamp opens again
+    os.unlink(eng._format_path)
+    with pytest.raises(ValueError, match="_format"):
+        NexusEngine(spark, wh)
+    with open(eng._format_path, "w") as f:
+        f.write("point_markers=0\n")
+    with pytest.raises(ValueError, match="_format"):
+        NexusEngine(spark, wh)
+    with open(eng._format_path, "w") as f:
+        f.write(FORMAT_STAMP)
+    assert NexusEngine(spark, wh).execute(q).collect()[0]["count_*"] == 3
 
 
 @pytest.mark.nightly
@@ -448,11 +502,14 @@ def test_incremental_snapshot_chain(spark, tmp_path_factory):
     inherited = {p for p, e in m["files"].items() if not e["stored"]}
     assert inherited, "incremental stored everything (no sharing with parent)"
     assert all(not os.path.isfile(os.path.join(inc, p)) for p in inherited)
-    assert "_format" in stored  # the one in-place-mutable file
+    assert "_format" in inherited  # the stamp is written once
     # restore child -> both points; restore parent -> only the first
     e2 = NexusEngine(spark, str(tmp_path_factory.mktemp("snap_wh2")))
     e2.restore(inc, overwrite=True)
     assert [r["ts"] for r in e2.execute("QUERY sn.m FROM 0 TO 1000").collect()] == [100, 200]
+    # the restored stamp is the parent snapshot's file (copy2 keeps mtime)
+    assert (os.stat(e2._format_path).st_mtime_ns
+            == os.stat(os.path.join(full, "_format")).st_mtime_ns)
     e2.restore(full, overwrite=True)
     assert [r["ts"] for r in e2.execute("QUERY sn.m FROM 0 TO 1000").collect()] == [100]
     # MVCC seq counter follows the restored state: a new put supersedes
@@ -508,7 +565,6 @@ def test_day_partitioned_layout_prunes(spark, tmp_path_factory):
     across day boundaries."""
     from nexusbase_spark.engine import DAY_NS
     eng = NexusEngine(spark, str(tmp_path_factory.mktemp("day_wh")))
-    assert eng.day_partitioned
     eng.put_batch([("m.d", {}, {"v": 1.0}, 10),
                    ("m.d", {}, {"v": 2.0}, DAY_NS + 10),
                    ("m.d", {}, {"v": 3.0}, 2 * DAY_NS + 10)])

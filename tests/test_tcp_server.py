@@ -126,6 +126,29 @@ def test_tcp_auth_handshake_and_roles(spark, tmp_path_factory):
         srv.shutdown()
 
 
+def test_reader_query_frame_cannot_mutate(spark, tmp_path_factory):
+    """The role is decided by the parsed statement, not the frame code:
+    a reader's QUERY frame carrying REMOVE is denied and deletes nothing,
+    while read-only statements (QUERY, EXPLAIN) pass."""
+    from nexusbase_spark.auth import Authenticator, hash_password
+
+    eng = NexusEngine(spark, str(tmp_path_factory.mktemp("tcpauthz_wh")))
+    eng.put("authz.m", {"h": "a"}, {"v": 7}, 100)
+    srv = serve_tcp(eng, port=0, authenticator=Authenticator(
+        {"viewer": (hash_password("look"), "reader")}))
+    c = NBQLClient("127.0.0.1", srv.server_address[1], "viewer", "look")
+    try:
+        with pytest.raises(RuntimeError, match="may not perform"):
+            c.query('REMOVE SERIES "authz.m" TAGGED (h="a")')
+        rows, end = c.query("QUERY authz.m FROM 0 TO 1000")
+        assert end["total_rows"] == 1
+        rows, end = c.query("EXPLAIN QUERY authz.m FROM 0 TO 1000")
+        assert end["total_rows"] > 0
+    finally:
+        c.close()
+        srv.shutdown()
+
+
 @pytest.mark.nightly
 def test_client_convenience_surface(tcp):
     """Reference-client parity: parameterized query, push_point,
