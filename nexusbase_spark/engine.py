@@ -38,6 +38,7 @@ resurrects (engine2/adapter.go:2773-2791).
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import shutil
@@ -69,6 +70,19 @@ POINTS_SCHEMA = StructType([
     StructField("f_string", StringType(), True),
     StructField("f_bool", BooleanType(), True),
 ])
+
+# The declared schemas every engine-owned directory is read with, so no
+# read runs a schema-inference job, and a directory holding no committed
+# file yet (an append being born, or a crashed one's staging area) reads
+# as 0 rows. points/ and l0/ files add series_key; metric and day are the
+# partition directories.
+_POINTS_DIR_SCHEMA = StructType(POINTS_SCHEMA.fields + [
+    StructField("series_key", StringType()), StructField("day", LongType())])
+_TOMB_SCHEMAS = {
+    "point": "series_key string, ts long, seq long",
+    "series": "series_key string, seq long",
+    "range": "series_key string, min_ts long, max_ts long, seq long",
+}
 
 _NAN = float("nan")
 
@@ -112,10 +126,14 @@ class _ScanLock:
     overwrite. This mirrors the reference's refcounted-SSTable protocol —
     iterators pin their SSTables for the cursor's lifetime and compaction
     waits for the refcount (levels manager) — with the read guard playing
-    the refcount. Writer-preference so a steady query stream cannot
-    starve a flush. NOT reentrant: a thread must never nest read() inside
-    write() or vice versa (internal engine materialization runs under the
-    write side and must not take read guards)."""
+    the refcount. flush_l0, compact and restore also bump the engine's
+    write generation INSIDE the write section, which invalidates the
+    cached base scan (``NexusEngine._base``): no reader after the
+    rewrite plans the file listing it replaced. Writer-preference so a
+    steady query stream cannot starve a flush. NOT reentrant: a thread
+    must never nest read() inside write() or vice versa (internal engine
+    materialization runs under the write side and must not take read
+    guards)."""
 
     def __init__(self) -> None:
         self._cond = threading.Condition()
@@ -181,8 +199,6 @@ def _serialized(fn):
     servers otherwise interleave two PUSHes inside _next_seq (duplicate
     seqs break MVCC last-write-wins ties), race the L0 batch counter, or
     run two flushes over the same l0/ directory."""
-    import functools
-
     @functools.wraps(fn)
     def wrapper(self, *args, **kwargs):
         with self._write_mu:
@@ -263,7 +279,14 @@ class NexusEngine:
             cache_capacity,
             on_evicted=lambda k, v: self._emit("on_cache_eviction", {"key": k}))
         self.cache_max_rows = 100_000  # don't retain giant results
+        # Bumped by every change of the warehouse's file set: after an
+        # append returns, and inside the write section of a rewrite. It
+        # keys the result cache and the base scan (_base).
         self._write_gen = 0
+        self._base_mu = threading.Lock()  # leaf lock: held for a build only
+        self._base_gen = -1
+        self._base_frames = None
+        self._base_builds = self._base_reuses = 0
         # Writer mutex: the servers handle connections on threads, but the
         # engine's write path mutates shared state (the seq counter, the
         # L0 batch counter/dir, the catalog, tombstone dirs) with no other
@@ -384,18 +407,20 @@ class NexusEngine:
 
     def _load_max_seq(self) -> int:
         """Open-time WAL-recovery analog: max committed seq across every
-        warehouse dir. Uses _read_dir_or_none so a dir left behind by a
-        CRASHED append (created, nothing committed — only staging files)
-        doesn't brick engine open; recovery sees exactly the durable
-        rows, which is the WAL-replay contract."""
-        best = -1
-        for path in [self._points_path, self._l0_path, *self._tomb.values()]:
-            df = self._read_dir_or_none(path)
-            if df is not None:
-                row = df.agg(F.max("seq")).collect()[0]
-                if row[0] is not None:
-                    best = max(best, row[0])
-        return best
+        warehouse dir, in one job. A dir left behind by a CRASHED append
+        (created, nothing committed — only staging files) reads as 0
+        rows, so recovery sees exactly the durable rows, which is the
+        WAL-replay contract."""
+        dirs = [(self._points_path, _POINTS_DIR_SCHEMA),
+                (self._l0_path, _POINTS_DIR_SCHEMA),
+                *((p, _TOMB_SCHEMAS[k]) for k, p in self._tomb.items())]
+        seqs = [df.select("seq") for df in
+                (self._read_dir(p, schema) for p, schema in dirs)
+                if df is not None]
+        if not seqs:
+            return -1
+        best = functools.reduce(DataFrame.union, seqs).agg(F.max("seq")).collect()[0][0]
+        return -1 if best is None else best
 
     def _next_seq(self) -> int:
         s = self._seq
@@ -516,11 +541,9 @@ class NexusEngine:
             self._set_l0_batches(0)
             return
         self._emit("pre_flush_memtable", {"l0_batches": self._l0_batches()})
-        df = self._read_dir_or_none(self._l0_path)
-        if df is None:  # dir born but nothing committed (crashed append)
-            self._set_l0_batches(0)
-            return
-        df = df.drop("day")  # re-derived by _write_points
+        # re-derived by _write_points; a dir holding only a crashed
+        # append's staging files reads as 0 rows and appends nothing
+        df = self._read_dir(self._l0_path, _POINTS_DIR_SCHEMA).drop("day")
         # exclusive vs in-flight scans: between the append and the rmtree
         # a reader would either double-see the L0 rows (raw count(*)
         # overcounts; MVCC paths dedup them but raw scans don't) or plan
@@ -530,6 +553,7 @@ class NexusEngine:
             self._emit("pre_sstable_delete", {"path": self._l0_path})
             shutil.rmtree(self._l0_path)
             self._set_l0_batches(0)
+            self._write_gen += 1
         # the L0 tier rotating into the base table = WAL rotation
         self._emit("post_wal_rotate", {"merged_into": self._points_path})
         self._emit("post_flush_memtable", {"merged_into": self._points_path})
@@ -675,7 +699,7 @@ class NexusEngine:
         sk = self._series_key(metric, tags)
         self._emit("pre_delete_series", {"series_key": sk})
         seq = self._next_seq()
-        self._append_tomb("series", [(sk, seq)], "series_key string, seq long")
+        self._append_tomb("series", [(sk, seq)])
         self._emit("post_delete_series", {"series_key": sk, "seq": seq})
         return seq
 
@@ -685,8 +709,7 @@ class NexusEngine:
         sk = self._series_key(metric, tags)
         self._emit("pre_delete_point", {"series_key": sk, "ts": int(ts)})
         seq = self._next_seq()
-        self._append_tomb("point", [(sk, int(ts), seq)],
-                          "series_key string, ts long, seq long")
+        self._append_tomb("point", [(sk, int(ts), seq)])
         self._emit("post_delete_point", {"series_key": sk, "ts": int(ts),
                                          "seq": seq})
         return seq
@@ -699,8 +722,7 @@ class NexusEngine:
         self._emit("pre_delete_range", {"series_key": sk,
                                         "start": int(start), "end": int(end)})
         seq = self._next_seq()
-        self._append_tomb("range", [(sk, int(start), int(end), seq)],
-                          "series_key string, min_ts long, max_ts long, seq long")
+        self._append_tomb("range", [(sk, int(start), int(end), seq)])
         self._emit("post_delete_range", {"series_key": sk, "seq": seq,
                                          "start": int(start), "end": int(end)})
         return seq
@@ -710,45 +732,53 @@ class NexusEngine:
         kv = ",".join(f"{k}={v}" for k, v in sorted((tags or {}).items()))
         return f"{metric}|{kv}"
 
-    def _append_tomb(self, kind: str, rows: list[tuple], schema: str) -> None:
-        self.spark.createDataFrame(rows, schema).write.mode("append").parquet(self._tomb[kind])
+    def _append_tomb(self, kind: str, rows: list[tuple]) -> None:
+        (self.spark.createDataFrame(rows, _TOMB_SCHEMAS[kind])
+         .write.mode("append").parquet(self._tomb[kind]))
         self._write_gen += 1
 
     # -------------------------------------------------------------- reads
 
-    def _read_dir_or_none(self, path: str) -> DataFrame | None:
-        """spark.read.parquet on an engine-owned dir, tolerating the
-        append-birth torn state: a concurrent first append has CREATED
-        the directory (os.makedirs / the committer's staging area) but
-        not yet committed a parquet file, so schema inference fails with
-        UNABLE_TO_INFER_SCHEMA. The correct snapshot is 'no rows yet' —
-        an in-flight batch is not durable until its commit — so that
-        case reads as absent. Found by the concurrent-TCP-clients e2e
-        test; deletions (the other torn state) are excluded by _ScanLock
-        instead, because there the rows DO exist and must stay visible."""
+    def _read_dir(self, path: str, schema) -> DataFrame | None:
+        """An engine-owned dir read with its declared schema, or None when
+        the dir does not exist. No inference job runs, and the append-
+        birth torn state (a concurrent first append has CREATED the dir
+        but not yet committed a file) reads as 0 rows: an in-flight batch
+        is not durable until its commit. Deletions, the other torn state,
+        are excluded by _ScanLock instead, because there the rows DO
+        exist and must stay visible."""
         if not os.path.isdir(path):
             return None
-        try:
-            return self.spark.read.parquet(path)
-        except Exception as e:  # pyspark AnalysisException
-            if "UNABLE_TO_INFER_SCHEMA" in str(e):
-                return None
-            raise
+        return self.spark.read.schema(schema).parquet(path)
 
-    def _raw(self) -> DataFrame | None:
-        base = self._read_dir_or_none(self._points_path)
-        l0 = self._read_dir_or_none(self._l0_path)
-        if base is None:
-            return l0
-        if l0 is None:
-            return base
-        return base.unionByName(l0)
+    def _base(self) -> tuple[DataFrame, dict[str, DataFrame]]:
+        """(points ∪ L0 frame, {tombstone kind: frame} for the kinds
+        present): the base scan every read starts from, built once
+        per write generation and handed out until the file set changes —
+        a DataFrame pins the file listing it was built with, like the
+        reference's iterators pin a table version. Each build lists the
+        directories once; reuse lists nothing. Correct only with one live
+        engine per warehouse directory (already the contract: _seq is per
+        engine), because only this engine's writes bump the generation.
+        The generation is read BEFORE listing, so a build that races an
+        append is filed under the older generation and rebuilt."""
+        with self._base_mu:
+            gen = self._write_gen
+            if self._base_gen == gen:
+                self._base_reuses += 1
+                return self._base_frames
+            parts = [df for p in (self._points_path, self._l0_path)
+                     if (df := self._read_dir(p, _POINTS_DIR_SCHEMA)) is not None]
+            raw = (functools.reduce(DataFrame.unionByName, parts) if parts
+                   else self.spark.createDataFrame([], _POINTS_DIR_SCHEMA))
+            tombs = {k: df for k, p in self._tomb.items()
+                     if (df := self._read_dir(p, _TOMB_SCHEMAS[k])) is not None}
+            self._base_gen, self._base_frames = gen, (raw, tombs)
+            self._base_builds += 1
+            return self._base_frames
 
-    def _tomb_df(self, kind: str, schema: str) -> DataFrame:
-        df = self._read_dir_or_none(self._tomb[kind])
-        if df is not None:
-            return df
-        return self.spark.createDataFrame([], schema)
+    def _raw(self) -> DataFrame:
+        return self._base()[0]
 
     def points(self, metric: str | None = None,
                tags: dict[str, str] | None = None,
@@ -768,18 +798,7 @@ class NexusEngine:
         from nexusbase_spark.operators.mvcc import (
             apply_point_deletes, apply_range_deletes, apply_series_deletes,
         )
-        df = self._raw()
-        if df is None:
-            # StructType.add MUTATES in place (and returns self) — calling
-            # it on the module-global POINTS_SCHEMA permanently appended a
-            # series_key field per empty-warehouse query, after which every
-            # put_batch's 10-element rows failed FIELD_STRUCT_LENGTH_MISMATCH
-            # against the silently-grown schema. That crash killed writer
-            # threads whose stop-flag readers then spun forever — the
-            # intermittent test_concurrency hang. Build a fresh StructType.
-            return self.spark.createDataFrame(
-                [], StructType(POINTS_SCHEMA.fields
-                               + [StructField("series_key", StringType())]))
+        df, tombs = self._base()
         if metric is not None:
             df = df.filter(F.col("metric") == metric)
         if tags:
@@ -810,16 +829,11 @@ class NexusEngine:
               .filter(F.col("seq") == F.col("__maxseq")).drop("__maxseq"))
         # anti-joins only for tombstone kinds that exist: an empty broadcast
         # join still costs a job, and fresh warehouses have none
-        if os.path.isdir(self._tomb["point"]):
-            df = apply_point_deletes(
-                df, self._tomb_df("point", "series_key string, ts long, seq long"))
-        if os.path.isdir(self._tomb["series"]):
-            df = apply_series_deletes(
-                df, self._tomb_df("series", "series_key string, seq long"))
-        if os.path.isdir(self._tomb["range"]):
-            df = apply_range_deletes(
-                df, self._tomb_df("range",
-                                  "series_key string, min_ts long, max_ts long, seq long"))
+        for kind, apply in (("point", apply_point_deletes),
+                            ("series", apply_series_deletes),
+                            ("range", apply_range_deletes)):
+            if kind in tombs:
+                df = apply(df, tombs[kind])
         return df
 
     def get(self, metric: str, tags: dict[str, str] | None,
@@ -901,14 +915,13 @@ class NexusEngine:
         wday = F.col("window_start") - F.pmod(F.col("window_start"), F.lit(DAY_NS))
         (out.withColumn("wday", wday).write.mode("overwrite")
          .partitionBy("wday").parquet(os.path.join(d, "data")))
-        with open(os.path.join(d, "meta.json"), "w") as f:
-            # schema recorded so rollup() can serve an EMPTY rollup (a
-            # refresh may delete every remaining day partition; parquet
-            # schema inference has nothing to read then)
-            json.dump({"metric": metric, "interval_ns": interval_ns,
-                       "specs": [[s.func, s.field, s.alias] for s in specs],
-                       "last_seq": last_seq,
-                       "schema": out.schema.json()}, f)
+        # schema recorded so rollup() can serve an EMPTY rollup (a
+        # refresh or a restore may delete every day partition; parquet
+        # schema inference has nothing to read then)
+        self._write_rollup_meta(name, {
+            "metric": metric, "interval_ns": interval_ns,
+            "specs": [[s.func, s.field, s.alias] for s in specs],
+            "last_seq": last_seq, "schema": out.schema.json()})
 
     def _rollup_compute(self, metric: str, interval_ns: int, specs: list,
                         day_filter=None) -> DataFrame:
@@ -928,6 +941,10 @@ class NexusEngine:
     def _rollup_meta(self, name: str) -> dict:
         with open(os.path.join(self._rollup_dir(name), "meta.json")) as f:
             return json.load(f)
+
+    def _write_rollup_meta(self, name: str, meta: dict) -> None:
+        with open(os.path.join(self._rollup_dir(name), "meta.json"), "w") as f:
+            json.dump(meta, f)
 
     def rollups(self) -> dict[str, dict]:
         """name -> meta of every registered rollup, in name order."""
@@ -968,15 +985,14 @@ class NexusEngine:
         wday_of = lambda c: c - F.pmod(c, F.lit(DAY_NS))  # noqa: E731
         dirty: set[int] = set()
 
-        raw = self._raw()
-        if raw is not None:
-            new_pts = (raw.filter((F.col("metric") == metric) & (F.col("seq") > last))
-                       .select(wday_of(F.col("ts") - F.pmod(F.col("ts"), F.lit(iv)))
-                               .alias("wd")).distinct())
-            dirty |= {r["wd"] for r in new_pts.collect()}
+        raw, tombs = self._base()
+        new_pts = (raw.filter((F.col("metric") == metric) & (F.col("seq") > last))
+                   .select(wday_of(F.col("ts") - F.pmod(F.col("ts"), F.lit(iv)))
+                           .alias("wd")).distinct())
+        dirty |= {r["wd"] for r in new_pts.collect()}
 
         roll = self.rollup(name).select("series_key", "window_start")
-        if os.path.isdir(self._tomb["point"]):
+        if "point" in tombs:
             # semi-join against the rollup's own (series, window) so point
             # deletes on unrelated metrics/series don't dirty days here —
             # without it, refresh cost scales with GLOBAL delete traffic.
@@ -984,8 +1000,7 @@ class NexusEngine:
             # covered by the new-points branch above (its row has
             # seq > last), so windows absent from the rollup need no
             # tombstone-driven recompute.
-            tomb = self._tomb_df(
-                "point", "series_key string, ts long, seq long").filter(F.col("seq") > last)
+            tomb = tombs["point"].filter(F.col("seq") > last)
             hit = (tomb.withColumn(
                        "window_start",
                        F.col("ts") - F.pmod(F.col("ts"), F.lit(iv)))
@@ -993,18 +1008,15 @@ class NexusEngine:
                    .select(wday_of(F.col("window_start")).alias("wd"))
                    .distinct())
             dirty |= {r["wd"] for r in hit.collect()}
-        if os.path.isdir(self._tomb["range"]):
-            tomb = self._tomb_df(
-                "range", "series_key string, min_ts long, max_ts long, seq long"
-            ).filter(F.col("seq") > last)
+        if "range" in tombs:
+            tomb = tombs["range"].filter(F.col("seq") > last)
             hit = (roll.join(tomb, (roll["series_key"] == tomb["series_key"])
                              & (roll["window_start"] + iv > tomb["min_ts"])
                              & (roll["window_start"] <= tomb["max_ts"]))
                    .select(wday_of(roll["window_start"]).alias("wd")).distinct())
             dirty |= {r["wd"] for r in hit.collect()}
-        if os.path.isdir(self._tomb["series"]):
-            tomb = self._tomb_df(
-                "series", "series_key string, seq long").filter(F.col("seq") > last)
+        if "series" in tombs:
+            tomb = tombs["series"].filter(F.col("seq") > last)
             hit = (roll.join(tomb, "series_key")
                    .select(wday_of(roll["window_start"]).alias("wd")).distinct())
             dirty |= {r["wd"] for r in hit.collect()}
@@ -1040,8 +1052,7 @@ class NexusEngine:
                 with_conf.set("spark.sql.sources.partitionOverwriteMode", prev)
             out.unpersist()
         meta["last_seq"] = new_last
-        with open(os.path.join(self._rollup_dir(name), "meta.json"), "w") as f:
-            json.dump(meta, f)
+        self._write_rollup_meta(name, meta)
         return len(dirty)
 
     def verify_rollup(self, name: str, sample_days: int | None = None,
@@ -1200,12 +1211,12 @@ class NexusEngine:
             # WITH the old tombstones would re-delete resurrected rows
             for path in self._tomb.values():
                 shutil.rmtree(path, ignore_errors=True)
+            self._write_gen += 1
         # rebuild the catalog from the surviving view: prunes tombstoned
         # series and merges the tiny per-put index files
         self._catalog.rebuild(self._raw())
         self._known_series = self._known_metrics = None  # reload from catalog
         resolved.unpersist()
-        self._write_gen += 1
         if self.hooks is not None:
             # PostCompaction payload: old/new table sizes, the inputs the
             # write-amplification listener accumulates (hooks/listeners/
@@ -1310,6 +1321,15 @@ class NexusEngine:
                 shutil.rmtree(os.path.join(self.warehouse, name),
                               ignore_errors=True)
             copy_files(sources, self.warehouse)
+            # rollups are not part of snapshots: each one drops its data
+            # and restarts from last_seq -1, so the next refresh
+            # recomputes every day from the restored base and the rewrite
+            # never serves the replaced state
+            for name, meta in self.rollups().items():
+                shutil.rmtree(os.path.join(self._rollup_dir(name), "data"),
+                              ignore_errors=True)
+                self._write_rollup_meta(name, {**meta, "last_seq": -1})
+            self._write_gen += 1
         self._seq = self._load_max_seq() + 1
         self._set_l0_batches(0)  # pending-batch count died with the old L0
         # a snapshot whose catalog is missing or partial restores without
@@ -1318,7 +1338,6 @@ class NexusEngine:
                 and not self._catalog.exists()):
             self._catalog.rebuild(self._raw())
         self._known_series = self._known_metrics = None  # reload from catalog
-        self._write_gen += 1
 
     # ----------------------------------------------------------- metrics
 
@@ -1342,6 +1361,8 @@ class NexusEngine:
             "l0_bytes": self._dir_bytes(self._l0_path),
             "l0_files": _files(self._l0_path),
             "tombstone_files": {k: _files(p) for k, p in self._tomb.items()},
+            "base_scan": {"builds": self._base_builds,
+                          "reuses": self._base_reuses},
             "result_cache": {
                 "capacity": self.result_cache.capacity,
                 "entries": len(self.result_cache),

@@ -58,9 +58,12 @@ def execute_to_json(engine: NexusEngine, query, params=()) -> dict:
     parse once, for the role check, and pass the statement on).
 
     Read-only statements run under ``engine.read_guard()`` spanning BOTH
-    plan construction (spark.read.parquet lists files) and the collect,
-    so a concurrent FLUSH/COMPACT/RESTORE can't delete planned files
-    mid-query (the reference pins an iterator's SSTables the same way).
+    plan construction and the collect, so a concurrent
+    FLUSH/COMPACT/RESTORE can't delete planned files mid-query (the
+    reference pins an iterator's SSTables the same way). The file
+    listing a plan starts from is the engine's base scan, listed once
+    per write generation; a statement that builds it lists the files
+    under this guard.
     Mutations must NOT take the read guard: a PUSH that trips the L0
     trigger flushes inside, and the flush's exclusive side would deadlock
     against its own thread's read side.

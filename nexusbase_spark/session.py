@@ -53,6 +53,18 @@ _DEFAULTS = {
     # row-group min/max stats).
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
+    # No per-call call-site capture on Column functions. With it on, each
+    # decorated pyspark function (pyspark/errors/utils.py _with_origin)
+    # makes extra JVM round trips: active-session lookup, origin class
+    # lookup, a conf read, set and clear. Counted with a py4j call
+    # counter, the plan_query of a tagged NBQL range query made 533 round
+    # trips with it on and 293 with it off.
+    # Lost: Spark error messages no longer carry the "== DataFrame =="
+    # Python call site, which here would name engine internals; NBQL
+    # errors are typed anyway. Must be set when the session is built:
+    # pyspark caches the value for the whole process on the first Column
+    # call, so an engine cannot turn it off later.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

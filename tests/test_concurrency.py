@@ -14,6 +14,8 @@ locks, seq duplication and L0 rmtree-vs-append losses reproduced here.
 
 from __future__ import annotations
 
+import itertools
+import sys
 import threading
 
 import pytest
@@ -140,6 +142,68 @@ def test_queries_during_flushes_never_see_torn_state(engine):
     final = execute_to_json(engine, "QUERY flood.m AGGREGATE (count(*))")
     assert int(final["results"][0]["count_*"]) == total
     assert seen, "readers never completed a query"
+
+
+@pytest.mark.nightly
+def test_reused_base_scan_vs_flush_and_compact_soak(engine):
+    """Three readers reuse the engine's base scan between writes while one
+    thread puts batches and another alternates FLUSH and compact, so the
+    base is invalidated under the readers over and over. A reader that
+    planned a stale base would fail on a file the flush or compact
+    deleted, or miss a batch: every query must succeed with a count that
+    never goes backwards or above what was written."""
+    from nexusbase_spark.server import execute_to_json
+
+    total = 16
+    stop = threading.Event()
+    written = [0]
+
+    def writer(_i):
+        try:
+            for j in range(total):
+                written[0] = j + 1  # started puts: an upper bound
+                engine.put_batch([
+                    ("soak.m", {"k": str(j % 3)}, {"v": float(j)},
+                     1_700_000_000_000_000_000 + j * 1_000_000_000)])
+        finally:
+            stop.set()
+
+    def rewriter(_i):
+        rewrites = itertools.cycle([engine.flush_l0, engine.compact])
+        while not stop.is_set():
+            next(rewrites)()
+
+    fails: list[str] = []
+
+    def reader(_i):
+        last = 0
+        while True:
+            done = stop.is_set()
+            body = execute_to_json(engine, "QUERY soak.m AGGREGATE (count(*))")
+            rows = body["results"]
+            c = int(rows[0]["count_*"] or 0) if rows else 0
+            if c < last:
+                fails.append(f"count went backwards: {last} -> {c}")
+            if c > written[0]:
+                fails.append(f"count overshot writes: {c} > {written[0]}")
+            last = c
+            if done:
+                break
+
+    # frequent interpreter switches interleave the threads inside _base
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        errs = _run_threads(
+            5, lambda i: [writer, rewriter, reader, reader, reader][i](i))
+    finally:
+        sys.setswitchinterval(interval)
+    assert not errs, errs
+    assert not fails, fails
+    final = execute_to_json(engine, "QUERY soak.m AGGREGATE (count(*))")
+    assert int(final["results"][0]["count_*"]) == total
+    scan = engine.metrics()["base_scan"]
+    assert scan["builds"] > 1 and scan["reuses"] > 0
 
 
 @pytest.mark.nightly

@@ -167,6 +167,33 @@ def test_show_rollups(eng):
     assert eng.execute("SHOW METRICS").count() >= 1
 
 
+def test_restore_resets_rollups(eng):
+    """Rollups are not part of snapshots, so a restore drops each one's
+    data and resets its last_seq: SHOW ROLLUPS and QUERY ROLLUP stop
+    answering from the replaced state, the transparent rewrite does not
+    serve it once new writes bring seq back to the old last_seq, and the
+    next refresh recomputes every day from the restored base."""
+    eng.create_rollup("r", "m", DAY, SPECS)
+    snap = eng.snapshot()
+    eng.put_batch([("m", {"h": "a"}, {"v": 50.0}, D0 + 5 * DAY)])
+    eng.refresh_rollup("r")
+    stale_last = eng.rollups()["r"]["last_seq"]
+    eng.restore(snap, overwrite=True)
+    assert eng.rollups()["r"]["last_seq"] == -1
+    assert eng.execute("SHOW ROLLUPS").collect()[0]["name"] == "r"
+    assert eng.execute("QUERY ROLLUP r").collect() == []
+    # a write of the restored state reaches the replaced state's last_seq
+    eng.put_batch([("m", {"h": "b"}, {"v": 1.0}, D0 + DAY)])
+    assert eng._seq - 1 == stale_last
+    rows = eng.execute(f"QUERY m FROM {D0} TO {D0 + 8 * DAY - 1} AGGREGATE BY 1d "
+                       "(count(*), sum(v), avg(v))").collect()
+    assert getattr(eng, "rollup_rewrites", 0) == 0
+    assert D0 + 5 * DAY not in {r["window_start"] for r in rows}
+    eng.refresh_rollup("r")
+    assert _materialized(eng) == _direct(eng)
+    assert D0 + 5 * DAY not in {ws for _sk, ws in _materialized(eng)}
+
+
 def test_rollup_streaming_maintenance(spark, tmp_path):
     """refresh_rollups=True keeps the continuous aggregate current as
     micro-batches land: after each batch the rollup equals a full
