@@ -3,9 +3,11 @@
 Reference: ``cache/cache.go`` (generic LRU with eviction/hit/miss callbacks
 and hit/miss counters) and ``api/nbql/cache_key.go:17-95`` (canonical key
 from a QueryStatement: metric | REL:dur-or-ABS:start-end | sorted tags |
-DS:interval[,EMPTY]:agg specs | sort order). The reference builds both
-pieces but never wires them into its executor (SURVEY.md §4 — the cache is
-referenced only by its own test); this rebuild wires them and adds the part
+DS:interval[,EMPTY]:agg specs | sort order). That key leaves out clauses
+this grammar adds (tag matchers, SLIDE, FILL), so here the key is the
+whole statement instead. The reference builds both pieces but never wires
+them into its executor (SURVEY.md §4 — the cache is referenced only by its
+own test); this rebuild wires them and adds the part
 the reference left undefined: **invalidation**. Every mutation (put, bulk
 ingest, delete, compact, restore) bumps the engine's write generation; a
 cached entry is valid only while its generation matches, so a cache hit is
@@ -27,7 +29,7 @@ from __future__ import annotations
 
 from collections import OrderedDict
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from nexusbase_spark.nbql.ast import QueryStatement
 
@@ -101,29 +103,13 @@ class LRUCache:
 
 
 def query_cache_key(q: QueryStatement) -> str:
-    """Canonical key for a QueryStatement (api/nbql/cache_key.go:17-95).
-    Semantically identical queries written differently (tag order) share a
-    key; LIMIT/AFTER are excluded (pagination works on the cached rows)."""
-    parts: list[str] = [q.metric, "|"]
-    if q.relative is not None:
-        parts += ["REL:", str(q.relative)]
-    else:
-        parts += ["ABS:", str(q.start), "-", str(q.end)]
-    parts.append("|")
-    parts.append(",".join(f"{k}={v}" for k, v in sorted(q.tags.items())))
-    parts.append("|")
-    if q.aggregations:
-        if q.downsample_interval:
-            parts += ["DS:", str(q.downsample_interval)]
-            if q.emit_empty_windows:
-                parts.append(",EMPTY")
-            parts.append(":")
-        parts.append(",".join(
-            f"{s.func}({s.field})" + (f" as {s.alias}" if s.alias else "")
-            for s in q.aggregations))
-    parts.append("|")
-    parts.append("DESC" if q.sort_desc else "ASC")
-    return "".join(parts)
+    """Canonical key for a QueryStatement: the whole statement, with
+    LIMIT/AFTER cleared (pagination works on the cached rows) and tags
+    sorted (tag order does not change the answer). Every other clause
+    takes part, so two statements that can answer differently never
+    share a key."""
+    return repr(replace(
+        q, limit=None, after_cursor=None, tags=dict(sorted(q.tags.items()))))
 
 
 @dataclass

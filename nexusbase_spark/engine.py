@@ -54,8 +54,9 @@ from pyspark.sql.types import (
 )
 
 from nexusbase_spark.datamodel import series_key_expr, validate_name
-from nexusbase_spark.functions.fidelity import parse_agg_func
-from nexusbase_spark.nbql.ast import AggregationSpec, QueryStatement
+from nexusbase_spark.functions.fidelity import AggSpec, qcol
+from nexusbase_spark.nbql.ast import QueryStatement
+from nexusbase_spark.operators.scan import tag_filter
 from nexusbase_spark.operators.tagindex import SeriesCatalog
 
 POINTS_SCHEMA = StructType([
@@ -901,10 +902,10 @@ class NexusEngine:
         (metric, series_key, tags, window_start/end, one column per agg)
         for one metric, partitioned by the UTC day of window_start, plus
         a meta file recording the last seq it has seen. ``specs`` are
-        `nbql.ast.AggregationSpec`s — the same objects the parser makes. `refresh_rollup` is
-        DELTA-INVALIDATE, not delta-aggregate: new/late/deleted data
-        marks its windows' day partitions dirty and those days are
-        recomputed exactly from the base table — no merge algebra, so
+        `fidelity.AggSpec`s — the same objects the parser makes.
+        `refresh_rollup` is DELTA-INVALIDATE, not delta-aggregate:
+        new/late/deleted data marks its windows' day partitions dirty and
+        those days are recomputed exactly from the base table — no merge algebra, so
         every aggregate (avg, stddev, percentiles) stays exact, and
         dynamic partition overwrite rewrites only the dirty days.
         """
@@ -1023,7 +1024,7 @@ class NexusEngine:
 
         new_last = self._seq - 1
         if dirty:
-            specs = [AggregationSpec(f, fld, al) for f, fld, al in meta["specs"]]
+            specs = [AggSpec(*s) for s in meta["specs"]]
             out = (self._rollup_compute(metric, iv, specs,
                                         day_filter=sorted(dirty))
                    .withColumn("wday", wday_of(F.col("window_start")))
@@ -1078,7 +1079,7 @@ class NexusEngine:
 
         meta = self._rollup_meta(name)
         metric, iv = meta["metric"], meta["interval_ns"]
-        specs = [AggregationSpec(f, fld, al) for f, fld, al in meta["specs"]]
+        specs = [AggSpec(*s) for s in meta["specs"]]
         wday_of = lambda c: c - F.pmod(c, F.lit(DAY_NS))  # noqa: E731
 
         stored = self.rollup(name)
@@ -1459,7 +1460,7 @@ class NexusEngine:
                    and q.end is not None and (q.end + 1) % iv == 0)
         if not aligned:
             return None
-        want = [(a.func, a.field, a.alias) for a in q.aggregations]
+        want = list(q.aggregations)
         # functions whose coarser windows re-aggregate EXACTLY from finer
         # ones (count/sum add; min/max nest; NaN propagation/blindness is
         # preserved because Spark applies the same rule at both levels).
@@ -1469,14 +1470,14 @@ class NexusEngine:
         exact_hit, coarse_hit = None, None
         for name, meta in self.rollups().items():
             if (meta["metric"] != q.metric
-                    or [tuple(s) for s in meta["specs"]] != want
+                    or [AggSpec(*s) for s in meta["specs"]] != want
                     or meta["last_seq"] != self._seq - 1):
                 continue
             r_iv = meta["interval_ns"]
             if r_iv == iv and exact_hit is None:
                 exact_hit = name
             elif (r_iv < iv and iv % r_iv == 0 and coarse_hit is None
-                  and all(f in _REAGG for f, _fl, _a in want)):
+                  and all(s.func in _REAGG for s in want)):
                 coarse_hit = name
         name = exact_hit or coarse_hit  # an exact rollup always wins
         if name is not None:
@@ -1496,17 +1497,16 @@ class NexusEngine:
                     df = df.filter(F.col("window_start") <= q.end)
                 ws = (F.col("window_start")
                       - F.pmod(F.col("window_start"), F.lit(iv)))
-                aggs = [_REAGG[f](F.col(a or f"{f}_{fl}"))
-                        .alias(a or f"{f}_{fl}") for f, fl, a in want]
+                aggs = [_REAGG[s.func](qcol(s.out_name)).alias(s.out_name)
+                        for s in want]
                 df = (df.withColumn("window_start", ws)
                       .groupBy("metric", "series_key", "window_start")
                       .agg(F.first("tags").alias("tags"), *aggs)
                       .withColumn("window_end",
                                   F.col("window_start") + F.lit(iv))
                       .select(*cols))
-            for k, v in (q.tags or {}).items():
-                df = df.filter(F.col("tags").getItem(k) == v)
-            df = apply_tag_matchers(df, q.tag_matchers)
+            df = apply_tag_matchers(tag_filter(df, q.tags or {}),
+                                    q.tag_matchers)
             if q.start is not None:
                 df = df.filter(F.col("window_start") >= q.start)
             if q.end is not None:

@@ -23,6 +23,9 @@ The rules a correctness oracle will hit (SURVEY.md §2.5):
   mergeable like the reference's t-digest.
 - result naming: ``<func>_<field>`` unless aliased; ``count(*)`` -> ``count_*``
   (core/aggregation.go:12-17).
+
+These rules are written once, here, over two input layouts: the wide frames
+of the query registry and the long points view the NBQL planner reads.
 """
 
 from __future__ import annotations
@@ -30,8 +33,11 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from nexusbase_spark.datamodel import field_columns
+
 
 def _nan() -> Column:
     return F.lit(float("nan"))
@@ -69,6 +75,8 @@ def parse_agg_func(func: str) -> tuple[str, float | None]:
 
 @dataclass(frozen=True)
 class AggSpec:
+    """One aggregate of a query: the registry's operators and NBQL's
+    parser both build these."""
     func: str            # count|sum|avg|min|max|first|last|frac|stddev|p<N>
     field: str           # field name, or '*' (count only)
     alias: str | None = None
@@ -80,16 +88,70 @@ class AggSpec:
         return self.alias or f"{self.func}_{self.field}"
 
 
+def order_key() -> Column:
+    """Global stream order (timestamp, series_key, seq desc) —
+    iterator/iterator.go:41-63. seq is negated so that an ascending struct
+    comparison puts the HIGHEST seq first among ties, like the heap does."""
+    return F.struct(F.col("ts"), F.col("series_key"), (-F.col("seq")).alias("nseq"))
+
+
+class WideLayout:
+    """One column per field (the registry's frames): a field is present
+    where its column is non-NULL, and string/boolean columns are invisible
+    to numeric aggregates (aggregator.go:50-54)."""
+
+    def __init__(self, df: DataFrame):
+        fields = set(field_columns(df))
+        self._types = {f.name: f.dataType.simpleString()
+                       for f in df.schema.fields if f.name in fields}
+
+    def point(self) -> Column:
+        return F.lit(1)
+
+    def present(self, field: str) -> Column:
+        return F.col(field)
+
+    def numeric(self, field: str) -> Column:
+        if self._types.get(field, "double") in ("string", "boolean"):
+            return F.lit(None).cast("double")
+        return F.col(field).cast("double")
+
+
+class LongLayout:
+    """One row per (point, field) plus one marker row per point (the
+    engine's points view, which NBQL reads). Every spec is gated on its
+    field name, so a whole spec list is one pass with no pivot; count(*)
+    counts the marker rows, i.e. POINTS, not field rows
+    (iterator/multi_field_aggregator.go:181-184); ints widen to double and
+    strings/bools carry neither f_double nor f_long."""
+
+    def point(self) -> Column:
+        return F.when(F.col("vtype") == "marker", F.lit(1))
+
+    def present(self, field: str) -> Column:
+        return F.when((F.col("field") == field) & (F.col("vtype") != "null"),
+                      F.lit(1))
+
+    def numeric(self, field: str) -> Column:
+        return F.when(F.col("field") == field,
+                      F.coalesce(F.col("f_double"), F.col("f_long").cast("double")))
+
+
+def layout_of(df: DataFrame, layout: str) -> WideLayout | LongLayout:
+    """The layout named ``layout`` ("wide" or "long") over ``df``. A layout
+    gives three columns per row: ``point()`` is non-NULL once per point
+    (count(*)), ``present(f)`` is non-NULL where field f has a value
+    (count(f)), and ``numeric(f)`` is f as a double, NULL where f is
+    absent or not numeric."""
+    if layout == "wide":
+        return WideLayout(df)
+    if layout == "long":
+        return LongLayout()
+    raise ValueError(f"unknown layout {layout!r}")
+
+
 def _nan_if_null(c: Column) -> Column:
     return F.coalesce(c, _nan())
-
-
-def _numeric(col: Column, dtype: str) -> Column:
-    """Numeric view of a field column: NULL for non-numeric types
-    (strings/bools are invisible to numeric aggs — aggregator.go:50-54)."""
-    if dtype in ("string", "boolean"):
-        return F.lit(None).cast("double")
-    return col.cast("double")
 
 
 def _finite_only(c: Column) -> Column:
@@ -127,8 +189,7 @@ def split_percentile_specs(specs: list[AggSpec],
 
 def build_agg_exprs(
     specs: list[AggSpec],
-    field_types: dict[str, str],
-    order_key: Column,
+    layout: WideLayout | LongLayout,
     *,
     skip_non_finite: bool,
     approx_percentile: bool = False,
@@ -136,9 +197,9 @@ def build_agg_exprs(
 ) -> list[Column]:
     """Build the aggregate expressions for one groupBy.
 
-    ``order_key`` is the orderable global-stream key (ts, series_key, seq)
-    used by first/last/frac. ``skip_non_finite=True`` = final-aggregation
-    semantics; ``False`` = downsampler semantics.
+    ``layout`` says how the input frame stores field values (``layout_of``).
+    first/last/frac order by ``order_key()``. ``skip_non_finite=True`` =
+    final-aggregation semantics; ``False`` = downsampler semantics.
 
     ``percentile_impl`` selects the p<N> estimator: ``"exact"`` (default;
     the DuckDB-oracle path), ``"approx"`` (Spark's built-in mergeable
@@ -164,20 +225,19 @@ def build_agg_exprs(
                 qs = pct_qs.setdefault(spec.field, [])
                 if q not in qs:
                     qs.append(q)
+    okey = order_key()
     exprs: list[Column] = []
     for spec in specs:
         func, q = parse_agg_func(spec.func)
         name = spec.out_name
         if func == "count" and spec.field == "*":
-            exprs.append(F.count(F.lit(1)).alias(name))
+            exprs.append(F.count(layout.point()).alias(name))
             continue
-        raw = F.col(spec.field)
-        dtype = field_types.get(spec.field, "double")
         if func == "count":
             # non-null count of ANY type (aggregator.go:45,246)
-            exprs.append(F.count(raw).alias(name))
+            exprs.append(F.count(layout.present(spec.field)).alias(name))
             continue
-        num = _numeric(raw, dtype)
+        num = layout.numeric(spec.field)
         if skip_non_finite:
             num = _finite_only(num)
         if func == "sum":
@@ -189,15 +249,15 @@ def build_agg_exprs(
             agg = F.min(v) if func == "min" else F.max(v)
             exprs.append(_nan_if_null(agg).alias(name))
         elif func == "first":
-            exprs.append(_nan_if_null(F.min_by(num, F.when(num.isNotNull(), order_key))).alias(name))
+            exprs.append(_nan_if_null(F.min_by(num, F.when(num.isNotNull(), okey))).alias(name))
         elif func == "last":
-            exprs.append(_nan_if_null(F.max_by(num, F.when(num.isNotNull(), order_key))).alias(name))
+            exprs.append(_nan_if_null(F.max_by(num, F.when(num.isNotNull(), okey))).alias(name))
         elif func == "frac":
             # (last-first)/first over numeric values in stream order
             # (aggregator.go:279-292)
             n = F.count(num)
-            first = F.min_by(num, F.when(num.isNotNull(), order_key))
-            last = F.max_by(num, F.when(num.isNotNull(), order_key))
+            first = F.min_by(num, F.when(num.isNotNull(), okey))
+            last = F.max_by(num, F.when(num.isNotNull(), okey))
             expr = (
                 F.when(n < 2, _nan())
                 .when(

@@ -1,5 +1,5 @@
 from nexusbase_spark.nbql.ast import (  # noqa: F401
-    AggregationSpec,
+    AggSpec,
     FlushStatement,
     PushStatement,
     QueryStatement,

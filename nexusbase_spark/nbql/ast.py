@@ -14,12 +14,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-
-@dataclass
-class AggregationSpec:
-    func: str               # count|sum|avg|min|max|first|last|frac|stddev|p<N>
-    field: str              # field name or '*'
-    alias: str | None = None
+from nexusbase_spark.functions.fidelity import AggSpec
 
 
 @dataclass
@@ -41,7 +36,7 @@ class QueryStatement:
     # non-equality tag matchers (extension): (key, op, value) with op in
     # {"!=", "=~", "!~"} — InfluxQL-style; reference grammar has = only
     tag_matchers: list[tuple[str, str, str]] = field(default_factory=list)
-    aggregations: list[AggregationSpec] = field(default_factory=list)
+    aggregations: list[AggSpec] = field(default_factory=list)
     downsample_interval: int | None = None   # ns (AGGREGATE BY <interval>)
     downsample_slide: int | None = None      # ns (… BY <size> SLIDE <slide>) — hopping windows
     emit_empty_windows: bool = False
@@ -94,7 +89,7 @@ class CreateRollupStatement:
     name: str
     metric: str
     interval: int                    # ns
-    aggregations: list[AggregationSpec] = field(default_factory=list)
+    aggregations: list[AggSpec] = field(default_factory=list)
 
 
 @dataclass

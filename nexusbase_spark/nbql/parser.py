@@ -32,7 +32,7 @@ from __future__ import annotations
 import re
 
 from nexusbase_spark.nbql.ast import (
-    AggregationSpec,
+    AggSpec,
     CreateRollupStatement,
     ExplainStatement,
     FlushStatement,
@@ -328,9 +328,9 @@ def _parse_push(t: _Tokens, batch: bool) -> PushStatement:
 _AGG_FUNC_RE = re.compile(r"^(count|sum|avg|min|max|first|last|frac|stddev|p\d+(?:\.\d+)?)$", re.I)
 
 
-def _parse_agg_list(t: _Tokens) -> list[AggregationSpec]:
+def _parse_agg_list(t: _Tokens) -> list[AggSpec]:
     t.expect("(")
-    specs: list[AggregationSpec] = []
+    specs: list[AggSpec] = []
     while True:
         func = t.next().lower()
         if not _AGG_FUNC_RE.match(func):
@@ -343,7 +343,7 @@ def _parse_agg_list(t: _Tokens) -> list[AggregationSpec]:
         alias = None
         if t.accept("AS"):
             alias = _unquote(t.next())
-        specs.append(AggregationSpec(func, fld, alias))
+        specs.append(AggSpec(func, fld, alias))
         if t.accept(")"):
             return specs
         t.expect(",")

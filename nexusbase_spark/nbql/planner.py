@@ -6,10 +6,10 @@ declarative filters (Catalyst pushes them into the parquet scan), the k-way
 merge + dedup happened in NexusEngine.points(), aggregation wraps become
 groupBy, and cursor/limit become a keyset predicate + TakeOrderedAndProject.
 
-Aggregation over the long format uses CONDITIONAL aggregates — one pass,
-no pivot, no join: every spec compiles to agg expressions gated on its
-field name. count(*) counts POINTS — the per-point marker rows — not field
-rows (iterator/multi_field_aggregator.go:181-184).
+Aggregates and windows are the operator library's (operators/aggregate,
+operators/downsample) over the long points layout (functions/fidelity
+LongLayout); this module keeps only what is NBQL's own: spec dedup, FILL
+PREVIOUS/LINEAR, column order, ORDER and LIMIT.
 """
 
 from __future__ import annotations
@@ -17,75 +17,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from nexusbase_spark.functions.fidelity import parse_agg_func, qcol
-from nexusbase_spark.nbql.ast import AggregationSpec, QueryStatement, ShowStatement
+from nexusbase_spark.functions.fidelity import AggSpec, qcol
+from nexusbase_spark.nbql.ast import QueryStatement, ShowStatement
+from nexusbase_spark.operators.aggregate import final_aggregate
+from nexusbase_spark.operators.downsample import downsample
+from nexusbase_spark.operators.timeseries import fill_forward, fill_linear
 
 _NAN = float("nan")
-
-
-def _nan() -> Column:
-    return F.lit(_NAN)
-
-
-def _order_key() -> Column:
-    # global stream order (ts, series_key, seq desc) — iterator/iterator.go:41-63
-    return F.struct(F.col("ts"), F.col("series_key"), (-F.col("seq")).alias("nseq"))
-
-
-def _long_agg_exprs(specs: list[AggregationSpec], *, skip_non_finite: bool,
-                    approx_percentile: bool = False) -> list[Column]:
-    exprs: list[Column] = []
-    for spec in specs:
-        func, q = parse_agg_func(spec.func)
-        name = spec.alias or f"{spec.func}_{spec.field}"
-        if func == "count" and spec.field == "*":
-            # count of points, not field rows: a plain conditional count
-            # over the per-point marker rows — map-side combinable,
-            # single-pass even mixed with other aggs
-            exprs.append(F.count(
-                F.when(F.col("vtype") == "marker", F.lit(1))).alias(name))
-            continue
-        here = F.col("field") == spec.field
-        present = here & (F.col("vtype") != "null")
-        if func == "count":
-            exprs.append(F.count(F.when(present, F.lit(1))).alias(name))
-            continue
-        num = F.when(here, F.coalesce(F.col("f_double"), F.col("f_long").cast("double")))
-        if skip_non_finite:
-            num = F.when(F.isnan(num) | num.isin(float("inf"), float("-inf")),
-                         F.lit(None)).otherwise(num)
-        key = F.when(num.isNotNull(), _order_key())
-        if func == "sum":
-            exprs.append(F.coalesce(F.sum(num), F.lit(0.0)).alias(name))
-        elif func == "avg":
-            exprs.append(F.coalesce(F.avg(num), _nan()).alias(name))
-        elif func in ("min", "max"):
-            v = num if skip_non_finite else F.when(F.isnan(num), F.lit(None)).otherwise(num)
-            exprs.append(F.coalesce(F.min(v) if func == "min" else F.max(v), _nan()).alias(name))
-        elif func == "first":
-            exprs.append(F.coalesce(F.min_by(num, key), _nan()).alias(name))
-        elif func == "last":
-            exprs.append(F.coalesce(F.max_by(num, key), _nan()).alias(name))
-        elif func == "frac":
-            n = F.count(num)
-            first, last = F.min_by(num, key), F.max_by(num, key)
-            exprs.append(
-                F.when(n < 2, _nan())
-                .when(first == 0.0,
-                      F.when(last == 0.0, F.lit(0.0))
-                      .when(last > 0.0, F.lit(float("inf")))
-                      .otherwise(F.lit(float("-inf"))))
-                .otherwise((last - first) / first)
-                .alias(name))
-        elif func == "stddev":
-            exprs.append(F.coalesce(F.stddev_samp(num), _nan()).alias(name))
-        elif func == "percentile":
-            agg = (F.percentile_approx(num, F.lit(q)) if approx_percentile
-                   else F.percentile(num, F.lit(q)))
-            exprs.append(F.coalesce(agg, _nan()).alias(name))
-        else:  # pragma: no cover
-            raise ValueError(func)
-    return exprs
 
 
 def _display(vtype: str = "vtype") -> Column:
@@ -157,114 +95,57 @@ def _dedup_specs(specs):
     distinct columns."""
     seen, out = set(), []
     for s in specs:
-        name = s.alias or f"{s.func}_{s.field}"
-        if name not in seen:
-            seen.add(name)
+        if s.out_name not in seen:
+            seen.add(s.out_name)
             out.append(s)
     return out
 
 
 def _plan_final(df: DataFrame, q: QueryStatement) -> DataFrame:
     """One row across ALL matching series, keyed by the bare metric
-    (engine2/adapter.go:1349-1364); final agg skips NaN/Inf inputs."""
-    exprs = _long_agg_exprs(_dedup_specs(q.aggregations),
-                            skip_non_finite=True)
-    return df.groupBy(F.lit(q.metric).alias("metric")).agg(*exprs)
+    (engine2/adapter.go:1349-1364); final agg skips NaN/Inf inputs. The
+    key is the statement's metric as a literal (a non-nullable column)."""
+    return final_aggregate(df.withColumn("metric", F.lit(q.metric)),
+                           _dedup_specs(q.aggregations), layout="long",
+                           keep_metric=True)
 
 
 def _plan_downsample(df: DataFrame, q: QueryStatement,
                      start: int | None, end: int | None, *,
                      series_df: DataFrame | None = None) -> DataFrame:
-    """Per-series epoch-aligned tumbling windows; the downsampler does NOT
-    skip NaN/Inf inputs (multi_field_downsampling_iterator.go:44-90).
-    With SLIDE (grammar extension) windows hop: each point's aligned starts
-    in (ts - size, ts] are enumerated narrowly before the same groupBy —
-    see operators/downsample.downsample_hopping for the arithmetic."""
-    iv = q.downsample_interval
-    slide = q.downsample_slide or iv
+    """Per-series epoch-aligned windows, hopping with SLIDE; the
+    downsampler does NOT skip NaN/Inf inputs
+    (multi_field_downsampling_iterator.go:44-90). EMIT EMPTY WINDOWS lays
+    the slide-stepped grid; FILL <const> is its empty-window value, and
+    FILL PREVIOUS/LINEAR rewrite the NaN-marked columns afterwards."""
     aggs = _dedup_specs(q.aggregations)
-    exprs = _long_agg_exprs(aggs, skip_non_finite=False)
-    if slide != iv:
-        ts = F.col("ts")
-        first = ts - iv - F.pmod(ts - iv, F.lit(slide)) + slide
-        last = ts - F.pmod(ts, F.lit(slide))
-        df = df.withColumn(
-            "window_start", F.explode(F.sequence(first, last, F.lit(slide))))
-        win = F.col("window_start")
-    else:
-        win = (F.col("ts") - F.col("ts") % F.lit(iv)).alias("window_start")
-    agg = (df.groupBy(F.col("metric"), F.col("series_key"), win)
-           .agg(F.first("tags").alias("tags"), *exprs))
-
-    if q.emit_empty_windows:
-        if start is None or end is None or end <= start:
-            raise ValueError("EMIT EMPTY WINDOWS requires a bounded FROM..TO range")
-        # grid stride = slide (== iv for tumbling): every aligned start
-        first = start - (start % slide)
-        last = end - 1 - ((end - 1 - first) % slide)
-        universe = df if series_df is None else series_df
-        series = (universe.groupBy("metric", "series_key")
-                  .agg(F.first("tags").alias("tags")))
-        grid = series.select(
-            "metric", "series_key", "tags",
-            F.explode(F.sequence(F.lit(first), F.lit(last), F.lit(slide))).alias("window_start"))
-        agg = grid.join(
-            agg.drop("tags").withColumn("__present", F.lit(True)),
-            ["metric", "series_key", "window_start"], "left")
-        for spec in aggs:
-            name = spec.alias or f"{spec.func}_{spec.field}"
-            fill = F.lit(0.0) if spec.func in ("count", "sum") else _nan()
-            agg = agg.withColumn(name, F.coalesce(qcol(name).cast("double"), fill))
-        if q.fill_previous:
-            # FILL PREVIOUS (grammar extension): LOCF the NaN-marked agg
-            # columns along each series' window timeline. count/sum mark
-            # empty windows with 0.0 (reference semantics) and are left
-            # alone; leading NaNs (no prior observation) stay NaN.
-            from nexusbase_spark.operators.timeseries import fill_forward
-
-            cols = [spec.alias or f"{spec.func}_{spec.field}"
-                    for spec in aggs
-                    if spec.func not in ("count", "sum")]
-            if cols:
-                agg = fill_forward(agg, ["metric", "series_key"], cols,
-                                   ts_col="window_start", is_missing=F.isnan)
-                for c in cols:
-                    agg = agg.withColumn(c, F.coalesce(qcol(c), _nan()))
-        if q.fill_value is not None:
-            # FILL <const> (InfluxQL fill(<value>)): the constant lands in
-            # EMPTY windows only, gated on the grid-join absence marker —
-            # a window whose aggregate is genuinely NaN because its input
-            # values were NaN (the downsampler deliberately keeps NaN)
-            # stays NaN (ADVICE r3: the previous isnan gate overwrote
-            # those too). count/sum keep the reference's 0.0 empty marker
-            # (same column policy as PREVIOUS/LINEAR).
-            for spec in aggs:
-                if spec.func in ("count", "sum"):
-                    continue
-                c = spec.alias or f"{spec.func}_{spec.field}"
-                agg = agg.withColumn(
-                    c, F.when(F.col("__present").isNull(),
-                              F.lit(float(q.fill_value))).otherwise(qcol(c)))
-        if q.fill_linear:
-            # FILL LINEAR (grammar extension): interpolate the NaN-marked
-            # agg columns between the surrounding observed windows
-            # (InfluxQL fill(linear)). count/sum keep their 0.0 empty
-            # marker; edges with no anchor on one side stay NaN.
-            from nexusbase_spark.operators.timeseries import fill_linear
-
-            cols = [spec.alias or f"{spec.func}_{spec.field}"
-                    for spec in aggs
-                    if spec.func not in ("count", "sum")]
-            for c in cols:
-                agg = agg.withColumn(
-                    c, F.when(F.isnan(qcol(c)), F.lit(None)).otherwise(qcol(c)))
-                agg = fill_linear(agg, ["metric", "series_key"], c,
-                                  ts_col="window_start")
-                agg = agg.withColumn(c, F.coalesce(qcol(c), _nan()))
-
-    if "__present" in agg.columns:
-        agg = agg.drop("__present")
-    agg = agg.withColumn("window_end", F.col("window_start") + F.lit(iv))
+    agg = downsample(
+        df, q.downsample_interval, aggs, layout="long",
+        slide=q.downsample_slide, emit_empty=q.emit_empty_windows,
+        q_start=start, q_end=end, series_universe=series_df,
+        empty_value=_NAN if q.fill_value is None else q.fill_value)
+    # count/sum mark empty windows with 0.0 (reference semantics) and are
+    # left alone by the fills; edges with no observation stay NaN
+    filled = [s.out_name for s in aggs if s.func not in ("count", "sum")]
+    if q.fill_previous:
+        # FILL PREVIOUS (grammar extension): LOCF along each series'
+        # window timeline
+        agg = fill_forward(agg, ["metric", "series_key"], filled,
+                           ts_col="window_start", is_missing=F.isnan)
+        for c in filled:
+            agg = agg.withColumn(c, F.coalesce(qcol(c), F.lit(_NAN)))
+    if q.fill_linear:
+        # FILL LINEAR (grammar extension): interpolate between the
+        # surrounding observed windows (InfluxQL fill(linear))
+        for c in filled:
+            agg = agg.withColumn(
+                c, F.when(F.isnan(qcol(c)), F.lit(None)).otherwise(qcol(c)))
+            agg = fill_linear(agg, ["metric", "series_key"], c,
+                              ts_col="window_start")
+            agg = agg.withColumn(c, F.coalesce(qcol(c), F.lit(_NAN)))
+    # the NBQL answer's column order (rollup meta.json records it too)
+    agg = agg.select("metric", "series_key", "window_start", "tags",
+                     *[qcol(s.out_name) for s in aggs], "window_end")
     order = [F.col("window_start"), F.col("series_key")]
     if q.sort_desc:
         order = [F.col("window_start").desc(), F.col("series_key").desc()]
@@ -303,7 +184,7 @@ def plan_show(engine, s: ShowStatement) -> DataFrame:
     if s.what == "rollups":
         # rollup inventory comes from the engine's meta files, not points
         rows = [(name, m["metric"], m["interval_ns"],
-                 ", ".join(a or f"{fn}_{fl}" for fn, fl, a in m["specs"]),
+                 ", ".join(AggSpec(*s_).out_name for s_ in m["specs"]),
                  m["last_seq"])
                 for name, m in engine.rollups().items()]
         return engine.spark.createDataFrame(

@@ -12,10 +12,7 @@ from nexusbase_spark.operators.mvcc import (  # noqa: F401
     apply_range_deletes,
 )
 from nexusbase_spark.operators.aggregate import final_aggregate  # noqa: F401
-from nexusbase_spark.operators.downsample import (  # noqa: F401
-    downsample,
-    downsample_hopping,
-)
+from nexusbase_spark.operators.downsample import downsample  # noqa: F401
 from nexusbase_spark.operators.order import (  # noqa: F401
     order_points,
     keyset_after,

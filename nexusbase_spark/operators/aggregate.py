@@ -14,51 +14,39 @@ scalable version of the reference's single-threaded fold.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from nexusbase_spark.datamodel import field_columns
-from nexusbase_spark.functions.fidelity import AggSpec, build_agg_exprs, qcol
-
-
-def _field_types(df: DataFrame) -> dict[str, str]:
-    return {f.name: f.dataType.simpleString() for f in df.schema.fields
-            if f.name in field_columns(df)}
-
-
-def _order_key():
-    # global stream order: (timestamp, series_key, seq desc) —
-    # iterator/iterator.go:41-63. seq is negated so that an ascending struct
-    # comparison puts the HIGHEST seq first among ties, like the heap does.
-    return F.struct(F.col("ts"), F.col("series_key"), (-F.col("seq")).alias("nseq"))
+from nexusbase_spark.functions.fidelity import (
+    AggSpec, build_agg_exprs, layout_of, qcol, resolve_percentile_impl,
+    split_percentile_specs)
 
 
 def final_aggregate(
     df: DataFrame,
     specs: list[AggSpec],
     *,
+    layout: str = "wide",
     approx_percentile: bool = False,
     percentile_impl: str | None = None,
     keep_metric: bool = False,
 ) -> DataFrame:
-    """One output row over the filtered frame (all series combined).
+    """One output row over the filtered frame (all series combined);
+    ``layout`` is how ``df`` stores its fields (``fidelity.layout_of``).
 
     With ``percentile_impl="tdigest"`` and a spec list mixing percentiles
     with other functions, the percentiles aggregate separately (grouped-
     agg pandas UDFs can't share an agg() with JVM aggregates) and the two
     single-row (or per-metric) results join back."""
-    from nexusbase_spark.functions.fidelity import (
-        resolve_percentile_impl, split_percentile_specs)
     impl = resolve_percentile_impl(approx_percentile, percentile_impl)
     jvm_specs, td_specs = split_percentile_specs(specs, impl)
-    ftypes, okey = _field_types(df), _order_key()
+    lay = layout_of(df, layout)
     if not (td_specs and jvm_specs):
-        exprs = build_agg_exprs(specs, ftypes, okey, skip_non_finite=True,
+        exprs = build_agg_exprs(specs, lay, skip_non_finite=True,
                                 percentile_impl=impl)
         if keep_metric:
             return df.groupBy("metric").agg(*exprs)
         return df.agg(*exprs)
-    jexprs = build_agg_exprs(jvm_specs, ftypes, okey, skip_non_finite=True)
-    texprs = build_agg_exprs(td_specs, ftypes, okey, skip_non_finite=True,
+    jexprs = build_agg_exprs(jvm_specs, lay, skip_non_finite=True)
+    texprs = build_agg_exprs(td_specs, lay, skip_non_finite=True,
                              percentile_impl="tdigest")
     names = [s.out_name for s in specs]
     if keep_metric:

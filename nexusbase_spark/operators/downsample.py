@@ -28,18 +28,18 @@ from pyspark.sql import functions as F
 from nexusbase_spark.functions.fidelity import (
     AggSpec,
     build_agg_exprs,
+    layout_of,
     qcol,
     resolve_percentile_impl,
     split_percentile_specs,
 )
-from nexusbase_spark.operators.aggregate import _field_types, _order_key
 
 
 def align(ts: int, interval_ns: int) -> int:
     return ts - (ts % interval_ns)
 
 
-def _grouped_agg(df: DataFrame, win, specs: list[AggSpec], *,
+def _grouped_agg(df: DataFrame, win, specs: list[AggSpec], *, layout: str,
                  skip_non_finite: bool, approx_percentile: bool,
                  percentile_impl: str | None) -> DataFrame:
     """groupBy (metric, series_key, tags, window_start) with the spec
@@ -50,7 +50,7 @@ def _grouped_agg(df: DataFrame, win, specs: list[AggSpec], *,
     either way."""
     impl = resolve_percentile_impl(approx_percentile, percentile_impl)
     jvm_specs, td_specs = split_percentile_specs(specs, impl)
-    ftypes, okey = _field_types(df), _order_key()
+    lay = layout_of(df, layout)
     # tags is NOT a grouping key: series_key is the canonical sorted-tag
     # encoding (datamodel.series_key_expr), so it determines tags exactly
     # and first(tags) per group is exact — same reasoning the emit-empty
@@ -60,16 +60,16 @@ def _grouped_agg(df: DataFrame, win, specs: list[AggSpec], *,
     # the map inside the shuffle KEY; as an aggregate it rides once per
     # group in the value (guide §2.3: narrower shuffle keys).
     if not (td_specs and jvm_specs):
-        exprs = build_agg_exprs(specs, ftypes, okey,
+        exprs = build_agg_exprs(specs, lay,
                                 skip_non_finite=skip_non_finite,
                                 percentile_impl=impl)
         out = df.groupBy(F.col("metric"), F.col("series_key"), win).agg(
             F.first("tags").alias("tags"), *exprs)
         return out.select("metric", "series_key", "tags", "window_start",
                           *[qcol(s.out_name) for s in specs])
-    jexprs = build_agg_exprs(jvm_specs, ftypes, okey,
+    jexprs = build_agg_exprs(jvm_specs, lay,
                              skip_non_finite=skip_non_finite)
-    texprs = build_agg_exprs(td_specs, ftypes, okey,
+    texprs = build_agg_exprs(td_specs, lay,
                              skip_non_finite=skip_non_finite,
                              percentile_impl="tdigest")
     jagg = df.groupBy(F.col("metric"), F.col("series_key"), win).agg(
@@ -86,18 +86,43 @@ def downsample(
     interval_ns: int,
     specs: list[AggSpec],
     *,
+    layout: str = "wide",
+    slide: int | None = None,
     emit_empty: bool = False,
     q_start: int | None = None,
     q_end: int | None = None,
+    empty_value: float = float("nan"),
     approx_percentile: bool = False,
     percentile_impl: str | None = None,
     series_universe: DataFrame | None = None,
 ) -> DataFrame:
-    """Per-series tumbling-window aggregation.
+    """Per-series window aggregation over ``df`` in ``layout``
+    (``fidelity.layout_of``).
 
     Output columns: metric, series_key, tags, window_start (ns, inclusive),
     window_end (= start + interval, engine2/adapter.go:1579-1601), then one
-    column per spec. ``emit_empty`` requires q_start/q_end.
+    column per spec. ``emit_empty`` requires q_start < q_end.
+
+    ``slide`` (ns, default ``interval_ns``) makes the windows HOP — absent
+    from the reference (SURVEY.md §2.10 "Sliding / session windows:
+    none"). Windows then start at every multiple of ``slide`` (epoch-
+    aligned like the tumbling windows) and span ``interval_ns``, a whole
+    multiple of ``slide``; a point with timestamp t belongs to the aligned
+    starts in (t - interval, t]. Those starts are enumerated NARROWLY per
+    row (sequence + explode — no join against a window grid), then the
+    same groupBy. Input amplification is exactly interval/slide — the
+    irreducible cost of overlapping windows — and the exchange carries
+    (series x windows) groups, not rows. Integer arithmetic throughout
+    (pmod, never `/`): ns timestamps exceed 2^53, so a double division
+    would corrupt the alignment; and unlike SQL `div` (truncates toward
+    zero), pmod keeps the alignment FLOORED for pre-epoch values of
+    ts - interval, matching DuckDB's `//`.
+
+    Empty windows (``emit_empty``) are laid on a grid stepping by the
+    slide; their count/sum columns hold 0.0 and every other column holds
+    ``empty_value`` (NaN, the reference's marker, unless the caller fills
+    with a constant). A window with data never takes ``empty_value``: its
+    aggregates are never NULL, so a NaN there came from the data.
 
     ``series_universe``: the frame the empty-window SERIES GRID derives
     from — pass the metric/tag-matched points WITHOUT the time-range
@@ -107,22 +132,35 @@ def downsample(
     (multi_field_downsampling_iterator.go:305-333 operates per resolved
     series). Defaulting to ``df`` (the range-filtered input) silently
     drops such series — caught by the sf0.1 oracle run, round 3."""
-    if interval_ns <= 0:
-        raise ValueError("interval must be positive")
-    win = (F.col("ts") - F.col("ts") % F.lit(interval_ns)).alias("window_start")
-    agg = _grouped_agg(df, win, specs, skip_non_finite=False,
+    slide = interval_ns if slide is None else slide
+    if interval_ns <= 0 or slide <= 0:
+        raise ValueError("interval and slide must be positive")
+    if interval_ns % slide:
+        raise ValueError("interval must be a whole multiple of slide")
+    ts = F.col("ts")
+    rows = df
+    if slide == interval_ns:
+        win = (ts - ts % F.lit(interval_ns)).alias("window_start")
+    else:
+        # smallest aligned start > ts - interval; largest aligned start <= ts
+        first = ts - interval_ns - F.pmod(ts - interval_ns, F.lit(slide)) + slide
+        last = ts - F.pmod(ts, F.lit(slide))
+        rows = df.withColumn(
+            "window_start", F.explode(F.sequence(first, last, F.lit(slide))))
+        win = F.col("window_start")
+    agg = _grouped_agg(rows, win, specs, layout=layout, skip_non_finite=False,
                        approx_percentile=approx_percentile,
                        percentile_impl=percentile_impl)
 
     if emit_empty:
-        if q_start is None or q_end is None:
-            raise ValueError("emit_empty requires q_start and q_end")
-        if q_end <= q_start:
-            raise ValueError("emit_empty requires q_start < q_end")
-        first = align(q_start, interval_ns)
+        if q_start is None or q_end is None or q_end <= q_start:
+            raise ValueError(
+                "EMIT EMPTY WINDOWS requires a bounded FROM..TO range "
+                "(q_start < q_end)")
+        first = align(q_start, slide)
         # windows enumerate while windowStart < qEnd (:180); sequence() is
-        # inclusive so step back one interval from the first start >= qEnd.
-        last = q_end - 1 - ((q_end - 1 - first) % interval_ns)
+        # inclusive so step back one slide from the first start >= qEnd.
+        last = q_end - 1 - ((q_end - 1 - first) % slide)
         # map columns can't be DISTINCTed; series_key determines tags, so an
         # any-value per key is exact.
         universe = df if series_universe is None else series_universe
@@ -131,63 +169,16 @@ def downsample(
         grid = series.select(
             "metric", "series_key", "tags",
             F.explode(
-                F.sequence(F.lit(first), F.lit(last), F.lit(interval_ns))
+                F.sequence(F.lit(first), F.lit(last), F.lit(slide))
             ).alias("window_start"),
         )
-        zero_or_nan = {
-            s.out_name: F.lit(0.0) if s.func in ("count", "sum") else F.lit(float("nan"))
-            for s in specs
-        }
         # map columns aren't joinable; series_key determines tags, so join on
         # the key and keep the grid's tags column.
         agg = grid.join(agg.drop("tags"),
                         ["metric", "series_key", "window_start"], "left")
         for s in specs:
+            empty = 0.0 if s.func in ("count", "sum") else empty_value
             name = s.out_name  # qcol: p99.9_lat carries a dot
-            agg = agg.withColumn(name, F.coalesce(qcol(name), zero_or_nan[name]))
+            agg = agg.withColumn(name, F.coalesce(qcol(name), F.lit(float(empty))))
 
     return agg.withColumn("window_end", F.col("window_start") + F.lit(interval_ns))
-
-
-def downsample_hopping(
-    df: DataFrame,
-    size_ns: int,
-    slide_ns: int,
-    specs: list[AggSpec],
-    *,
-    approx_percentile: bool = False,
-    percentile_impl: str | None = None,
-) -> DataFrame:
-    """Per-series HOPPING (sliding) window aggregation — absent from the
-    reference (SURVEY.md §2.10 "Sliding / session windows: none"); with
-    slide == size it degenerates to the tumbling ``downsample``.
-
-    Windows start at every multiple of ``slide_ns`` (epoch-aligned like the
-    tumbling operator) and span ``size_ns``; a point with timestamp t
-    belongs to the size/slide aligned starts in (t - size, t]. Those
-    starts are enumerated NARROWLY per row (sequence + explode — no join
-    against a window grid), then one groupBy on (series, window_start)
-    with map-side partial aggregation. Input amplification is exactly
-    size/slide — the irreducible cost of overlapping windows — and the
-    exchange carries (series x windows) groups, not rows.
-
-    Integer arithmetic throughout (pmod, never `/`): ns timestamps exceed
-    2^53, so a double division would corrupt the alignment; and unlike
-    SQL `div` (truncates toward zero), pmod keeps the alignment FLOORED
-    for pre-epoch values of ts - size, matching DuckDB's `//`.
-    """
-    if size_ns <= 0 or slide_ns <= 0:
-        raise ValueError("size and slide must be positive")
-    if size_ns % slide_ns:
-        raise ValueError("size must be a whole multiple of slide")
-    ts = F.col("ts")
-    # smallest aligned start > ts - size; largest aligned start <= ts
-    first = ts - size_ns - F.pmod(ts - size_ns, F.lit(slide_ns)) + slide_ns
-    last = ts - F.pmod(ts, F.lit(slide_ns))
-    hopped = df.withColumn(
-        "window_start", F.explode(F.sequence(first, last, F.lit(slide_ns))))
-    agg = _grouped_agg(hopped, F.col("window_start"), specs,
-                       skip_non_finite=False,
-                       approx_percentile=approx_percentile,
-                       percentile_impl=percentile_impl)
-    return agg.withColumn("window_end", F.col("window_start") + F.lit(size_ns))

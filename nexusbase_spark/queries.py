@@ -32,7 +32,6 @@ from nexusbase_spark.operators import (
     apply_series_deletes,
     dedup_latest,
     downsample,
-    downsample_hopping,
     final_aggregate,
     keyset_after,
     metric_filter,
@@ -276,12 +275,12 @@ def q_downsample_hopping(spark, sf_dir):
     """Hopping (sliding) windows: 6h windows every 2h, per series — the
     window family the reference lacks (SURVEY.md §2.10); each point lands
     in exactly size/slide = 3 windows, enumerated narrowly before ONE
-    (series, window) groupBy (operators/downsample.downsample_hopping)."""
+    (series, window) groupBy (operators/downsample.downsample, slide=)."""
     pts = load_points(spark, sf_dir)
     sel = time_range(metric_filter(pts, "click"), T1, T2)
-    out = downsample_hopping(sel, 6 * HOUR_NS, 2 * HOUR_NS, [
+    out = downsample(sel, 6 * HOUR_NS, [
         AggSpec("count", "value"), AggSpec("avg", "value"), AggSpec("max", "value"),
-    ])
+    ], slide=2 * HOUR_NS)
     out = out.withColumn("user", F.col("tags").getItem("user"))
     out = out.select("metric", "user", "window_start", "window_end",
                      "count_value", "avg_value", "max_value")

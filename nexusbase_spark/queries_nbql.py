@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from nexusbase_spark.datamodel import load_table, series_key_expr, source_ts_ns
 from nexusbase_spark.engine import apply_tag_matchers
 from nexusbase_spark.nbql.parser import parse
+from nexusbase_spark.operators.scan import tag_filter
 from nexusbase_spark.queries import DAY_NS, T1, T2, register
 
 
@@ -32,9 +33,7 @@ class StaticEngine:
         df = self._points
         if metric is not None:
             df = df.filter(F.col("metric") == metric)
-        for k, v in (tags or {}).items():
-            df = df.filter(F.col("tags").getItem(k) == v)
-        df = apply_tag_matchers(df, matchers)
+        df = apply_tag_matchers(tag_filter(df, tags or {}), matchers)
         if start is not None:
             df = df.filter(F.col("ts") >= start)
         if end is not None:
@@ -186,7 +185,7 @@ HOP_SLIDE = 2 * 3600 * 1_000_000_000
 def q_nbql_hopping(spark, sf_dir):
     """Full NBQL text -> parse -> plan with the SLIDE grammar extension:
     AGGREGATE BY 6h SLIDE 2h — hopping windows from the language front end
-    (planner reuses the narrow start-enumeration of downsample_hopping)."""
+    (the planner calls operators/downsample.downsample with slide=)."""
     eng = _engine(spark, sf_dir)
     df = eng.execute(
         f"QUERY click FROM {T1} TO {T2} "
@@ -327,7 +326,7 @@ def _rollup_engine(spark: SparkSession, sf_dir: str):
     import tempfile
 
     from nexusbase_spark.engine import NexusEngine
-    from nexusbase_spark.nbql.ast import AggregationSpec
+    from nexusbase_spark.functions.fidelity import AggSpec
 
     if sf_dir not in _ROLLUP_CACHE:
         ev = load_table(spark, sf_dir, "events").filter(
@@ -347,8 +346,8 @@ def _rollup_engine(spark: SparkSession, sf_dir: str):
         eng = NexusEngine(spark, wh)
         eng.ingest_frame(long.filter(F.col("__eid") % 3 != 0).drop("__eid"))
         eng.create_rollup("click1d", "click", DAY_NS, [
-            AggregationSpec("count", "*"), AggregationSpec("sum", "value"),
-            AggregationSpec("avg", "value")])
+            AggSpec("count", "*"), AggSpec("sum", "value"),
+            AggSpec("avg", "value")])
         eng.ingest_frame(long.filter(F.col("__eid") % 3 == 0).drop("__eid"))
         eng.refresh_rollup("click1d")
         _ROLLUP_CACHE[sf_dir] = eng

@@ -202,7 +202,10 @@ class _Handler(socketserver.BaseRequestHandler):
     def _dispatch(self, cmd: int, payload: bytes) -> None:
         text = payload.decode("utf-8")
         if cmd in (CMD_PUSH, CMD_PUSHS, CMD_MANIPULATE):
-            self.engine.execute(text)
+            # the same path as QUERY frames (a read-only statement takes
+            # the read guard), but one end frame whatever the statement:
+            # NBQLClient.push reads exactly one
+            execute_to_json(self.engine, text)
             write_frame(self.request, RESP_END, json.dumps({"total_rows": 0}).encode())
             return
         if cmd == CMD_QUERY:

@@ -7,7 +7,8 @@ import pytest
 
 from nexusbase_spark.cache import LRUCache, query_cache_key
 from nexusbase_spark.engine import NexusEngine
-from nexusbase_spark.nbql.ast import AggregationSpec, QueryStatement
+from nexusbase_spark.functions.fidelity import AggSpec
+from nexusbase_spark.nbql.ast import QueryStatement
 from nexusbase_spark.streaming.hooks import HookBus, WriteAmplificationListener
 
 MIN = 60 * 1_000_000_000
@@ -111,13 +112,48 @@ def test_cache_key_canonical():
         QueryStatement("cpu", start=1, end=2, tags={"h": "1", "r": "x"},
                        sort_desc=True))
     ds = QueryStatement("cpu", start=1, end=2,
-                        aggregations=[AggregationSpec("avg", "v")],
+                        aggregations=[AggSpec("avg", "v")],
                         downsample_interval=MIN)
     fin = QueryStatement("cpu", start=1, end=2,
-                         aggregations=[AggregationSpec("avg", "v")])
+                         aggregations=[AggSpec("avg", "v")])
     assert query_cache_key(ds) != query_cache_key(fin)
     rel = QueryStatement("cpu", relative=MIN)
-    assert "REL:" in query_cache_key(rel)
+    assert query_cache_key(rel) != query_cache_key(
+        QueryStatement("cpu", relative=2 * MIN))
+    assert query_cache_key(rel) != query_cache_key(
+        QueryStatement("cpu", start=0, end=MIN))
+
+
+def test_cache_key_covers_every_clause(spark, tmp_path_factory):
+    """Statements that can answer differently never share a key: tag
+    matchers, SLIDE and every FILL mode take part, LIMIT/AFTER and tag
+    order do not. With the cache on, a negated matcher is answered from
+    its own rows, not from the plain matcher's cached ones."""
+    from nexusbase_spark.nbql.parser import parse
+
+    ds = "QUERY cpu FROM 0 TO 100 AGGREGATE BY 2h {} (avg(v)) EMIT EMPTY WINDOWS {}"
+    groups = [
+        ['QUERY cpu FROM 0 TO 100 TAGGED (host=~"a.*")',
+         'QUERY cpu FROM 0 TO 100 TAGGED (host!~"a.*")',
+         'QUERY cpu FROM 0 TO 100 TAGGED (host!="a")',
+         'QUERY cpu FROM 0 TO 100'],
+        [ds.format(s, f) for s in ("", "SLIDE 1h")
+         for f in ("", "FILL PREVIOUS", "FILL LINEAR", "FILL 0", "FILL 1")],
+    ]
+    for texts in groups:
+        keys = [query_cache_key(parse(t)) for t in texts]
+        assert len(set(keys)) == len(keys), texts
+    assert (query_cache_key(parse('QUERY cpu FROM 0 TO 9 TAGGED (a="1", b="2") LIMIT 3'))
+            == query_cache_key(parse('QUERY cpu FROM 0 TO 9 TAGGED (b="2", a="1")')))
+
+    eng = NexusEngine(spark, str(tmp_path_factory.mktemp("cache_key_wh")),
+                      cache_capacity=8)
+    eng.put_batch([("cache.m", {"host": h}, {"v": 1.0}, BASE)
+                   for h in ("a1", "b1", "b2")])
+    q = 'QUERY cache.m FROM 0 TO {} TAGGED (host{}"a.*") AGGREGATE (count(*))'
+    hit = eng.execute(q.format(2 * BASE, "=~")).collect()[0]["count_*"]
+    miss = eng.execute(q.format(2 * BASE, "!~")).collect()[0]["count_*"]
+    assert (hit, miss) == (1, 2)
 
 
 @pytest.fixture()

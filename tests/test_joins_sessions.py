@@ -101,7 +101,7 @@ def test_sessionize_exact_gap_continues_strict_gap_splits(spark):
 
 def test_downsample_hopping_membership_and_tumbling_degeneration(spark):
     from nexusbase_spark.functions.fidelity import AggSpec
-    from nexusbase_spark.operators import downsample, downsample_hopping
+    from nexusbase_spark.operators import downsample
 
     rows = [("m", "m|", {}, 0, 1.0), ("m", "m|", {}, 19, 3.0), ("m", "m|", {}, 20, 5.0)]
     df = spark.createDataFrame(
@@ -109,7 +109,7 @@ def test_downsample_hopping_membership_and_tumbling_degeneration(spark):
     specs = [AggSpec("count", "value"), AggSpec("sum", "value")]
 
     out = {r["window_start"]: r for r in
-           downsample_hopping(df, 20, 10, specs).collect()}
+           downsample(df, 20, specs, slide=10).collect()}
     # ts=0 -> starts {-10, 0}; ts=19 -> {10}... ts in (start, start+20]?? No:
     # membership is start <= ts < start+20, starts in (ts-20, ts]:
     # ts=0 -> {-10, 0}; ts=19 -> {0, 10}; ts=20 -> {10, 20}.
@@ -121,7 +121,7 @@ def test_downsample_hopping_membership_and_tumbling_degeneration(spark):
 
     # slide == size must reproduce the tumbling operator exactly
     hop = {(r["window_start"], r["count_value"], r["sum_value"])
-           for r in downsample_hopping(df, 10, 10, specs).collect()}
+           for r in downsample(df, 10, specs, slide=10).collect()}
     tum = {(r["window_start"], r["count_value"], r["sum_value"])
            for r in downsample(df, 10, specs).collect()}
     assert hop == tum

@@ -387,6 +387,22 @@ def test_multi_percentile_shares_one_buffer(spark, qs):
     assert "[0.5,0.95,0.99]" in phys
 
 
+def test_nbql_multi_percentile_shares_one_buffer(spark):
+    """NBQL aggregates compile through the operator library, so an NBQL
+    p50/p95/p99 of one field shares ONE percentile buffer as well."""
+    import re
+
+    from nexusbase_spark.queries import T1, T2
+    from nexusbase_spark.queries_nbql import _engine
+
+    df = _engine(spark, SF_DIR).execute(
+        f"QUERY click FROM {T1} TO {T2} "
+        "AGGREGATE (p50(value), p95(value), p99(value))")
+    phys = _plan(df).split("== Physical Plan ==", 1)[1]
+    partials = re.findall(r"partial_percentile\(", phys)
+    assert len(partials) == 1, len(partials)
+
+
 def test_minhash_signatures_materialized_below_selfjoin(spark, qs):
     """The LSH kernel's persist holds the k min-hash SIGNATURES, not just
     the per-shingle hashes: both candidate self-join sides read h0..h7

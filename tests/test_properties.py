@@ -502,7 +502,7 @@ def test_param_string_value_roundtrips_through_quoting(v):
 
 # ---------------------------------------------------------------------------
 # Differential property tests for the core §2.5b windowing operators: the
-# Spark downsample / downsample_hopping vs a brute-force pure-Python model
+# Spark downsample (tumbling and hopping) vs a brute-force pure-Python model
 # of the documented semantics (epoch alignment, per-series grouping,
 # NaN-keep with NaN-blind min/max, emit-empty zero/NaN fills, hopping
 # membership (t - size, t]). The fixed-parameter oracle gates pin three
@@ -621,7 +621,6 @@ def test_downsample_hopping_matches_bruteforce_model(spark, data):
     tumbling downsample row-for-row."""
     from nexusbase_spark.functions.fidelity import AggSpec
     from nexusbase_spark.operators import downsample
-    from nexusbase_spark.operators.downsample import downsample_hopping
 
     pts = data.draw(st.lists(
         st.tuples(st.integers(0, 2), st.integers(0, 149), _VALS),
@@ -632,7 +631,7 @@ def test_downsample_hopping_matches_bruteforce_model(spark, data):
     df = _points_df(spark, pts)
     specs = [AggSpec("count", "value"), AggSpec("sum", "value"),
              AggSpec("min", "value"), AggSpec("max", "value")]
-    out = downsample_hopping(df, size, slide, specs).collect()
+    out = downsample(df, size, specs, slide=slide).collect()
 
     by_key: dict = {}
     for h, ts, v in pts:

@@ -9,12 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from nexusbase_spark.engine import NexusEngine
-from nexusbase_spark.nbql.ast import AggregationSpec
+from nexusbase_spark.functions.fidelity import AggSpec
 
 DAY = 86_400 * 1_000_000_000
 D0 = 1_700_006_400 * 1_000_000_000  # UTC midnight
-SPECS = [AggregationSpec("count", "*"), AggregationSpec("sum", "v"),
-         AggregationSpec("avg", "v")]
+SPECS = [AggSpec("count", "*"), AggSpec("sum", "v"),
+         AggSpec("avg", "v")]
 
 
 @pytest.fixture()
@@ -358,8 +358,8 @@ def test_rollup_rewrite_coarser_reaggregation(eng):
     the 1-day rollup by re-windowing (rollup_rewrites increments) and
     equals the direct plan; avg disqualifies the coarser path; an
     exact-interval rollup outranks re-aggregation."""
-    specs = [AggregationSpec("count", "*"), AggregationSpec("sum", "v"),
-             AggregationSpec("min", "v"), AggregationSpec("max", "v")]
+    specs = [AggSpec("count", "*"), AggSpec("sum", "v"),
+             AggSpec("min", "v"), AggSpec("max", "v")]
     eng.create_rollup("fine", "m", DAY, specs)
     t1, t2 = D0, D0 + 4 * DAY - 1          # 2 aligned 2-day windows
     q = (f"QUERY m FROM {t1} TO {t2} AGGREGATE BY 2d "

@@ -1235,7 +1235,7 @@ def test_streaming_soak_all_stores_one_stream(spark, tmp_path):
     proves is the absence of cross-store interference and checkpoint
     collisions when they all hang off one query."""
     from nexusbase_spark.engine import NexusEngine
-    from nexusbase_spark.nbql.ast import AggregationSpec
+    from nexusbase_spark.functions.fidelity import AggSpec
     from nexusbase_spark.operators.sketches import CMSStore, cms_build
     from nexusbase_spark.pipeline.dedup_index import DedupIndex
     from nexusbase_spark.pipeline.invindex import InvertedIndex
@@ -1279,8 +1279,8 @@ def test_streaming_soak_all_stores_one_stream(spark, tmp_path):
     eng = NexusEngine(spark, str(tmp_path / "wh"))
     eng.put_batch([("doc.len", {"src": "soak"}, {"v": 1.0}, D0)])
     eng.create_rollup("r", "doc.len", DAY,
-                      [AggregationSpec("count", "*"),
-                       AggregationSpec("sum", "v")])
+                      [AggSpec("count", "*"),
+                       AggSpec("sum", "v")])
 
     from pyspark.sql import functions as F
     sinks = [stats.for_each_batch(), vx.for_each_batch(),

@@ -11,7 +11,8 @@ import pytest
 
 from nexusbase_spark.engine import NexusEngine
 from nexusbase_spark.tcp_server import (
-    CMD_QUERY, RESP_ERROR, NBQLClient, crc32c, read_frame, serve_tcp, write_frame,
+    CMD_MANIPULATE, CMD_QUERY, RESP_END, RESP_ERROR, NBQLClient, crc32c,
+    read_frame, serve_tcp, write_frame,
 )
 
 
@@ -86,6 +87,35 @@ def test_manipulate_remove_via_tcp(tcp):
         assert end["total_rows"] == 0
     finally:
         c.close()
+
+
+def test_manipulate_frame_read_statement_takes_read_guard(spark, tmp_path_factory):
+    """Every frame runs through server.execute_to_json: a read-only
+    statement in a MANIPULATE frame (VERIFY ROLLUP runs Spark jobs) holds
+    the engine's read guard, which FLUSH, compact and restore wait on,
+    and the frame still gets exactly one end frame."""
+    eng = NexusEngine(spark, str(tmp_path_factory.mktemp("tcpguard_wh")))
+    eng.put("guard.m", {"h": "a"}, {"v": 1.0}, 100)
+    eng.execute("CREATE ROLLUP g ON guard.m AGGREGATE BY 1h (count(*))")
+    guard, entered = eng.read_guard, []
+
+    def counting_guard():
+        entered.append(True)
+        return guard()
+
+    eng.read_guard = counting_guard
+    srv = serve_tcp(eng, port=0)
+    c = NBQLClient("127.0.0.1", srv.server_address[1])
+    try:
+        write_frame(c.sock, CMD_MANIPULATE, b"VERIFY ROLLUP g")
+        cmd, body = read_frame(c.sock)
+        assert (cmd, json.loads(body)) == (RESP_END, {"total_rows": 0})
+        assert entered
+        rows, end = c.query("QUERY guard.m FROM 0 TO 1000")
+        assert end["total_rows"] == 1
+    finally:
+        c.close()
+        srv.shutdown()
 
 
 @pytest.mark.nightly
