@@ -992,34 +992,27 @@ class NexusEngine:
                            .alias("wd")).distinct())
         dirty |= {r["wd"] for r in new_pts.collect()}
 
-        roll = self.rollup(name).select("series_key", "window_start")
-        if "point" in tombs:
-            # semi-join against the rollup's own (series, window) so point
-            # deletes on unrelated metrics/series don't dirty days here —
-            # without it, refresh cost scales with GLOBAL delete traffic.
-            # A point both ingested and deleted since the last refresh is
-            # covered by the new-points branch above (its row has
-            # seq > last), so windows absent from the rollup need no
-            # tombstone-driven recompute.
-            tomb = tombs["point"].filter(F.col("seq") > last)
-            hit = (tomb.withColumn(
-                       "window_start",
-                       F.col("ts") - F.pmod(F.col("ts"), F.lit(iv)))
-                   .join(roll, ["series_key", "window_start"], "left_semi")
+        # every tombstone kind as a (series_key, [min_ts, max_ts]) span —
+        # a point delete is [ts, ts], a series delete is all of time — so
+        # one overlap join against the rollup's own (series, window) finds
+        # the dirty days; deletes on unrelated metrics/series match no
+        # rollup row, so refresh cost never scales with GLOBAL delete
+        # traffic. A point both ingested and deleted since the last
+        # refresh is covered by the new-points branch above.
+        spans = {"point": (F.col("ts"), F.col("ts")),
+                 "range": (F.col("min_ts"), F.col("max_ts")),
+                 "series": (F.lit(-2 ** 63), F.lit(2 ** 63 - 1))}
+        new_tombs = [tombs[k].filter(F.col("seq") > last)
+                     .select("series_key", lo.alias("lo"), hi.alias("hi"))
+                     for k, (lo, hi) in spans.items() if k in tombs]
+        if new_tombs:
+            roll = self.rollup(name).select("series_key", "window_start")
+            tomb = functools.reduce(DataFrame.union, new_tombs)
+            hit = (roll.join(tomb, "series_key")
+                   .filter((F.col("window_start") + iv > F.col("lo"))
+                           & (F.col("window_start") <= F.col("hi")))
                    .select(wday_of(F.col("window_start")).alias("wd"))
                    .distinct())
-            dirty |= {r["wd"] for r in hit.collect()}
-        if "range" in tombs:
-            tomb = tombs["range"].filter(F.col("seq") > last)
-            hit = (roll.join(tomb, (roll["series_key"] == tomb["series_key"])
-                             & (roll["window_start"] + iv > tomb["min_ts"])
-                             & (roll["window_start"] <= tomb["max_ts"]))
-                   .select(wday_of(roll["window_start"]).alias("wd")).distinct())
-            dirty |= {r["wd"] for r in hit.collect()}
-        if "series" in tombs:
-            tomb = tombs["series"].filter(F.col("seq") > last)
-            hit = (roll.join(tomb, "series_key")
-                   .select(wday_of(roll["window_start"]).alias("wd")).distinct())
             dirty |= {r["wd"] for r in hit.collect()}
 
         new_last = self._seq - 1
@@ -1029,17 +1022,19 @@ class NexusEngine:
                                         day_filter=sorted(dirty))
                    .withColumn("wday", wday_of(F.col("window_start")))
                    .persist())
-            # dynamic partition overwrite: only the dirty wday dirs move.
-            # ``out`` is persisted and the day-set collect below runs
-            # BEFORE the exclusive section, so readers are only blocked
-            # for the directory swaps, not the recompute
-            still = {r["wday"] for r in out.select("wday").distinct().collect()}
-            with_conf = self.spark.conf
-            prev = with_conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            with_conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
             try:
+                # ``out`` is persisted and the day-set collect below runs
+                # BEFORE the exclusive section, so readers are only
+                # blocked for the directory swaps, not the recompute
+                still = {r["wday"] for r in
+                         out.select("wday").distinct().collect()}
                 with self._scan_rw.write():
-                    (out.write.mode("overwrite").partitionBy("wday")
+                    # dynamic partition overwrite, set on this write only
+                    # (never on the shared session): just the dirty wday
+                    # dirs move
+                    (out.write.mode("overwrite")
+                     .option("partitionOverwriteMode", "dynamic")
+                     .partitionBy("wday")
                      .parquet(os.path.join(self._rollup_dir(name), "data")))
                     # a dirty day whose data was FULLY deleted produces no
                     # output rows, so dynamic overwrite never touches its
@@ -1050,88 +1045,62 @@ class NexusEngine:
                             os.path.join(self._rollup_dir(name), "data",
                                          f"wday={wd}"), ignore_errors=True)
             finally:
-                with_conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-            out.unpersist()
+                out.unpersist()
         meta["last_seq"] = new_last
         self._write_rollup_meta(name, meta)
         return len(dirty)
 
-    def verify_rollup(self, name: str, sample_days: int | None = None,
-                      salt: str = "verify-v1", tol: float = 1e-9) -> dict:
+    def verify_rollup(self, name: str, sample_days: int | None = None) -> dict:
         """Consistency audit: recompute a (sampled) set of day partitions
         from the base table and diff them against the materialized rollup.
         The 100 TB ops answer to "do I trust this materialization" — a
         full recompute per check is exactly what the rollup exists to
-        avoid, so the audit samples days deterministically (salted md5 of
-        the day, so successive runs with higher ``sample_days`` audit
-        supersets) and recomputes only those.
+        avoid, so the audit samples days with the stores' pinned sampler
+        (``ParquetStore._pinned_sample``: successive runs with higher
+        ``sample_days`` audit supersets) and recomputes only those.
 
         Day universe = stored days UNION base-data days, so a day the
         refresh missed entirely (or a stale day whose base data was
-        deleted) is still auditable. Float aggregates compare within
-        ``tol`` (NaN == NaN): recompute shuffles in a different partition
-        order, so last-ulp float-sum drift is expected, not corruption.
+        deleted) is still auditable. Rows diff through
+        ``expectations.table_diff`` on (series_key, window_start); float
+        aggregates compare within 1e-9, since the recompute shuffles in a
+        different partition order and last-ulp float-sum drift is
+        expected, not corruption.
 
         Returns {"days_total", "days_checked", "checked": [...],
         "mismatched_days": [...], "ok": bool}.
         """
-        import hashlib
+        from nexusbase_spark.pipeline.expectations import table_diff
+        from nexusbase_spark.store import ParquetStore
 
         meta = self._rollup_meta(name)
         metric, iv = meta["metric"], meta["interval_ns"]
         specs = [AggSpec(*s) for s in meta["specs"]]
-        wday_of = lambda c: c - F.pmod(c, F.lit(DAY_NS))  # noqa: E731
-
-        stored = self.rollup(name)
-        stored_days = {r["wd"] for r in stored.select(
-            wday_of(F.col("window_start")).alias("wd")).distinct().collect()}
+        wday = F.col("window_start") - F.pmod(F.col("window_start"),
+                                              F.lit(DAY_NS))
         ws = F.col("ts") - F.pmod(F.col("ts"), F.lit(iv))
-        base_days = {r["wd"] for r in self.points(metric).select(
-            wday_of(ws).alias("wd")).distinct().collect()}
-        days = sorted(stored_days | base_days)
-        if sample_days is not None and sample_days < len(days):
-            ranked = sorted(days, key=lambda d: hashlib.md5(
-                f"{salt}:{d}".encode()).hexdigest())
-            checked = sorted(ranked[:sample_days])
-        else:
-            checked = days
+        stored = self.rollup(name)
+        days = (stored.select(wday.alias("wd"))
+                .union(self.points(metric).select(
+                    (ws - F.pmod(ws, F.lit(DAY_NS))).alias("wd")))
+                .distinct())
+        picked, n = ParquetStore._pinned_sample(days, sample_days)
+        checked = sorted(r["wd"] for r in picked.collect())
         if not checked:
             return {"days_total": 0, "days_checked": 0, "checked": [],
                     "mismatched_days": [], "ok": True}
-
         rec = self._rollup_compute(metric, iv, specs, day_filter=checked)
-        st = stored.filter(wday_of(F.col("window_start")).isin(*checked))
-        keys = ["series_key", "window_start"]
-        # tags is map-typed (not join-comparable) and determined by
-        # series_key; metric is constant — compare the value columns
-        val_cols = [f.name for f in rec.schema.fields
-                    if f.name not in (*keys, "metric", "tags")]
-        s = st.select(*keys, *[F.col(c).alias(f"s_{c}") for c in val_cols])
-        r = rec.select(*keys, *[F.col(c).alias(f"r_{c}") for c in val_cols])
-        j = s.join(r, keys, "full_outer")
-        # a row present on one side only -> every column of the other side
-        # is NULL (count_* aggregates are never NULL on a real row)
-        from functools import reduce as _reduce
-        present_s = _reduce(lambda a, b: a | b,
-                            [F.col(f"s_{c}").isNotNull() for c in val_cols])
-        present_r = _reduce(lambda a, b: a | b,
-                            [F.col(f"r_{c}").isNotNull() for c in val_cols])
-        diffs = []
-        for c in val_cols:
-            a, b = F.col(f"s_{c}"), F.col(f"r_{c}")
-            if rec.schema[c].dataType.simpleString() == "double":
-                diffs.append(~((F.isnan(a) & F.isnan(b))
-                               | (F.abs(a - b) <= tol)))
-            else:
-                diffs.append(~a.eqNullSafe(b))
-        mismatch = (~present_s) | (~present_r)
-        for d in diffs:
-            mismatch = mismatch | F.coalesce(d, F.lit(True))
-        bad_days = sorted(r["wd"] for r in j.filter(mismatch).select(
-            wday_of(F.col("window_start")).alias("wd")).distinct().collect())
-        return {"days_total": len(days), "days_checked": len(checked),
-                "checked": checked, "mismatched_days": bad_days,
-                "ok": not bad_days}
+        # tags is map-typed (not comparable) and determined by
+        # series_key; metric is constant
+        cols = [c for c in rec.columns if c not in ("metric", "tags")]
+        bad = table_diff(stored.filter(wday.isin(*checked)).select(*cols),
+                         rec.select(*cols), ["series_key", "window_start"],
+                         tol=1e-9)
+        bad_days = sorted(r["wd"] for r in
+                          bad.select(wday.alias("wd")).distinct().collect())
+        return {"days_total": n if sample_days is None else days.count(),
+                "days_checked": n, "checked": checked,
+                "mismatched_days": bad_days, "ok": not bad_days}
 
     # ------------------------------------------------------- maintenance
 
@@ -1172,35 +1141,35 @@ class NexusEngine:
         if retention_cutoff_ns is not None:
             resolved = resolved.filter(F.col("ts") >= retention_cutoff_ns)
         resolved = resolved.cache()
-        resolved.count()
-        bytes_read = self._dir_bytes(self._points_path) + self._dir_bytes(self._l0_path)
-        tmp = self._points_path + ".compact"
-        if cluster:
-            day = F.col("ts") - F.pmod(F.col("ts"), F.lit(DAY_NS))
-            clustered = (resolved.withColumn("day", day)
-                         .repartitionByRange(cluster_files, "metric", "day",
-                                             "series_key", "ts")
-                         .sortWithinPartitions("metric", "day",
-                                               "series_key", "ts"))
-            # cluster_files is a deliberate layout choice: AQE's
-            # post-shuffle coalescing would fold the range partitions
-            # (and thus the per-partition file split) back together
-            conf = self.spark.conf
-            key = "spark.sql.adaptive.coalescePartitions.enabled"
-            prev = conf.get(key, "true")
-            conf.set(key, "false")
-            try:
-                (clustered.write.mode("overwrite")
+        try:
+            resolved.count()
+            bytes_read = (self._dir_bytes(self._points_path)
+                          + self._dir_bytes(self._l0_path))
+            tmp = self._points_path + ".compact"
+            if cluster:
+                # an explicit partition count is kept by AQE (it only
+                # coalesces shuffles whose count it chose), so each range
+                # partition stays its own file
+                day = F.col("ts") - F.pmod(F.col("ts"), F.lit(DAY_NS))
+                (resolved.withColumn("day", day)
+                 .repartitionByRange(cluster_files, "metric", "day",
+                                     "series_key", "ts")
+                 .sortWithinPartitions("metric", "day", "series_key", "ts")
+                 .write.mode("overwrite")
                  .partitionBy("metric", "day").parquet(tmp))
-            finally:
-                conf.set(key, prev)
-            self._emit("post_sstable_create", {"path": tmp,
-                                               "mode": "overwrite"})
-        else:
-            self._write_points(resolved, path=tmp, mode="overwrite")
+                self._emit("post_sstable_create", {"path": tmp,
+                                                   "mode": "overwrite"})
+            else:
+                self._write_points(resolved, path=tmp, mode="overwrite")
+            # the catalog of the surviving view (prunes tombstoned series,
+            # merges the tiny per-put index files), staged beside the live
+            # one and swapped in with the points
+            catalog = self._catalog.stage(resolved)
+        finally:
+            resolved.unpersist()
         self._emit("pre_sstable_delete", {"path": self._points_path})
-        # the rewrite into tmp above ran lock-free (reads are additive);
-        # only the swap excludes readers — the refcounted-SSTable handoff
+        # the rewrites above ran lock-free (reads are additive); only the
+        # swaps exclude readers — the refcounted-SSTable handoff
         with self._scan_rw.write():
             shutil.rmtree(self._points_path, ignore_errors=True)  # may be L0-only
             os.rename(tmp, self._points_path)
@@ -1212,12 +1181,9 @@ class NexusEngine:
             # WITH the old tombstones would re-delete resurrected rows
             for path in self._tomb.values():
                 shutil.rmtree(path, ignore_errors=True)
+            self._catalog.publish(catalog)
             self._write_gen += 1
-        # rebuild the catalog from the surviving view: prunes tombstoned
-        # series and merges the tiny per-put index files
-        self._catalog.rebuild(self._raw())
         self._known_series = self._known_metrics = None  # reload from catalog
-        resolved.unpersist()
         if self.hooks is not None:
             # PostCompaction payload: old/new table sizes, the inputs the
             # write-amplification listener accumulates (hooks/listeners/
@@ -1331,13 +1297,15 @@ class NexusEngine:
                               ignore_errors=True)
                 self._write_rollup_meta(name, {**meta, "last_seq": -1})
             self._write_gen += 1
+            # a snapshot whose catalog is missing or partial restores
+            # without one; re-index (readers still excluded) so the
+            # completeness invariant holds when they resume
+            if ((os.path.isdir(self._points_path)
+                 or os.path.isdir(self._l0_path))
+                    and not self._catalog.exists()):
+                self._catalog.rebuild(self._raw())
         self._seq = self._load_max_seq() + 1
         self._set_l0_batches(0)  # pending-batch count died with the old L0
-        # a snapshot whose catalog is missing or partial restores without
-        # one; re-index so the completeness invariant holds
-        if ((os.path.isdir(self._points_path) or os.path.isdir(self._l0_path))
-                and not self._catalog.exists()):
-            self._catalog.rebuild(self._raw())
         self._known_series = self._known_metrics = None  # reload from catalog
 
     # ----------------------------------------------------------- metrics
@@ -1534,6 +1502,10 @@ class NexusEngine:
             self.result_cache.reclassify_hit_as_miss()
         self._emit("on_cache_hit" if ok else "on_cache_miss", {"key": key})
         if not ok:
+            # the generation is read BEFORE planning: a write that lands
+            # between planning and the put below files these (pre-write)
+            # rows under the older generation, so the next read misses
+            gen = self._write_gen
             full = plan_query(
                 self, dataclasses.replace(q, limit=None, after_cursor=None))
             # Bound the driver-side collect BEFORE it happens: take at most
@@ -1544,7 +1516,7 @@ class NexusEngine:
             rows = full.limit(self.cache_max_rows + 1).collect()
             if len(rows) > self.cache_max_rows:
                 return plan_query(self, q)
-            entry = CachedResult(self._write_gen, rows, full.schema)
+            entry = CachedResult(gen, rows, full.schema)
             self.result_cache.put(key, entry)
         rows = paginate_rows(entry.rows, q)
         if not rows:
@@ -1575,8 +1547,16 @@ class NexusEngine:
             # inner statement's DataFrame — plan introspection for an
             # engine whose physical strategy is Catalyst's, the analog of
             # SQL EXPLAIN the reference lacks (its iterator stack is
-            # fixed). The inner statement is PLANNED, never executed.
-            df = self._dispatch(stmt.inner)
+            # fixed). The inner statement is PLANNED, never executed: a
+            # QUERY skips the result cache, which would run it.
+            inner = stmt.inner
+            if isinstance(inner, A.QueryStatement):
+                from nexusbase_spark.nbql.planner import plan_query
+                df = self._try_rollup_rewrite(inner)
+                if df is None:
+                    df = plan_query(self, inner)
+            else:
+                df = self._dispatch(inner)
             plan = df._jdf.queryExecution().executedPlan().toString()
             rows = [(i, line) for i, line in enumerate(plan.splitlines())]
             return self.spark.createDataFrame(rows, "line bigint, plan string")

@@ -30,6 +30,7 @@ scan-side map filter (the reference's active-series fallback scan).
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
 import pyarrow as pa
@@ -103,20 +104,28 @@ class SeriesCatalog:
         )
         cat.write.mode("append").parquet(self.path)
 
-    def rebuild(self, points_df: DataFrame | None) -> None:
-        """Overwrite the catalog from a full points frame (legacy warehouse
-        open, post-restore, compaction). Also prunes tombstoned series when
-        given the resolved view."""
-        import shutil
+    def stage(self, points_df: DataFrame) -> str:
+        """Write a full catalog of ``points_df`` (legacy warehouse open,
+        post-restore, compaction; the resolved view also prunes
+        tombstoned series) beside the live one, invisible to ``resolve``
+        until ``publish``. Returns the staged directory."""
+        staged = self.path + ".staged"
+        (points_df.select("metric", "series_key",
+                          F.explode_outer("tags").alias("tag_key",
+                                                        "tag_value"))
+         .distinct().write.mode("overwrite").parquet(staged))
+        return staged
+
+    def publish(self, staged: str) -> None:
+        """Replace the live catalog with a staged one: two directory
+        operations, so a caller that excludes readers around them (the
+        engine's write section) never lets one see a partial catalog."""
         shutil.rmtree(self.path, ignore_errors=True)
-        if points_df is None:
-            return
-        cat = (
-            points_df.select("metric", "series_key",
-                             F.explode_outer("tags").alias("tag_key", "tag_value"))
-            .distinct()
-        )
-        cat.write.mode("overwrite").parquet(self.path)
+        os.rename(staged, self.path)
+
+    def rebuild(self, points_df: DataFrame) -> None:
+        """Overwrite the catalog from a full points frame."""
+        self.publish(self.stage(points_df))
 
     # ------------------------------------------------------------- reads
 

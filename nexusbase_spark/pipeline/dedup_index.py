@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from nexusbase_spark.pipeline.dedup import (
     DEFAULT_MAX_BUCKET, _SINK_DEFAULT, _banded_docs,
 )
+from nexusbase_spark.pipeline.expectations import table_diff
 from nexusbase_spark.store import ParquetStore
 
 
@@ -153,8 +154,7 @@ class DedupIndex(ParquetStore):
 
     # ---------------------------------------------------------------- audit
 
-    def verify(self, docs: DataFrame, sample: int | None = None,
-               salt: str = "verify-v1") -> dict:
+    def verify(self, docs: DataFrame, sample: int | None = None) -> dict:
         """Consistency audit against the base corpus — the same sampled
         treatment as ``engine.verify_rollup``: a retention sweep or
         ``compact()`` that rewrites the corpus must not leave the index
@@ -163,10 +163,9 @@ class DedupIndex(ParquetStore):
         - ``stale``: doc_ids in the index whose base document is GONE
           (deleted/retained-out) — probe hits against them are wrong;
         - ``missing``: base doc_ids the index never absorbed;
-        - ``mismatched``: for a deterministic ``sample`` of shared ids
-          (salted-md5 rank, so a larger sample audits a superset),
-          re-shingle the base text and diff both the stored shingle-hash
-          SET and the stored band keys.
+        - ``mismatched``: for a pinned ``sample`` of shared ids
+          (``ParquetStore._pinned_sample``), re-shingle the base text and
+          diff both the stored shingle-hash SET and the stored band keys.
 
         Only the sampled docs are re-shingled — a full recompute per
         check is what the index exists to avoid. Returns
@@ -179,41 +178,27 @@ class DedupIndex(ParquetStore):
         store_docs = self._store_docs()
         store_ids = self._ids(store_docs)
         stale, missing = self._stale_missing(store_ids, base_ids)
-        shared, checked = self._pinned_sample(store_ids, base_ids, sample,
-                                              salt)
+        shared, checked = self._pinned_sample(
+            store_ids.join(base_ids, "doc_id"), sample)
         mismatched = 0
         if checked:
             picked = docs.join(shared.withColumnRenamed("doc_id", idc), idc)
             d, banded = _banded_docs(picked, idc, meta["text_col"],
                                      meta["n"], meta["num_hashes"],
                                      meta["bands"], persist=True)
-            rec_sets = d.select(F.col(idc).alias("doc_id"),
-                                F.array_sort(F.array_distinct("hset"))
-                                .alias("__rh"))
-            st_sets = (store_docs.join(shared, "doc_id")
-                       .select("doc_id",
-                               F.array_sort("hset").alias("__sh")))
-            bad_set_ids = (st_sets.join(rec_sets, "doc_id", "full_outer")
-                           .filter(F.col("__sh").isNull()
-                                   | F.col("__rh").isNull()
-                                   | (F.col("__sh") != F.col("__rh")))
-                           .select("doc_id"))
-            rec_bands = (banded.withColumnRenamed(idc, "doc_id")
-                         .select("doc_id", "band_idx",
-                                 F.col("band_key").alias("__rk")))
-            st_bands = (self._layer("bands").join(shared, "doc_id")
-                        .select("doc_id", "band_idx",
-                                F.col("band_key").alias("__sk")))
-            bad_band_ids = (st_bands.join(rec_bands, ["doc_id", "band_idx"],
-                                          "full_outer")
-                            .filter(F.col("__sk").isNull()
-                                    | F.col("__rk").isNull()
-                                    | (F.col("__sk") != F.col("__rk")))
-                            .select("doc_id"))
-            # ADVICE r4: count the distinct UNION of docs failing either
-            # check — max(bad_sets, bad_bands) undercounts when different
-            # docs fail different checks.
-            mismatched = (bad_set_ids.union(bad_band_ids)
+            sets = table_diff(
+                store_docs.join(shared, "doc_id")
+                .select("doc_id", F.array_sort("hset").alias("h")),
+                d.select(F.col(idc).alias("doc_id"),
+                         F.array_sort(F.array_distinct("hset")).alias("h")),
+                "doc_id")
+            keys = ["doc_id", "band_idx", "band_key"]
+            bands = table_diff(
+                self._layer("bands").join(shared, "doc_id").select(*keys),
+                banded.withColumnRenamed(idc, "doc_id").select(*keys),
+                keys[:2])
+            # docs failing EITHER check, counted once
+            mismatched = (sets.select("doc_id").union(bands.select("doc_id"))
                           .distinct().count())
             d.unpersist()
         return {"docs_store": store_ids.count(),

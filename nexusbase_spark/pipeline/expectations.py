@@ -161,39 +161,50 @@ def expectations_sink(checks: list[dict], report_path: str):
     return run
 
 
-def table_diff(old: DataFrame, new: DataFrame, id_col: str,
-               compare_cols: list[str] | None = None) -> DataFrame:
+def table_diff(old: DataFrame, new: DataFrame, keys: str | list[str],
+               compare_cols: list[str] | None = None,
+               tol: float | None = None) -> DataFrame:
     """Row-level diff between two versions of a table (snapshot compare,
-    migration audit, replication check): full outer join on the id,
-    classifying each id as added / removed / changed via null-safe
-    column equality. Output: (id_col, change) for every non-identical
-    row; identical rows are dropped so the report is delta-sized.
+    migration audit, replication check, and every stored-vs-recomputed
+    store audit): one full outer join on ``keys``, classifying each key
+    as added / removed / changed. Output: (*keys, change) for every
+    non-identical row; identical rows are dropped so the report is
+    delta-sized.
 
-    Precondition: ``id_col`` is unique per side (a duplicate id would
+    Columns compare with null-safe equality, under which NULL, NaN and
+    +-Inf each equal themselves. With ``tol``, float/double columns also
+    count as equal within ``tol`` (recomputes that shuffle in another
+    order drift in the last ulp).
+
+    Precondition: ``keys`` are unique per side (a duplicate key would
     fan out in the join) — pair with a ``unique`` expectation when that
-    isn't guaranteed. One join keyed on the id — the minimal shuffle any
-    diff pays. For
-    100-column tables at corpus scale, pre-hash the compared columns to
-    one 16-byte digest per side (md5(concat_ws with null sentinels)) so
-    the shuffle carries (id, digest) instead of full rows; spelled out
-    column-wise here so the oracle needs no cross-engine float
-    formatting contract.
+    isn't guaranteed. For 100-column tables at corpus scale, pre-hash
+    the compared columns to one 16-byte digest per side so the shuffle
+    carries (keys, digest) instead of full rows; spelled out column-wise
+    here so the oracle needs no cross-engine float formatting contract.
     """
-    cols = compare_cols or [c for c in old.columns if c != id_col]
-    o = old.select(F.col(id_col).alias("__id"),
-                   *[F.col(c).alias(f"__o_{c}") for c in cols])
-    n = new.select(F.col(id_col).alias("__idn"),
-                   *[F.col(c).alias(f"__n_{c}") for c in cols])
-    j = o.join(n, o["__id"] == n["__idn"], "full_outer")
-    same = reduce(lambda a, c: a & F.col(f"__o_{c}")
-                  .eqNullSafe(F.col(f"__n_{c}")),
-                  cols[1:],
-                  F.col(f"__o_{cols[0]}").eqNullSafe(F.col(f"__n_{cols[0]}")))
-    change = (F.when(F.col("__id").isNull(), F.lit("added"))
-              .when(F.col("__idn").isNull(), F.lit("removed"))
-              .when(~same, F.lit("changed")))
-    return (j.select(F.coalesce(F.col("__id"), F.col("__idn"))
-                     .alias(id_col), change.alias("change"))
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    cols = compare_cols or [c for c in old.columns if c not in keys]
+    floats = {c for c in cols
+              if old.schema[c].dataType.typeName() in ("float", "double")}
+
+    def side(df: DataFrame, tag: str) -> DataFrame:
+        return df.select(*keys, F.lit(True).alias(tag),
+                         *[F.col(c).alias(f"{tag}_{c}") for c in cols])
+
+    def differs(c: str) -> Column:
+        a, b = F.col(f"__o_{c}"), F.col(f"__n_{c}")
+        same = a.eqNullSafe(b)
+        if tol is not None and c in floats:
+            same = same | F.coalesce(F.abs(a - b) <= tol, F.lit(False))
+        return ~same
+
+    change = (F.when(F.col("__o").isNull(), F.lit("added"))
+              .when(F.col("__n").isNull(), F.lit("removed"))
+              .when(reduce(Column.__or__, map(differs, cols)),
+                    F.lit("changed")))
+    return (side(old, "__o").join(side(new, "__n"), keys, "full_outer")
+            .select(*keys, change.alias("change"))
             .filter(F.col("change").isNotNull()))
 
 

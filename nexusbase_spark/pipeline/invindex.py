@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nexusbase_spark.pipeline.expectations import table_diff
 from nexusbase_spark.pipeline.text import tokens_col
 from nexusbase_spark.store import ParquetStore
 
@@ -173,39 +174,30 @@ class InvertedIndex(ParquetStore):
         return self._ids(docs.filter(
             F.size(tokens_col(F.col(meta["text_col"]))) > 0), meta["id_col"])
 
-    def verify(self, docs: DataFrame, sample: int | None = None,
-               salt: str = "verify-v1") -> dict:
+    def verify(self, docs: DataFrame, sample: int | None = None) -> dict:
         """Sampled consistency audit against the base corpus: stale =
         indexed doc gone from the base; missing = base doc never indexed;
-        mismatched = for a deterministic salted-md5 sample of shared ids,
-        the recomputed (token, tf, dl) postings differ from the stored
-        ones. Globals are audited exactly (n_docs/sum_dl vs the base
-        recount)."""
+        mismatched = for a pinned sample of shared ids, the recomputed
+        (token, tf, dl) postings differ from the stored ones. Globals are
+        audited exactly (n_docs/sum_dl vs the base recount)."""
         meta = self._meta()
         idc = meta["id_col"]
         base_ids = self._ids(docs, idc)
         store_ids = self._ids(self._layer("postings"))
         has_toks = self._tokened_ids(docs, meta)
         stale, missing = self._stale_missing(store_ids, base_ids, has_toks)
-        shared, checked = self._pinned_sample(store_ids, base_ids, sample,
-                                              salt)
+        shared, checked = self._pinned_sample(
+            store_ids.join(base_ids, "doc_id"), sample)
         mismatched = 0
         if checked:
             picked = docs.join(shared.withColumnRenamed("doc_id", idc), idc)
             rec, _ = _postings_of(picked, idc, meta["text_col"],
                                   meta["n_buckets"])
-            keys = ["doc_id", "token"]
-            r = rec.select(*keys, F.col("tf").alias("__rtf"),
-                           F.col("dl").alias("__rdl"))
-            s = (self._layer("postings").join(shared, "doc_id")
-                 .select(*keys, F.col("tf").alias("__stf"),
-                         F.col("dl").alias("__sdl")))
-            mismatched = (s.join(r, keys, "full_outer")
-                          .filter(F.col("__stf").isNull()
-                                  | F.col("__rtf").isNull()
-                                  | (F.col("__stf") != F.col("__rtf"))
-                                  | (F.col("__sdl") != F.col("__rdl")))
-                          .select("doc_id").distinct().count())
+            cols = ["doc_id", "token", "tf", "dl"]
+            mismatched = (table_diff(
+                self._layer("postings").join(shared, "doc_id").select(*cols),
+                rec.select(*cols), cols[:2])
+                .select("doc_id").distinct().count())
         n_docs, avgdl = self._globals()
         tok_n = has_toks.count()
         toks = tokens_col(F.col(meta["text_col"]))

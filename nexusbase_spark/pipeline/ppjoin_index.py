@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nexusbase_spark.pipeline.dedup import DEFAULT_MAX_BUCKET, _SINK_DEFAULT
+from nexusbase_spark.pipeline.expectations import table_diff
 from nexusbase_spark.pipeline.text import tokens_col
 from nexusbase_spark.store import ParquetStore
 
@@ -231,11 +232,9 @@ class ExactDupIndex(ParquetStore):
     @staticmethod
     def _rewritten(store: DataFrame, base: DataFrame) -> DataFrame:
         """Ids whose stored token array differs from the base recompute."""
-        return (store.select("doc_id", F.array_sort("toks").alias("__s"))
-                .join(base.select("doc_id",
-                                  F.array_sort("toks").alias("__r")),
-                      "doc_id")
-                .filter(F.col("__s") != F.col("__r")).select("doc_id"))
+        toks = ("doc_id", F.array_sort("toks").alias("toks"))
+        return (table_diff(store.select(*toks), base.select(*toks), "doc_id")
+                .filter(F.col("change") == "changed").select("doc_id"))
 
     def resync(self, docs: DataFrame) -> dict:
         """Drop stale entries via narrow filtered rewrites (no

@@ -37,6 +37,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nexusbase_spark.pipeline.expectations import table_diff
 from nexusbase_spark.pipeline.text import tokens_col
 from nexusbase_spark.store import ParquetStore
 
@@ -314,23 +315,19 @@ class CorpusStats(ParquetStore):
         """Exact audit against the base corpus: recompute (n_docs,
         sum_dl) and the per-token df table from the base and compare
         with the summed store. ``df_mismatched`` counts tokens whose
-        summed df differs (full-outer, so both phantom and lost tokens
-        count). One tokenize pass + one anti-joined rollup — O(corpus
+        summed df differs (``table_diff``, so both phantom and lost
+        tokens count). One tokenize pass + one anti-joined rollup — O(corpus
         vocabulary), the audit's inherent cost."""
         want_g, want_df = self._deltas(docs)
         want = want_g.collect()[0]
-        want_df = want_df.withColumnRenamed("df", "__wdf")
         g = (self._layer("globals")
              .agg(F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n"),
                   F.coalesce(F.sum("sum_dl"), F.lit(0)).alias("s"))
              .collect()[0])
         have_df = (self._layer("df")
-                   .groupBy("token").agg(F.sum("df").alias("__hdf"))
-                   .filter(F.col("__hdf") != 0))  # fully-retired tokens
-        df_mismatched = (have_df.join(want_df, "token", "full_outer")
-                         .filter(F.coalesce(F.col("__hdf"), F.lit(0))
-                                 != F.coalesce(F.col("__wdf"), F.lit(0)))
-                         .count())
+                   .groupBy("token").agg(F.sum("df").alias("df"))
+                   .filter(F.col("df") != 0))  # fully-retired tokens
+        df_mismatched = table_diff(have_df, want_df, "token").count()
         n_want, s_want = int(want["n_docs"]), int(want["sum_dl"])
         return {"n_docs_store": int(g["n"]), "n_docs_base": n_want,
                 "sum_dl_store": int(g["s"]), "sum_dl_base": s_want,

@@ -30,6 +30,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nexusbase_spark.pipeline.expectations import table_diff
 from nexusbase_spark.pipeline.similarity import (
     centroids, cosine_topk, kmeans_assign,
 )
@@ -233,8 +234,7 @@ class VectorIndex(ParquetStore):
 
     # ---------------------------------------------------------------- audit
 
-    def verify(self, df: DataFrame, sample: int | None = None,
-               salt: str = "verify-v1") -> dict:
+    def verify(self, df: DataFrame, sample: int | None = None) -> dict:
         """Consistency audit against the base embedding table (the
         ``verify_rollup`` treatment for the vector store): a retention
         sweep or corpus rewrite must not leave the index serving deleted
@@ -242,11 +242,10 @@ class VectorIndex(ParquetStore):
 
         - ``stale``: ids in the index with no base row;
         - ``missing``: base ids the index never absorbed;
-        - ``mismatched``: for a deterministic salted-md5 ``sample`` of
-          shared ids, the stored vector must EQUAL the base vector and
-          its stored cluster must equal ``assign_to`` under the CURRENT
-          centroids (a drifted vector in the wrong partition silently
-          corrupts pruned search).
+        - ``mismatched``: for a pinned ``sample`` of shared ids, the
+          stored vector must EQUAL the base vector and its stored cluster
+          must equal ``assign_to`` under the CURRENT centroids (a drifted
+          vector in the wrong partition silently corrupts pruned search).
 
         Returns {"n_store", "n_base", "stale", "missing", "checked",
         "mismatched", "ok"}."""
@@ -256,24 +255,17 @@ class VectorIndex(ParquetStore):
         base_ids = self._ids(df, idc)
         store_ids = self._ids(vecs)
         stale, missing = self._stale_missing(store_ids, base_ids)
-        shared, checked = self._pinned_sample(store_ids, base_ids, sample,
-                                              salt)
+        shared, checked = self._pinned_sample(
+            store_ids.join(base_ids, "doc_id"), sample)
         mismatched = 0
         if checked:
-            st = (vecs.join(shared, "doc_id")
-                  .select("doc_id", F.col(vc).alias("__sv"),
-                          F.col("cluster").alias("__sc")))
-            bs = (self.assign_to(df.join(
-                      shared.withColumnRenamed("doc_id", idc), idc), vc)
-                  .select(F.col(idc).alias("doc_id"),
-                          F.col(vc).alias("__bv"),
-                          F.col("cluster").alias("__bc")))
-            mismatched = (st.join(bs, "doc_id", "full_outer")
-                          .filter(F.col("__sv").isNull()
-                                  | F.col("__bv").isNull()
-                                  | (F.col("__sv") != F.col("__bv"))
-                                  | (F.col("__sc") != F.col("__bc")))
-                          .count())
+            cols = ["doc_id", vc, "cluster"]
+            base = self.assign_to(df.join(
+                shared.withColumnRenamed("doc_id", idc), idc), vc)
+            mismatched = table_diff(
+                vecs.join(shared, "doc_id").select(*cols),
+                base.withColumnRenamed(idc, "doc_id").select(*cols),
+                "doc_id").count()
         return {"n_store": store_ids.count(), "n_base": base_ids.count(),
                 "stale": stale, "missing": missing, "checked": checked,
                 "mismatched": mismatched,

@@ -67,7 +67,8 @@ class ParquetStore:
         return run
 
     # ------------------------------------------------- doc-keyed audit/heal
-    # Id frames below have ONE column, named ``doc_id``.
+    # Id frames below have ONE column, named ``doc_id`` (the sampler
+    # takes any one-column id frame: the rollup audit samples days).
 
     @staticmethod
     def _ids(df: DataFrame, col: str = "doc_id") -> DataFrame:
@@ -85,18 +86,19 @@ class ParquetStore:
         return stale, missing
 
     @staticmethod
-    def _pinned_sample(store_ids: DataFrame, base_ids: DataFrame,
-                       sample: int | None, salt: str) -> tuple[DataFrame, int]:
-        """(shared ids, count): ids both in the store and the base; with
-        ``sample``, the first ``sample`` by salted md5 rank, so a larger
-        sample audits a superset. Checkpointed to pin the sample."""
-        shared = store_ids.join(base_ids, "doc_id")
+    def _pinned_sample(ids: DataFrame,
+                       sample: int | None) -> tuple[DataFrame, int]:
+        """(sampled ids, count) from ``ids``, a one-column id universe:
+        with ``sample``, the first ``sample`` ids by md5 of
+        ``"verify-v1:<id>"``, so a larger sample audits a superset; else
+        all of them. Checkpointed to pin the sample."""
         if sample is not None:
-            rank = F.md5(F.concat(F.lit(salt), F.lit(":"),
-                                  F.col("doc_id").cast("string")))
-            shared = shared.orderBy(rank, "doc_id").limit(sample)
-        shared = shared.localCheckpoint(eager=True)
-        return shared, shared.count()
+            key = ids.columns[0]
+            rank = F.md5(F.concat(F.lit("verify-v1:"),
+                                  F.col(key).cast("string")))
+            ids = ids.orderBy(rank, key).limit(sample)
+        ids = ids.localCheckpoint(eager=True)
+        return ids, ids.count()
 
     def _drop_ids(self, ids: DataFrame, *layers: str) -> int:
         """Rewrite ``layers`` without the rows whose id is in ``ids`` (a

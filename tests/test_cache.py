@@ -217,6 +217,55 @@ def test_cache_pagination_from_cached_rows(cached_engine):
     assert q1 == p1 and q2 == p2
 
 
+def test_cache_write_between_plan_and_store_is_not_served(cached_engine,
+                                                          monkeypatch):
+    """A miss plans its rows, then a put lands before those (pre-write)
+    rows are stored: the entry must carry the generation read before
+    planning, so the next read misses and sees the new point instead of
+    being served the pre-write rows as current."""
+    import nexusbase_spark.nbql.planner as planner
+    eng = cached_engine
+    q = ('QUERY cache.metric FROM 0 TO 3000000000000000000 '
+         'AGGREGATE (sum(v), count(v))')
+    real = planner.plan_query
+
+    def plan_then_write(e, stmt):
+        df = real(e, stmt)
+        monkeypatch.setattr(planner, "plan_query", real)
+        e.put("cache.metric", {"host": "a"}, {"v": 100.0},
+              BASE + 7 * 5_000_000_000)
+        return df
+
+    monkeypatch.setattr(planner, "plan_query", plan_then_write)
+    first = eng.execute(q).collect()[0]
+    assert first["count_v"] == 6                 # planned before the put
+    again = eng.execute(q).collect()[0]
+    assert eng.result_cache.misses == 2
+    assert again["count_v"] == 7 and again["sum_v"] == first["sum_v"] + 100.0
+
+
+def test_explain_with_result_cache_plans_without_running(cached_engine):
+    """EXPLAIN on a cache-enabled engine shows the scan plan, not a
+    LocalTableScan of executed rows, and touches no cache entry; the
+    rollup rewrite still shows."""
+    eng = cached_engine
+    q = f"QUERY cache.metric FROM {BASE} TO {BASE + 2 * MIN - 1}"
+
+    def explain(stmt):
+        return "\n".join(r["plan"] for r in
+                         eng.execute("EXPLAIN " + stmt).collect())
+
+    plan = explain(q)
+    assert "LocalTableScan" not in plan, plan
+    assert "FileScan parquet" in plan and "/l0" in plan, plan
+    assert (eng.result_cache.hits, eng.result_cache.misses) == (0, 0)
+    assert len(eng.result_cache) == 0
+    eng.create_rollup("r", "cache.metric", MIN, [AggSpec("sum", "v")])
+    plan = explain(q + " AGGREGATE BY 1m (sum(v))")
+    assert "rollups/r" in plan and "/l0" not in plan, plan
+    assert eng.rollup_rewrites == 1 and len(eng.result_cache) == 0
+
+
 @pytest.mark.nightly
 def test_cache_overflow_never_full_collects(cached_engine):
     """A LIMIT-less result bigger than cache_max_rows must NOT be collected

@@ -390,3 +390,79 @@ def test_rollup_rewrite_coarser_reaggregation(eng):
              for r in eng.execute(q).collect()}
     assert getattr(eng, "rollup_rewrites", 0) == n + 1
     assert again == served
+
+
+def test_verify_rollup_equal_infinities_ok(spark, tmp_path):
+    """The audit's float rule is null-safe equality, under which +Inf
+    equals +Inf: a rollup holding an infinite aggregate audits clean
+    right after CREATE ROLLUP."""
+    e = NexusEngine(spark, str(tmp_path / "wh"))
+    e.put_batch([("m", {"h": "a"}, {"v": 1.0}, D0),
+                 ("m", {"h": "a"}, {"v": math.inf}, D0 + 1)])
+    e.create_rollup("r", "m", DAY, SPECS)
+    assert e.rollup("r").collect()[0]["sum_v"] == math.inf
+    rep = e.verify_rollup("r")
+    assert rep["ok"] and rep["days_checked"] == 1, rep
+
+
+def test_verify_rollup_sample_is_salted_md5_rank(eng):
+    """sample_days=k audits the k days first by md5("verify-v1:<day>"),
+    so a larger sample audits a superset, and days_total stays the whole
+    stored-or-base day universe."""
+    import hashlib
+    eng.put_batch([("m", {"h": "c"}, {"v": 2.0}, D0 + d * DAY)
+                   for d in (3, 4)])
+    eng.create_rollup("r", "m", DAY, SPECS)
+    days = eng.verify_rollup("r")["checked"]
+    assert len(days) == 4
+    ranked = sorted(days, key=lambda d: hashlib.md5(
+        f"verify-v1:{d}".encode()).hexdigest())
+    for k in (1, 3):
+        rep = eng.verify_rollup("r", sample_days=k)
+        assert rep["checked"] == sorted(ranked[:k]) and rep["ok"]
+        assert (rep["days_checked"], rep["days_total"]) == (k, 4)
+
+
+def test_refresh_and_cluster_compact_leave_session_conf_alone(eng,
+                                                             monkeypatch):
+    """Other threads plan on the same SparkSession, so neither a rollup
+    refresh (dynamic partition overwrite) nor a clustered compaction sets
+    a session conf; the refresh still rewrites only its dirty day."""
+    import os
+    from pyspark.sql.conf import RuntimeConfig
+
+    eng.create_rollup("r", "m", DAY, SPECS)
+    data = os.path.join(eng._rollup_dir("r"), "data")
+    day0 = sorted(os.listdir(os.path.join(data, f"wday={D0}")))
+    sets = []
+    real = RuntimeConfig.set
+    monkeypatch.setattr(RuntimeConfig, "set",
+                        lambda self, k, v: sets.append(k) or real(self, k, v))
+    eng.put_batch([("m", {"h": "a"}, {"v": 50.0}, D0 + 5 * DAY)])
+    assert eng.refresh_rollup("r") == 1
+    assert sorted(os.listdir(os.path.join(data, f"wday={D0}"))) == day0
+    assert _materialized(eng) == _direct(eng)
+    eng.compact(cluster=True, cluster_files=4)
+    assert sets == []
+    assert len(eng.points("m").collect()) == 2 * 10   # 10 points + markers
+
+
+def test_failed_refresh_and_compact_release_cached_frames(eng, monkeypatch):
+    """A write that fails after refresh_rollup persisted its recompute, or
+    after compact cached its resolved view, leaves nothing cached in the
+    (long-lived) session."""
+    jsc = eng.spark.sparkContext._jsc
+    eng.create_rollup("r", "m", DAY, SPECS)
+    eng.put_batch([("m", {"h": "a"}, {"v": 50.0}, D0 + 5 * DAY)])
+    held = jsc.getPersistentRDDs().size()
+
+    def fail(*_a, **_k):
+        raise RuntimeError("write failed")
+
+    monkeypatch.setattr(eng._scan_rw, "write", fail)
+    with pytest.raises(RuntimeError, match="write failed"):
+        eng.refresh_rollup("r")
+    monkeypatch.setattr(eng, "_write_points", fail)
+    with pytest.raises(RuntimeError, match="write failed"):
+        eng.compact()
+    assert jsc.getPersistentRDDs().size() == held

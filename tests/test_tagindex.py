@@ -112,6 +112,46 @@ def test_snapshot_restore_carries_catalog(eng, spark, tmp_path):
     assert e3._catalog.resolve("mem", {"host": "a"}) == ["mem|dc=eu,host=a"]
 
 
+def _catalog_files(eng):
+    import os
+    root = eng._catalog.path
+    return sorted(os.path.relpath(os.path.join(dp, f), root)
+                  for dp, _dn, files in os.walk(root) for f in files)
+
+
+@pytest.mark.parametrize("op", ["compact", "restore"])
+def test_catalog_replaced_only_inside_write_section(eng, monkeypatch, op):
+    """compact() and a catalog-less restore() rebuild the catalog, and
+    readers resolve tags from it: the files a reader can list are the old
+    set until the write section and the new set from its end on, never a
+    removed or partly written catalog."""
+    import contextlib
+    import shutil
+    if op == "restore":
+        snap = eng.snapshot()
+        shutil.rmtree(snap + "/catalog")
+    before = _catalog_files(eng)
+    seen = []
+    real = eng._scan_rw.write
+
+    @contextlib.contextmanager
+    def spy():
+        with real():
+            seen.append(_catalog_files(eng))
+            yield
+            seen.append(_catalog_files(eng))
+
+    monkeypatch.setattr(eng._scan_rw, "write", spy)
+    if op == "compact":
+        eng.compact()
+    else:
+        eng.restore(snap, overwrite=True)
+    after = _catalog_files(eng)
+    assert seen[0] == before and seen[-1] == after and after != before
+    assert eng._catalog.resolve("cpu", {"dc": "eu"}) == [
+        "cpu|dc=eu,host=a", "cpu|dc=eu,host=b"]
+
+
 def test_failed_catalog_write_never_breaks_resolve(tmp_path, monkeypatch):
     """A catalog append that dies mid-write (crash, full disk) must leave
     no half-written file where a concurrent resolve() lists the catalog:
