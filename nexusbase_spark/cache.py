@@ -125,24 +125,14 @@ def paginate_rows(rows: list, q: QueryStatement) -> list:
     """Apply AFTER + LIMIT to cached, already-ordered rows — the
     'pagination is applied to the cached result' half of cache_key.go's
     contract. Cursors only exist for raw point streams (the cursor is a
-    point key); aggregate results just take the LIMIT slice."""
+    point key); aggregate results just take the LIMIT slice. The cursor
+    test is ``keyset_after``'s predicate, evaluated on each row's key."""
     out = rows
     if q.after_cursor and not q.aggregations:
-        from nexusbase_spark.operators.order import decode_cursor
+        from nexusbase_spark.operators.order import _after_pred, decode_cursor
         cur = decode_cursor(q.after_cursor)
-        out = [r for r in out if _after_raw(r, cur, q.sort_desc)]
+        out = [r for r in out
+               if _after_pred(r["ts"], r["series_key"], r["seq"], cur, q.sort_desc)]
     if q.limit:
         out = out[:q.limit]
     return out
-
-
-def _after_raw(row, cursor: tuple[int, str, int], descending: bool) -> bool:
-    """Driver-side twin of operators/order._after_pred: strictly-after the
-    cursor key in (ts, series_key, seq desc) stream order. seq compares
-    DESC-within-key in both directions (MVCC preference)."""
-    ts, sk, seq = cursor
-    if row["ts"] != ts:
-        return row["ts"] < ts if descending else row["ts"] > ts
-    if row["series_key"] != sk:
-        return row["series_key"] < sk if descending else row["series_key"] > sk
-    return row["seq"] < seq

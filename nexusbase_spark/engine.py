@@ -46,7 +46,7 @@ import threading
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType, DoubleType, LongType, MapType, StringType, StructField,
@@ -56,7 +56,12 @@ from pyspark.sql.types import (
 from nexusbase_spark.datamodel import series_key_expr, validate_name
 from nexusbase_spark.functions.fidelity import AggSpec, qcol
 from nexusbase_spark.nbql.ast import QueryStatement
-from nexusbase_spark.operators.scan import tag_filter
+from nexusbase_spark.operators.downsample import align, align_col
+from nexusbase_spark.operators.mvcc import visible
+from nexusbase_spark.operators.order import order_windows
+from nexusbase_spark.operators.scan import (
+    apply_tag_matchers, metric_filter, tag_filter,
+)
 from nexusbase_spark.operators.tagindex import SeriesCatalog
 
 POINTS_SCHEMA = StructType([
@@ -93,6 +98,14 @@ DAY_NS = 86_400 * 1_000_000_000
 # (metric, day). Stamped into <warehouse>/_format; byte-identical to the
 # stamp earlier releases wrote, so their warehouses and snapshots open.
 FORMAT_STAMP = "point_markers=1\nlayout=metric_day\n"
+
+
+def _window_day(ts: Column, interval_ns: int) -> Column:
+    """The UTC day (ns) of the ``interval_ns`` window holding ``ts``: the
+    rollup day partition a point belongs to. CREATE, REFRESH and VERIFY
+    ROLLUP all locate points with it, so they agree on which day a point
+    dirties."""
+    return align_col(align_col(ts, interval_ns), DAY_NS)
 
 
 def _typed(value) -> tuple[str, float | None, int | None, str | None, bool | None]:
@@ -207,64 +220,6 @@ def _serialized(fn):
     return wrapper
 
 
-def _validated_regex(spark: SparkSession, pattern: str) -> str:
-    """Reject an invalid =~ / !~ pattern at PLAN time as NBQLError.
-    rlike compiles the pattern inside whole-stage codegen, so a bad
-    client pattern otherwise aborts the whole Spark JOB with a raw
-    PatternSyntaxException out of an executor task (found by matcher
-    fuzzing). Validated against java.util.regex itself — the exact
-    dialect the executor uses (Python's re accepts e.g. 'a{,' which
-    Java rejects, so re.compile would under-reject)."""
-    from nexusbase_spark.nbql.parser import NBQLError
-
-    try:
-        spark._jvm.java.util.regex.Pattern.compile(pattern)
-    except Exception as e:
-        # Only a PatternSyntaxException is a CLIENT error; anything else
-        # (dead gateway, connection reset) is a server fault and must
-        # propagate as one, not be misreported as a bad pattern
-        # (ADVICE r8). The throwable rides on `java_exception` for a
-        # raw Py4JJavaError and on `_origin` after pyspark's
-        # capture-conversion (PatternSyntaxException arrives as a
-        # captured IllegalArgumentException).
-        je = getattr(e, "java_exception", None)
-        if je is None:
-            je = getattr(e, "_origin", None)
-        try:
-            jclass = je.getClass().getName() if je is not None else None
-        except Exception:
-            jclass = None
-        if jclass != "java.util.regex.PatternSyntaxException":
-            raise
-        msg = je.getMessage()
-        raise NBQLError(
-            f"invalid tag matcher regex {pattern!r}: "
-            f"{str(msg).splitlines()[0]}") from None
-    return pattern
-
-
-def apply_tag_matchers(df: DataFrame, matchers) -> DataFrame:
-    """Filter ``df`` by NBQL's non-equality tag matchers, ``(key, op,
-    value)`` with op ``!=``, ``=~`` or ``!~``: the tag must EXIST and
-    differ / (not) match. These are scan-side predicates; equality rides
-    the catalog IN-list instead. A future optimization is resolving
-    regexes against the catalog too (series-sized), then pushing the
-    same IN-list."""
-    for k, op, v in (matchers or []):
-        tv = F.col("tags").getItem(k)
-        if op == "!=":
-            df = df.filter(tv.isNotNull() & (tv != v))
-        elif op == "=~":
-            df = df.filter(tv.isNotNull()
-                           & tv.rlike(_validated_regex(df.sparkSession, v)))
-        elif op == "!~":
-            df = df.filter(tv.isNotNull()
-                           & ~tv.rlike(_validated_regex(df.sparkSession, v)))
-        else:
-            raise ValueError(f"unknown tag matcher op: {op!r}")
-    return df
-
-
 class NexusEngine:
     def __init__(self, spark: SparkSession, warehouse: str,
                  l0_trigger: int = 4, cache_capacity: int = 0,
@@ -284,10 +239,11 @@ class NexusEngine:
         # append returns, and inside the write section of a rewrite. It
         # keys the result cache and the base scan (_base).
         self._write_gen = 0
-        self._base_mu = threading.Lock()  # leaf lock: held for a build only
+        self._base_mu = threading.Lock()  # leaf lock: a base build or a counter bump
         self._base_gen = -1
         self._base_frames = None
         self._base_builds = self._base_reuses = 0
+        self.rollup_rewrites = 0  # queries served by _try_rollup_rewrite
         # Writer mutex: the servers handle connections on threads, but the
         # engine's write path mutates shared state (the seq counter, the
         # L0 batch counter/dir, the catalog, tombstone dirs) with no other
@@ -338,7 +294,7 @@ class NexusEngine:
         self._catalog = SeriesCatalog(os.path.join(warehouse, "catalog"))
         has_data = os.path.isdir(self._points_path) or os.path.isdir(self._l0_path)
         if has_data and not self._catalog.exists():
-            self._catalog.rebuild(self._raw())
+            self._catalog.rebuild(self._base()[0])
         self._emit("post_start_engine", {"warehouse": warehouse,
                                          "next_seq": self._seq})
 
@@ -441,7 +397,7 @@ class NexusEngine:
         path = path or self._points_path
         if coalesce is not None:
             df = df.coalesce(coalesce)
-        df = df.withColumn("day", F.col("ts") - F.pmod(F.col("ts"), F.lit(DAY_NS)))
+        df = df.withColumn("day", align_col(F.col("ts"), DAY_NS))
         df.write.mode(mode).partitionBy("metric", "day").parquet(path)
         # a parquet append is the SSTable-create analog (hooks.go:48)
         self._emit("post_sstable_create", {"path": path, "mode": mode})
@@ -590,10 +546,8 @@ class NexusEngine:
             .agg(F.first("tags").alias("tags"))
             .withColumns({
                 "field": F.lit(""), "vtype": F.lit("marker"),
-                "f_double": F.lit(None).cast("double"),
-                "f_long": F.lit(None).cast("long"),
-                "f_string": F.lit(None).cast("string"),
-                "f_bool": F.lit(None).cast("boolean"),
+                **{f.name: F.lit(None).cast(f.dataType)
+                   for f in POINTS_SCHEMA.fields if f.name.startswith("f_")},
             })
         )
         out = out.unionByName(markers.select(*out.columns))
@@ -778,9 +732,6 @@ class NexusEngine:
             self._base_builds += 1
             return self._base_frames
 
-    def _raw(self) -> DataFrame:
-        return self._base()[0]
-
     def points(self, metric: str | None = None,
                tags: dict[str, str] | None = None,
                start: int | None = None, end: int | None = None,
@@ -788,20 +739,17 @@ class NexusEngine:
         """The visible long-format points view: MVCC dedup (whole-point
         last-write-wins) + all three tombstone kinds, seq-aware.
 
-        Selection predicates are applied BEFORE the dedup window and the
-        anti-joins: the window partitions by (series_key, ts) and
+        Selection predicates are applied BEFORE ``mvcc.visible``'s dedup
+        window and anti-joins: the window partitions by (series_key, ts) and
         metric/tags are constant per series while ts is a partition key,
         so pre-filtering keeps whole partitions — same results, but the
         MVCC shuffle covers only the selected slice instead of the table
         (without this, the window blocks predicate pushdown and every
         query pays a full-table shuffle).
         """
-        from nexusbase_spark.operators.mvcc import (
-            apply_point_deletes, apply_range_deletes, apply_series_deletes,
-        )
         df, tombs = self._base()
         if metric is not None:
-            df = df.filter(F.col("metric") == metric)
+            df = metric_filter(df, metric)
         if tags:
             # Two-phase tag resolution (tag-index analog): resolve series
             # keys from the catalog driver-side, then push a series_key
@@ -811,31 +759,17 @@ class NexusEngine:
             if keys is not None:
                 df = df.filter(F.col("series_key").isin(keys))
             else:  # catalog absent or too many series: scan-side filter
-                for k, v in tags.items():
-                    df = df.filter(F.col("tags").getItem(k) == v)
+                df = tag_filter(df, tags)
         df = apply_tag_matchers(df, matchers)
         # the day partition filters prune whole day directories — the
         # SSTable key-range skip at the directory level
         if start is not None:
             df = df.filter((F.col("ts") >= start)
-                           & (F.col("day") >= start - start % DAY_NS))
+                           & (F.col("day") >= align(start, DAY_NS)))
         if end is not None:
             df = df.filter((F.col("ts") <= end)
-                           & (F.col("day") <= end - end % DAY_NS))
-        df = df.drop("day")  # partition bookkeeping, not point data
-        # whole-point LWW: the latest seq at (series_key, ts) supersedes ALL
-        # rows (= the whole fields map) of older seqs
-        w = Window.partitionBy("series_key", "ts")
-        df = (df.withColumn("__maxseq", F.max("seq").over(w))
-              .filter(F.col("seq") == F.col("__maxseq")).drop("__maxseq"))
-        # anti-joins only for tombstone kinds that exist: an empty broadcast
-        # join still costs a job, and fresh warehouses have none
-        for kind, apply in (("point", apply_point_deletes),
-                            ("series", apply_series_deletes),
-                            ("range", apply_range_deletes)):
-            if kind in tombs:
-                df = apply(df, tombs[kind])
-        return df
+                           & (F.col("day") <= align(end, DAY_NS)))
+        return visible(df.drop("day"), tombs)  # day: partition bookkeeping
 
     def get(self, metric: str, tags: dict[str, str] | None,
             ts: int) -> dict | None:
@@ -913,12 +847,12 @@ class NexusEngine:
         os.makedirs(d, exist_ok=True)
         last_seq = self._seq - 1
         out = self._rollup_compute(metric, interval_ns, specs)
-        wday = F.col("window_start") - F.pmod(F.col("window_start"), F.lit(DAY_NS))
-        (out.withColumn("wday", wday).write.mode("overwrite")
+        (out.withColumn("wday", align_col(F.col("window_start"), DAY_NS))
+         .write.mode("overwrite")
          .partitionBy("wday").parquet(os.path.join(d, "data")))
-        # schema recorded so rollup() can serve an EMPTY rollup (a
-        # refresh or a restore may delete every day partition; parquet
-        # schema inference has nothing to read then)
+        # schema recorded: rollup() reads data/ with it, so no read runs
+        # an inference job, and one whose day partitions a refresh or a
+        # restore deleted still has its columns
         self._write_rollup_meta(name, {
             "metric": metric, "interval_ns": interval_ns,
             "specs": [[s.func, s.field, s.alias] for s in specs],
@@ -935,8 +869,7 @@ class NexusEngine:
                            downsample_interval=interval_ns)
         df = self.points(metric)
         if day_filter is not None:
-            ws = F.col("ts") - F.pmod(F.col("ts"), F.lit(interval_ns))
-            df = df.filter((ws - F.pmod(ws, F.lit(DAY_NS))).isin(*day_filter))
+            df = df.filter(_window_day(F.col("ts"), interval_ns).isin(*day_filter))
         return _plan_downsample(df, q, None, None)
 
     def _rollup_meta(self, name: str) -> dict:
@@ -955,18 +888,17 @@ class NexusEngine:
                 if os.path.isfile(os.path.join(base, n, "meta.json"))}
 
     def rollup(self, name: str) -> DataFrame:
-        """The materialized rollup as a DataFrame (wday is partition
-        bookkeeping, dropped). A fully-emptied rollup (every day partition
-        deleted by a refresh) short-circuits to an empty frame built from
-        the meta-recorded schema — parquet inference has nothing to read."""
-        data = os.path.join(self._rollup_dir(name), "data")
-        has_parts = os.path.isdir(data) and any(
-            fn.endswith(".parquet")
-            for _dp, _dn, files in os.walk(data) for fn in files)
-        if not has_parts:
-            schema = StructType.fromJson(json.loads(self._rollup_meta(name)["schema"]))
+        """The materialized rollup as a DataFrame, read with the schema
+        meta.json records (no inference job; wday is partition
+        bookkeeping, dropped). A data dir whose day partitions were all
+        deleted by a refresh reads as 0 rows; one removed by a restore
+        gives an empty frame of the same schema."""
+        schema = StructType.fromJson(json.loads(self._rollup_meta(name)["schema"]))
+        df = self._read_dir(os.path.join(self._rollup_dir(name), "data"),
+                            StructType(schema.fields + [StructField("wday", LongType())]))
+        if df is None:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(data).drop("wday")
+        return df.drop("wday")
 
     @_serialized
     def refresh_rollup(self, name: str) -> int:
@@ -983,13 +915,11 @@ class NexusEngine:
         meta = self._rollup_meta(name)
         metric, iv = meta["metric"], meta["interval_ns"]
         last = meta["last_seq"]
-        wday_of = lambda c: c - F.pmod(c, F.lit(DAY_NS))  # noqa: E731
         dirty: set[int] = set()
 
         raw, tombs = self._base()
         new_pts = (raw.filter((F.col("metric") == metric) & (F.col("seq") > last))
-                   .select(wday_of(F.col("ts") - F.pmod(F.col("ts"), F.lit(iv)))
-                           .alias("wd")).distinct())
+                   .select(_window_day(F.col("ts"), iv).alias("wd")).distinct())
         dirty |= {r["wd"] for r in new_pts.collect()}
 
         # every tombstone kind as a (series_key, [min_ts, max_ts]) span —
@@ -1011,7 +941,7 @@ class NexusEngine:
             hit = (roll.join(tomb, "series_key")
                    .filter((F.col("window_start") + iv > F.col("lo"))
                            & (F.col("window_start") <= F.col("hi")))
-                   .select(wday_of(F.col("window_start")).alias("wd"))
+                   .select(align_col(F.col("window_start"), DAY_NS).alias("wd"))
                    .distinct())
             dirty |= {r["wd"] for r in hit.collect()}
 
@@ -1020,7 +950,7 @@ class NexusEngine:
             specs = [AggSpec(*s) for s in meta["specs"]]
             out = (self._rollup_compute(metric, iv, specs,
                                         day_filter=sorted(dirty))
-                   .withColumn("wday", wday_of(F.col("window_start")))
+                   .withColumn("wday", align_col(F.col("window_start"), DAY_NS))
                    .persist())
             try:
                 # ``out`` is persisted and the day-set collect below runs
@@ -1076,13 +1006,11 @@ class NexusEngine:
         meta = self._rollup_meta(name)
         metric, iv = meta["metric"], meta["interval_ns"]
         specs = [AggSpec(*s) for s in meta["specs"]]
-        wday = F.col("window_start") - F.pmod(F.col("window_start"),
-                                              F.lit(DAY_NS))
-        ws = F.col("ts") - F.pmod(F.col("ts"), F.lit(iv))
+        wday = align_col(F.col("window_start"), DAY_NS)
         stored = self.rollup(name)
         days = (stored.select(wday.alias("wd"))
                 .union(self.points(metric).select(
-                    (ws - F.pmod(ws, F.lit(DAY_NS))).alias("wd")))
+                    _window_day(F.col("ts"), iv).alias("wd")))
                 .distinct())
         picked, n = ParquetStore._pinned_sample(days, sample_days)
         checked = sorted(r["wd"] for r in picked.collect())
@@ -1150,8 +1078,7 @@ class NexusEngine:
                 # an explicit partition count is kept by AQE (it only
                 # coalesces shuffles whose count it chose), so each range
                 # partition stays its own file
-                day = F.col("ts") - F.pmod(F.col("ts"), F.lit(DAY_NS))
-                (resolved.withColumn("day", day)
+                (resolved.withColumn("day", align_col(F.col("ts"), DAY_NS))
                  .repartitionByRange(cluster_files, "metric", "day",
                                      "series_key", "ts")
                  .sortWithinPartitions("metric", "day", "series_key", "ts")
@@ -1303,7 +1230,7 @@ class NexusEngine:
             if ((os.path.isdir(self._points_path)
                  or os.path.isdir(self._l0_path))
                     and not self._catalog.exists()):
-                self._catalog.rebuild(self._raw())
+                self._catalog.rebuild(self._base()[0])
         self._seq = self._load_max_seq() + 1
         self._set_l0_batches(0)  # pending-batch count died with the old L0
         self._known_series = self._known_metrics = None  # reload from catalog
@@ -1332,6 +1259,7 @@ class NexusEngine:
             "tombstone_files": {k: _files(p) for k, p in self._tomb.items()},
             "base_scan": {"builds": self._base_builds,
                           "reuses": self._base_reuses},
+            "rollup_rewrites": self.rollup_rewrites,
             "result_cache": {
                 "capacity": self.result_cache.capacity,
                 "entries": len(self.result_cache),
@@ -1417,8 +1345,8 @@ class NexusEngine:
         invalidate the rollup). Callers who want the raw-data view of a
         post-retention range should query an interval the rollup doesn't
         cover or drop the rollup with the retention policy.
-        Increments ``self.rollup_rewrites`` when used (observability +
-        tests)."""
+        Increments ``self.rollup_rewrites`` when used (reported by
+        ``metrics()``)."""
         iv = q.downsample_interval
         if (iv is None or q.downsample_slide
                 or q.emit_empty_windows or q.fill_previous or q.fill_linear
@@ -1448,44 +1376,31 @@ class NexusEngine:
                   and all(s.func in _REAGG for s in want)):
                 coarse_hit = name
         name = exact_hit or coarse_hit  # an exact rollup always wins
-        if name is not None:
-            df = self.rollup(name)
-            if exact_hit is None:
-                # re-window the finer rollup: epoch alignment makes every
-                # fine window nest inside exactly one coarse window
-                # (iv % r_iv == 0), so the coarse answer is a groupBy over
-                # rollup-sized data, never the fact table
-                cols = df.columns
-                # fine windows in [start, end] exactly compose the
-                # aligned coarse range — pre-filter so the re-agg only
-                # touches the queried slice of the rollup
-                if q.start is not None:
-                    df = df.filter(F.col("window_start") >= q.start)
-                if q.end is not None:
-                    df = df.filter(F.col("window_start") <= q.end)
-                ws = (F.col("window_start")
-                      - F.pmod(F.col("window_start"), F.lit(iv)))
-                aggs = [_REAGG[s.func](qcol(s.out_name)).alias(s.out_name)
-                        for s in want]
-                df = (df.withColumn("window_start", ws)
-                      .groupBy("metric", "series_key", "window_start")
-                      .agg(F.first("tags").alias("tags"), *aggs)
-                      .withColumn("window_end",
-                                  F.col("window_start") + F.lit(iv))
-                      .select(*cols))
-            df = apply_tag_matchers(tag_filter(df, q.tags or {}),
-                                    q.tag_matchers)
-            if q.start is not None:
-                df = df.filter(F.col("window_start") >= q.start)
-            if q.end is not None:
-                df = df.filter(F.col("window_start") <= q.end)
-            order = [F.col("window_start"), F.col("series_key")]
-            if q.sort_desc:
-                order = [F.col("window_start").desc(),
-                         F.col("series_key").desc()]
-            self.rollup_rewrites = getattr(self, "rollup_rewrites", 0) + 1
-            return df.orderBy(*order)
-        return None
+        if name is None:
+            return None
+        # aligned: start and end are set. The range filter runs before
+        # any re-windowing, because fine windows in [start, end] exactly
+        # compose the aligned coarse range
+        df = apply_tag_matchers(tag_filter(self.rollup(name), q.tags or {}),
+                                q.tag_matchers)
+        df = df.filter((F.col("window_start") >= q.start)
+                       & (F.col("window_start") <= q.end))
+        if exact_hit is None:
+            # re-window the finer rollup: epoch alignment makes every
+            # fine window nest inside exactly one coarse window
+            # (iv % r_iv == 0), so the coarse answer is a groupBy over
+            # rollup-sized data, never the fact table
+            aggs = [_REAGG[s.func](qcol(s.out_name)).alias(s.out_name)
+                    for s in want]
+            df = (df.withColumn("window_start",
+                                align_col(F.col("window_start"), iv))
+                  .groupBy("metric", "series_key", "window_start")
+                  .agg(F.first("tags").alias("tags"), *aggs)
+                  .withColumn("window_end", F.col("window_start") + F.lit(iv))
+                  .select(*df.columns))
+        with self._base_mu:  # server threads rewrite concurrently
+            self.rollup_rewrites += 1
+        return order_windows(df, q.sort_desc)
 
     def _query_cached(self, q: QueryStatement) -> DataFrame:
         """Serve a QUERY through the result cache: the FULL (unpaginated)
@@ -1518,10 +1433,7 @@ class NexusEngine:
                 return plan_query(self, q)
             entry = CachedResult(gen, rows, full.schema)
             self.result_cache.put(key, entry)
-        rows = paginate_rows(entry.rows, q)
-        if not rows:
-            return self.spark.createDataFrame([], entry.schema)
-        return self.spark.createDataFrame(rows, entry.schema)
+        return self.spark.createDataFrame(paginate_rows(entry.rows, q), entry.schema)
 
     def execute(self, nbql: str, params: tuple | list = ()):
         """Parse + dispatch one NBQL statement (api/nbql/executor.go:29-50).
@@ -1606,5 +1518,5 @@ class NexusEngine:
                 df = df.filter(F.col("window_start") >= stmt.start)
             if stmt.end is not None:
                 df = df.filter(F.col("window_start") <= stmt.end)
-            return df.orderBy("window_start", "series_key")
+            return order_windows(df)
         raise TypeError(f"unhandled statement {type(stmt).__name__}")

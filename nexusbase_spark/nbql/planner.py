@@ -3,7 +3,8 @@
 This is the Spark translation of the reference's inline physical plan
 (engine2/adapter.go:1103-1397): series resolution and range scan become
 declarative filters (Catalyst pushes them into the parquet scan), the k-way
-merge + dedup happened in NexusEngine.points(), aggregation wraps become
+merge + dedup happens in NexusEngine.points() (operators/mvcc.visible),
+RELATIVE anchors through operators/scan.relative_bounds, aggregation wraps become
 groupBy, and cursor/limit become a keyset predicate + TakeOrderedAndProject.
 
 Aggregates and windows are the operator library's (operators/aggregate,
@@ -21,6 +22,10 @@ from nexusbase_spark.functions.fidelity import AggSpec, qcol
 from nexusbase_spark.nbql.ast import QueryStatement, ShowStatement
 from nexusbase_spark.operators.aggregate import final_aggregate
 from nexusbase_spark.operators.downsample import downsample
+from nexusbase_spark.operators.order import (
+    decode_cursor, keyset_after, order_points, order_windows,
+)
+from nexusbase_spark.operators.scan import relative_bounds, time_range
 from nexusbase_spark.operators.timeseries import fill_forward, fill_linear
 
 _NAN = float("nan")
@@ -37,22 +42,17 @@ def _display(vtype: str = "vtype") -> Column:
 
 
 def plan_query(engine, q: QueryStatement) -> DataFrame:
-    from nexusbase_spark.operators.scan import time_range
-
     start, end = q.start, q.end
     series_df = None
     if q.relative is not None:
-        # End anchors to data max-ts when <= now (engine2/adapter.go:1236-1276)
-        unbounded = engine.points(q.metric, q.tags, matchers=q.tag_matchers)
-        now = engine._now_ns()
-        row = unbounded.agg(F.max("ts")).collect()[0]
-        if row[0] is None:
-            return (unbounded.filter(F.lit(False)) if not q.aggregations
-                    else _empty_agg(engine, q))
-        end = min(row[0], now)
-        start = end - q.relative
-        series_df = unbounded
-        df = time_range(unbounded, start, end)  # inclusive
+        series_df = engine.points(q.metric, q.tags, matchers=q.tag_matchers)
+        bounds = relative_bounds(series_df, q.relative, engine._now_ns())
+        if bounds is None:  # no data: the empty answer, planned as usual
+            start, end = 0, 1
+            df = series_df.filter(F.lit(False))
+        else:
+            start, end = bounds
+            df = time_range(series_df, start, end)  # inclusive
     else:
         if end is None and (start is not None or q.aggregations):
             end = engine._now_ns()  # default EndTime=now (engine2/adapter.go:1117-1120)
@@ -73,13 +73,6 @@ def plan_query(engine, q: QueryStatement) -> DataFrame:
         return _plan_final(df, q)
 
     return _plan_raw(df, q)
-
-
-def _empty_agg(engine, q: QueryStatement) -> DataFrame:
-    df = engine.points().filter(F.lit(False))
-    if q.downsample_interval:
-        return _plan_downsample(df, q, 0, 1)
-    return _plan_final(df, q)
 
 
 def _dedup_specs(specs):
@@ -146,10 +139,7 @@ def _plan_downsample(df: DataFrame, q: QueryStatement,
     # the NBQL answer's column order (rollup meta.json records it too)
     agg = agg.select("metric", "series_key", "window_start", "tags",
                      *[qcol(s.out_name) for s in aggs], "window_end")
-    order = [F.col("window_start"), F.col("series_key")]
-    if q.sort_desc:
-        order = [F.col("window_start").desc(), F.col("series_key").desc()]
-    agg = agg.orderBy(*order)
+    agg = order_windows(agg, q.sort_desc)
     if q.limit:
         agg = agg.limit(q.limit)
     return agg
@@ -158,8 +148,6 @@ def _plan_downsample(df: DataFrame, q: QueryStatement,
 def _plan_raw(df: DataFrame, q: QueryStatement) -> DataFrame:
     """Raw points: long rows -> one row per point with a display fields map
     (the QueryResult shape — engine2/adapter.go:1490-1621)."""
-    from nexusbase_spark.operators.order import decode_cursor, keyset_after, order_points
-
     # per-point marker rows are count(*) bookkeeping, not fields
     pts = (
         df.filter(F.col("vtype") != "marker")
@@ -207,13 +195,11 @@ def plan_show(engine, s: ShowStatement) -> DataFrame:
             rows, "id string, type string, created_at string, "
                   "stored_bytes long, total_bytes long, n_files long, "
                   "parent_id string")
-    pts = engine.points()
+    pts = engine.points(s.metric or None)
     if s.what == "stats":
         # extension: live data statistics per metric — points (MVCC-
         # visible), distinct series, ts span. One scan, one tiny rollup;
         # countDistinct's partial sets keep the exchange series-sized.
-        if s.metric:
-            pts = pts.filter(F.col("metric") == s.metric)
         # points() is the LONG view (one row per field): points are
         # distinct (series, ts), field_rows is the long-row count
         return (pts.groupBy("metric")
@@ -226,8 +212,6 @@ def plan_show(engine, s: ShowStatement) -> DataFrame:
     if s.what == "field_keys":
         # extension: distinct (field, vtype) per metric from the long
         # view, marker rows excluded
-        if s.metric:
-            pts = pts.filter(F.col("metric") == s.metric)
         return (pts.filter(F.col("vtype") != "marker")
                 .select("metric", "field", "vtype").distinct()
                 .orderBy("metric", "field", "vtype"))

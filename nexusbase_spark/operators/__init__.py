@@ -3,7 +3,6 @@ from nexusbase_spark.operators.scan import (  # noqa: F401
     tag_filter,
     time_range,
     relative_range,
-    get_point,
 )
 from nexusbase_spark.operators.mvcc import (  # noqa: F401
     dedup_latest,

@@ -22,7 +22,7 @@ correct). Empty-window values: count/sum -> 0, everything else -> NaN
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nexusbase_spark.functions.fidelity import (
@@ -37,6 +37,12 @@ from nexusbase_spark.functions.fidelity import (
 
 def align(ts: int, interval_ns: int) -> int:
     return ts - (ts % interval_ns)
+
+
+def align_col(c: Column, step_ns: int) -> Column:
+    """``align`` as a Column: the start of ``c``'s epoch-aligned
+    ``step_ns`` bucket. pmod keeps it floored for pre-epoch values."""
+    return c - F.pmod(c, F.lit(step_ns))
 
 
 def _grouped_agg(df: DataFrame, win, specs: list[AggSpec], *, layout: str,
@@ -143,8 +149,8 @@ def downsample(
         win = (ts - ts % F.lit(interval_ns)).alias("window_start")
     else:
         # smallest aligned start > ts - interval; largest aligned start <= ts
-        first = ts - interval_ns - F.pmod(ts - interval_ns, F.lit(slide)) + slide
-        last = ts - F.pmod(ts, F.lit(slide))
+        first = align_col(ts - interval_ns, slide) + slide
+        last = align_col(ts, slide)
         rows = df.withColumn(
             "window_start", F.explode(F.sequence(first, last, F.lit(slide))))
         win = F.col("window_start")

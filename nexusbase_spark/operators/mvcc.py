@@ -6,10 +6,11 @@ point ``'D'``, series ``'S'``, and range tombstones — each carrying a seq
 cutoff, so data re-written AFTER a delete (higher seq) is visible again
 (``engine2/adapter.go:2773-2791``, ``iterator/skipping_*_iterator.go``).
 
-Spark mapping: dedup is a window row_number; deletes are small tombstone
-tables applied as broadcast LEFT ANTI joins (seq-aware). At 100TB the
-tombstone tables are tiny relative to data, so the anti-joins stay
-broadcast — no shuffle of the fact table.
+Spark mapping: dedup is a max(seq) window per (series_key, ts); deletes
+are small tombstone tables applied as broadcast LEFT ANTI joins
+(seq-aware). At 100TB the tombstone tables are tiny relative to data, so
+the anti-joins stay broadcast — no shuffle of the fact table.
+``visible`` composes the two and is what ``NexusEngine.points`` returns.
 
 Tombstone table schemas:
     point_deletes(series_key string, ts long, seq long)
@@ -25,19 +26,35 @@ from pyspark.sql.functions import broadcast
 
 
 def dedup_latest(df: DataFrame) -> DataFrame:
-    """Keep the highest-seq row per (series_key, ts) — last write wins
-    (iterator/iterator.go:244-294).
+    """Keep every row of the highest-seq version per (series_key, ts) —
+    last write wins, for the WHOLE point (iterator/iterator.go:244-294,
+    270-289). One version can span several rows: on the long layout a
+    point is one row per field plus its marker, all sharing one seq, so
+    an older version's rows all go and the winner's all stay. On a wide
+    frame (one row per version) this is one row per (series_key, ts).
 
     Scale note: this shuffles on (series_key, ts), the same key the merge
     heap uses; at 100TB dedup-on-ingest (per partition file compaction)
     amortizes it, exactly like the reference's LSM compaction does.
     """
-    w = Window.partitionBy("series_key", "ts").orderBy(F.col("seq").desc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    w = Window.partitionBy("series_key", "ts")
+    return (df.withColumn("__maxseq", F.max("seq").over(w))
+            .filter(F.col("seq") == F.col("__maxseq")).drop("__maxseq"))
+
+
+def visible(df: DataFrame, tombs: dict[str, DataFrame]) -> DataFrame:
+    """The MVCC-visible rows of ``df``: ``dedup_latest``, then the
+    anti-join of each tombstone kind in ``tombs`` (``"point"``,
+    ``"series"``, ``"range"`` -> a frame of the schema above). Kinds
+    absent from ``tombs`` are skipped: an empty broadcast join still
+    costs a job, and a fresh warehouse has no tombstones."""
+    df = dedup_latest(df)
+    for kind, apply in (("point", apply_point_deletes),
+                        ("series", apply_series_deletes),
+                        ("range", apply_range_deletes)):
+        if kind in tombs:
+            df = apply(df, tombs[kind])
+    return df
 
 
 def apply_point_deletes(points: DataFrame, deletes: DataFrame) -> DataFrame:

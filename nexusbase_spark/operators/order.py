@@ -20,7 +20,7 @@ from __future__ import annotations
 import base64
 import json
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 Cursor = tuple[int, str, int]  # (ts, series_key, seq)
@@ -34,26 +34,39 @@ def order_points(df: DataFrame, descending: bool = False) -> DataFrame:
     return df.orderBy(F.col("ts").asc(), F.col("series_key").asc(), F.col("seq").desc())
 
 
-def _after_pred(c: Cursor, descending: bool) -> Column:
-    ts, sk, seq = c
-    t, s = F.col("ts"), F.col("series_key")
+def order_windows(df: DataFrame, descending: bool = False) -> DataFrame:
+    """Downsample/rollup rows in (window_start, series_key) order, both
+    reversed for DESC."""
+    if descending:
+        return df.orderBy(F.col("window_start").desc(), F.col("series_key").desc())
+    return df.orderBy(F.col("window_start"), F.col("series_key"))
+
+
+def _after_pred(ts, sk, seq, c: Cursor, descending: bool):
+    """Strictly after cursor ``c`` in (ts, series_key, seq desc) stream
+    order, for a key (``ts``, ``sk``, ``seq``). seq compares
+    DESC-within-key in both directions (MVCC preference). The key may be
+    Columns (a pushable filter) or one row's Python values (a bool):
+    both support the ``|``/``&`` below."""
+    cts, csk, cseq = c
     if descending:
         return (
-            (t < ts)
-            | ((t == ts) & (s < sk))
-            | ((t == ts) & (s == sk) & (F.col("seq") < seq))
+            (ts < cts)
+            | ((ts == cts) & (sk < csk))
+            | ((ts == cts) & (sk == csk) & (seq < cseq))
         )
     return (
-        (t > ts)
-        | ((t == ts) & (s > sk))
-        | ((t == ts) & (s == sk) & (F.col("seq") < seq))
+        (ts > cts)
+        | ((ts == cts) & (sk > csk))
+        | ((ts == cts) & (sk == csk) & (seq < cseq))
     )
 
 
 def keyset_after(df: DataFrame, cursor: Cursor, descending: bool = False) -> DataFrame:
     """Strictly-after filter (skip-up-to-and-including-cursor semantics,
     iterator/skipping_iterator.go:28-48)."""
-    return df.filter(_after_pred(cursor, descending))
+    return df.filter(_after_pred(F.col("ts"), F.col("series_key"), F.col("seq"),
+                                 cursor, descending))
 
 
 def encode_cursor(ts: int, series_key: str, seq: int) -> str:

@@ -1,4 +1,4 @@
-"""Access path: metric / tag / time-range filters.
+"""Access path: metric / tag / tag-matcher / time-range filters.
 
 Reference: series resolution via roaring-bitmap tag index AND-intersection
 (``indexer/tag_index_manager2.go:247-315``) + per-series LSM key-range scan
@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _EPOCH = datetime.datetime(1970, 1, 1)
@@ -75,21 +75,82 @@ def time_range(df: DataFrame, start: int | None, end: int | None) -> DataFrame:
     return out
 
 
-def relative_range(df: DataFrame, duration_ns: int, now_ns: int | None = None) -> DataFrame:
-    """FROM RELATIVE(dur): End anchors to the data's max ts when that is
-    <= clock-now (reference quirk, engine2/adapter.go:1236-1276);
-    Start = End - dur. Requires one small max() action over the already
-    metric/tag-filtered frame (aggregate pushdown keeps it a stats read).
-    """
-    row = df.agg(F.max("ts").alias("m")).collect()[0]
-    max_ts = row["m"]
+def relative_bounds(df: DataFrame, duration_ns: int,
+                    now_ns: int | None = None) -> tuple[int, int] | None:
+    """FROM RELATIVE(dur) bounds: End anchors to the data's max ts when
+    that is <= clock-now (reference quirk, engine2/adapter.go:1236-1276);
+    Start = End - dur. None when ``df`` holds no row. One small max()
+    action over the already metric/tag-filtered frame (aggregate pushdown
+    keeps it a stats read)."""
+    max_ts = df.agg(F.max("ts")).collect()[0][0]
     if max_ts is None:
+        return None
+    end = max_ts if now_ns is None else min(max_ts, now_ns)
+    return end - duration_ns, end
+
+
+def relative_range(df: DataFrame, duration_ns: int, now_ns: int | None = None) -> DataFrame:
+    """``df`` restricted to its RELATIVE(dur) window (``relative_bounds``),
+    inclusive both ends; empty when ``df`` is."""
+    bounds = relative_bounds(df, duration_ns, now_ns)
+    if bounds is None:
         return df.filter(F.lit(False))
-    end = max_ts if (now_ns is None or max_ts <= now_ns) else now_ns
-    return time_range(df, end - duration_ns, end)
+    return time_range(df, *bounds)
 
 
-def get_point(df: DataFrame, metric: str, tags: dict[str, str], ts: int) -> DataFrame:
-    """gRPC Get: point lookup at exact (metric, tags, ts)
-    (engine2/adapter.go:751-907)."""
-    return time_range(tag_filter(metric_filter(df, metric), tags), ts, ts)
+def _validated_regex(spark: SparkSession, pattern: str) -> str:
+    """Reject an invalid =~ / !~ pattern at PLAN time as NBQLError.
+    rlike compiles the pattern inside whole-stage codegen, so a bad
+    client pattern otherwise aborts the whole Spark JOB with a raw
+    PatternSyntaxException out of an executor task (found by matcher
+    fuzzing). Validated against java.util.regex itself — the exact
+    dialect the executor uses (Python's re accepts e.g. 'a{,' which
+    Java rejects, so re.compile would under-reject)."""
+    from nexusbase_spark.nbql.parser import NBQLError
+
+    try:
+        spark._jvm.java.util.regex.Pattern.compile(pattern)
+    except Exception as e:
+        # Only a PatternSyntaxException is a CLIENT error; anything else
+        # (dead gateway, connection reset) is a server fault and must
+        # propagate as one, not be misreported as a bad pattern
+        # (ADVICE r8). The throwable rides on `java_exception` for a
+        # raw Py4JJavaError and on `_origin` after pyspark's
+        # capture-conversion (PatternSyntaxException arrives as a
+        # captured IllegalArgumentException).
+        je = getattr(e, "java_exception", None)
+        if je is None:
+            je = getattr(e, "_origin", None)
+        try:
+            jclass = je.getClass().getName() if je is not None else None
+        except Exception:
+            jclass = None
+        if jclass != "java.util.regex.PatternSyntaxException":
+            raise
+        msg = je.getMessage()
+        raise NBQLError(
+            f"invalid tag matcher regex {pattern!r}: "
+            f"{str(msg).splitlines()[0]}") from None
+    return pattern
+
+
+def apply_tag_matchers(df: DataFrame, matchers) -> DataFrame:
+    """Filter ``df`` by NBQL's non-equality tag matchers, ``(key, op,
+    value)`` with op ``!=``, ``=~`` or ``!~``: the tag must EXIST and
+    differ / (not) match. These are scan-side predicates; equality rides
+    the catalog IN-list instead (``tag_filter`` without a catalog). A
+    future optimization is resolving regexes against the catalog too
+    (series-sized), then pushing the same IN-list."""
+    for k, op, v in (matchers or []):
+        tv = F.col("tags").getItem(k)
+        if op == "!=":
+            df = df.filter(tv.isNotNull() & (tv != v))
+        elif op == "=~":
+            df = df.filter(tv.isNotNull()
+                           & tv.rlike(_validated_regex(df.sparkSession, v)))
+        elif op == "!~":
+            df = df.filter(tv.isNotNull()
+                           & ~tv.rlike(_validated_regex(df.sparkSession, v)))
+        else:
+            raise ValueError(f"unknown tag matcher op: {op!r}")
+    return df

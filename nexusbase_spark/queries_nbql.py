@@ -6,20 +6,25 @@ the operator library.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nexusbase_spark.datamodel import load_table, series_key_expr, source_ts_ns
-from nexusbase_spark.engine import apply_tag_matchers
 from nexusbase_spark.nbql.parser import parse
-from nexusbase_spark.operators.scan import tag_filter
+from nexusbase_spark.operators.scan import (
+    apply_tag_matchers, metric_filter, tag_filter, time_range,
+)
 from nexusbase_spark.queries import DAY_NS, T1, T2, register
 
 
 class StaticEngine:
     """Read-only engine facade over a fixed long-format points frame —
     what NexusEngine.points() returns, minus the warehouse. The frame
-    carries per-point marker rows, as the warehouse does."""
+    carries per-point marker rows, as the warehouse does. Every event is
+    a point of its own, as in the oracle SQL, so selection is the operator
+    library's scan filters alone; there is no MVCC step."""
 
     def __init__(self, spark: SparkSession, points: DataFrame):
         self.spark = spark
@@ -29,21 +34,13 @@ class StaticEngine:
                tags: dict[str, str] | None = None,
                start: int | None = None, end: int | None = None,
                matchers: list | None = None) -> DataFrame:
-        from pyspark.sql import functions as F
         df = self._points
         if metric is not None:
-            df = df.filter(F.col("metric") == metric)
+            df = metric_filter(df, metric)
         df = apply_tag_matchers(tag_filter(df, tags or {}), matchers)
-        if start is not None:
-            df = df.filter(F.col("ts") >= start)
-        if end is not None:
-            df = df.filter(F.col("ts") <= end)
-        return df
+        return time_range(df, start, end)
 
-    @staticmethod
-    def _now_ns() -> int:
-        import time
-        return time.time_ns()
+    _now_ns = staticmethod(time.time_ns)
 
     def query(self, q) -> DataFrame:
         from nexusbase_spark.nbql.planner import plan_query
@@ -51,6 +48,20 @@ class StaticEngine:
 
     def execute(self, nbql: str) -> DataFrame:
         return self.query(parse(nbql))
+
+
+_F_TYPES = {"f_double": "double", "f_long": "long", "f_string": "string",
+            "f_bool": "boolean"}
+
+
+def _long_rows(base: DataFrame, keys: list, field: str, vtype: str,
+               typed: dict) -> DataFrame:
+    """One long-format row per row of ``base``: ``keys``, field, vtype,
+    then the f_* columns, taken from ``typed`` (f_* name -> Column) or
+    NULL."""
+    return base.select(
+        *keys, F.lit(field).alias("field"), F.lit(vtype).alias("vtype"),
+        *[typed.get(c, F.lit(None).cast(t)).alias(c) for c, t in _F_TYPES.items()])
 
 
 def events_long(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,29 +76,10 @@ def events_long(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").cast("double").alias("value"),
         F.get_json_object(F.col("props"), "$.k").cast("long").alias("k"),
     ).withColumn("series_key", series_key_expr(F.col("metric"), F.col("tags")))
-    val = base.select(
-        "metric", "tags", "series_key", "ts", "seq",
-        F.lit("value").alias("field"), F.lit("float").alias("vtype"),
-        F.col("value").alias("f_double"), F.lit(None).cast("long").alias("f_long"),
-        F.lit(None).cast("string").alias("f_string"),
-        F.lit(None).cast("boolean").alias("f_bool"),
-    )
-    kf = base.select(
-        "metric", "tags", "series_key", "ts", "seq",
-        F.lit("k").alias("field"), F.lit("int").alias("vtype"),
-        F.lit(None).cast("double").alias("f_double"), F.col("k").alias("f_long"),
-        F.lit(None).cast("string").alias("f_string"),
-        F.lit(None).cast("boolean").alias("f_bool"),
-    )
-    mk = base.select(
-        "metric", "tags", "series_key", "ts", "seq",
-        F.lit("").alias("field"), F.lit("marker").alias("vtype"),
-        F.lit(None).cast("double").alias("f_double"),
-        F.lit(None).cast("long").alias("f_long"),
-        F.lit(None).cast("string").alias("f_string"),
-        F.lit(None).cast("boolean").alias("f_bool"),
-    )
-    return val.unionByName(kf).unionByName(mk)
+    keys = ["metric", "tags", "series_key", "ts", "seq"]
+    return (_long_rows(base, keys, "value", "float", {"f_double": F.col("value")})
+            .unionByName(_long_rows(base, keys, "k", "int", {"f_long": F.col("k")}))
+            .unionByName(_long_rows(base, keys, "", "marker", {})))
 
 
 def _engine(spark, sf_dir) -> StaticEngine:
@@ -331,17 +323,13 @@ def _rollup_engine(spark: SparkSession, sf_dir: str):
     if sf_dir not in _ROLLUP_CACHE:
         ev = load_table(spark, sf_dir, "events").filter(
             F.col("event_type") == "click")
-        long = ev.select(
+        base = ev.select(
             F.lit("click").alias("metric"),
             F.create_map(F.lit("user"), F.col("user_id").cast("string")).alias("tags"),
-            source_ts_ns(ev).alias("ts"),
-            F.lit("value").alias("field"), F.lit("float").alias("vtype"),
-            F.col("value").cast("double").alias("f_double"),
-            F.lit(None).cast("long").alias("f_long"),
-            F.lit(None).cast("string").alias("f_string"),
-            F.lit(None).cast("boolean").alias("f_bool"),
-            F.col("event_id").alias("__eid"),
-        )
+            source_ts_ns(ev).alias("ts"), F.col("event_id").alias("__eid"),
+            F.col("value").cast("double").alias("value"))
+        long = _long_rows(base, ["metric", "tags", "ts", "__eid"], "value",
+                          "float", {"f_double": F.col("value")})
         wh = tempfile.mkdtemp(prefix="nexusbase_rollup_")
         eng = NexusEngine(spark, wh)
         eng.ingest_frame(long.filter(F.col("__eid") % 3 != 0).drop("__eid"))
@@ -439,13 +427,12 @@ def q_nbql_tag_matchers_rollup(spark, sf_dir):
     downsample + matcher filter from the raw events table, so a rollup
     serving stale or mis-filtered windows cannot match."""
     eng = _rollup_engine(spark, sf_dir)
-    before = getattr(eng, "rollup_rewrites", 0)
+    before = eng.rollup_rewrites
     df = eng.execute(
         f'QUERY click FROM {T1} TO {T2 - 1} '
         'TAGGED (user=~"^1[0-9]$", user!="12") '
         'AGGREGATE BY 1d (count(*), sum(value), avg(value))')
-    after = getattr(eng, "rollup_rewrites", 0)
-    if after != before + 1:  # pragma: no cover - wiring assertion
+    if eng.rollup_rewrites != before + 1:  # pragma: no cover - wiring assertion
         raise AssertionError(
             "tag-matcher downsample was NOT served from the rollup")
     return df.select(

@@ -47,8 +47,6 @@ def required_role(stmt) -> str:
 def _json_cell(v):
     if isinstance(v, float) and (math.isnan(v) or math.isinf(v)):
         return str(v)  # JSON has no NaN/Inf literals; reference emits strings
-    if isinstance(v, dict):
-        return v
     return v
 
 
@@ -90,11 +88,8 @@ def execute_to_json(engine: NexusEngine, query, params=()) -> dict:
         with engine.read_guard():  # pin files: construction AND drain
             out = engine._dispatch(stmt)
             rows = out.collect()
-    results = []
-    for r in rows:
-        d = r.asDict(recursive=True)
-        d.pop("__raw_ts", None)
-        results.append({k: _json_cell(v) for k, v in d.items()})
+    results = [{k: _json_cell(v) for k, v in r.asDict(recursive=True).items()}
+               for r in rows]
     body: dict = {"results": results, "status": "OK"}
     # keyset cursor for raw point pages (api/nbql/executor.go:347-351)
     if rows and {"ts", "series_key", "seq"} <= set(rows[0].asDict()):

@@ -4,10 +4,12 @@ The reference resolves duplicates last-write-wins by seq
 (iterator/iterator.go:61-62,270-289) and applies three tombstone kinds,
 each with a seq cutoff so a LATER re-push resurrects the point
 (engine2/adapter.go:909-1030,2773-2791). This drives random interleaved
-put / delete-point / delete-series / delete-range sequences through the
-Spark operator pipeline (dedup window + the three anti-joins, the same
-composition engine.points() uses) and checks every visible (series, ts,
-winning seq, value) against an oracle computed from first principles.
+put / delete-point / delete-series / delete-range sequences through
+``operators.mvcc.visible`` (the dedup window + the three anti-joins, the
+function engine.points() returns through) and checks every visible
+(series, ts, winning seq) against an oracle computed from first
+principles. Each put writes the engine's long layout: two field rows plus
+the marker row, all at one seq, so a winning version must keep all three.
 """
 
 from __future__ import annotations
@@ -16,15 +18,11 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from nexusbase_spark.operators.mvcc import (
-    apply_point_deletes,
-    apply_range_deletes,
-    apply_series_deletes,
-    dedup_latest,
-)
+from nexusbase_spark.operators import mvcc
 
 SERIES = ["m|h=a", "m|h=b", "n|h=a"]
 TS = list(range(5))
+FIELDS = ["a", "b", ""]  # two field rows and the marker row per put
 
 OP = st.one_of(
     st.tuples(st.just("put"), st.sampled_from(SERIES), st.sampled_from(TS)),
@@ -69,20 +67,24 @@ def model_visible(ops):
 
 
 def spark_visible(spark, puts, tomb_point, tomb_series, tomb_range):
+    """Visible (series, ts, seq, field) rows of ``mvcc.visible`` over the
+    puts in long layout."""
     pts = spark.createDataFrame(
-        [(sk, ts, seq, float(seq)) for sk, ts, seq in puts],
-        "series_key string, ts long, seq long, value double")
-    out = dedup_latest(pts)
-    if tomb_point:
-        out = apply_point_deletes(out, spark.createDataFrame(
-            tomb_point, "series_key string, ts long, seq long"))
-    if tomb_series:
-        out = apply_series_deletes(out, spark.createDataFrame(
-            tomb_series, "series_key string, seq long"))
-    if tomb_range:
-        out = apply_range_deletes(out, spark.createDataFrame(
-            tomb_range, "series_key string, min_ts long, max_ts long, seq long"))
-    return {(r["series_key"], r["ts"], r["seq"]) for r in out.collect()}
+        [(sk, ts, seq, f, float(seq)) for sk, ts, seq in puts for f in FIELDS],
+        "series_key string, ts long, seq long, field string, value double")
+    kinds = {"point": (tomb_point, "series_key string, ts long, seq long"),
+             "series": (tomb_series, "series_key string, seq long"),
+             "range": (tomb_range, "series_key string, min_ts long, "
+                                   "max_ts long, seq long")}
+    tombs = {k: spark.createDataFrame(rows, schema)
+             for k, (rows, schema) in kinds.items() if rows}
+    return {(r["series_key"], r["ts"], r["seq"], r["field"])
+            for r in mvcc.visible(pts, tombs).collect()}
+
+
+def long_rows(versions):
+    """(series, ts, seq) versions -> their long-layout row keys."""
+    return {(sk, ts, seq, f) for sk, ts, seq in versions for f in FIELDS}
 
 
 @pytest.mark.slow
@@ -95,7 +97,7 @@ def test_mvcc_tombstone_interleavings(spark, ops):
         ops = ops + [("put", SERIES[0], 0)]
     visible, puts, tp, tsr, trg = model_visible(ops)
     got = spark_visible(spark, puts, tp, tsr, trg)
-    assert got == visible, f"ops={ops}"
+    assert got == long_rows(visible), f"ops={ops}"
 
 
 def test_mvcc_resurrect_after_each_delete_kind(spark):
@@ -114,4 +116,15 @@ def test_mvcc_resurrect_after_each_delete_kind(spark):
     ]
     visible, puts, tp, tsr, trg = model_visible(ops)
     assert visible == {("m|h=a", 1, 2), ("m|h=b", 2, 5), ("n|h=a", 3, 8)}
-    assert spark_visible(spark, puts, tp, tsr, trg) == visible
+    assert spark_visible(spark, puts, tp, tsr, trg) == long_rows(visible)
+
+
+def test_dedup_latest_keeps_every_row_of_the_winning_version(spark):
+    """On the long layout a point version is its field rows plus its
+    marker, all at one seq: last write wins for the whole version, so the
+    newest version keeps all three rows and the older one keeps none."""
+    rows = [("m|h=a", 1, seq, f, float(seq)) for seq in (3, 7) for f in FIELDS]
+    df = spark.createDataFrame(
+        rows, "series_key string, ts long, seq long, field string, value double")
+    got = sorted((r["seq"], r["field"]) for r in mvcc.dedup_latest(df).collect())
+    assert got == [(7, ""), (7, "a"), (7, "b")]

@@ -311,6 +311,18 @@ def test_relative_query(engine):
     assert len(rows) == 1 and rows[0]["fields"]["v"] == "2.0"
 
 
+def test_relative_query_without_data_keeps_result_columns(engine):
+    """RELATIVE over a metric with no points is planned like any other
+    query: an empty answer with the raw result's columns (not the
+    engine's long layout), and an aggregate answer with its own."""
+    raw = engine.execute("QUERY e2e.rel_none FROM RELATIVE(1m)")
+    assert raw.collect() == []
+    assert raw.columns == engine.execute("QUERY e2e.rel_none FROM 0 TO 1").columns
+    agg = engine.execute(
+        "QUERY e2e.rel_none FROM RELATIVE(1m) AGGREGATE (count(v))")
+    assert agg.collect() == [] and "count_v" in agg.columns
+
+
 def test_snapshot_restore(engine):
     snap = engine.execute("SNAPSHOT")
     before = engine.execute("SHOW METRICS").count()

@@ -75,7 +75,7 @@ def test_rollup_refresh_applies_deletes(eng):
 def test_rollup_emptied_completely_still_readable(eng):
     """A refresh that deletes EVERY remaining day partition must leave the
     rollup queryable (regression: parquet schema inference has nothing to
-    read; rollup() now short-circuits to an empty frame from meta)."""
+    read; rollup() reads with the schema meta.json records)."""
     eng.create_rollup("r", "m", DAY, SPECS)
     eng.delete_series("m", {"h": "a"})
     eng.delete_series("m", {"h": "b"})
@@ -88,6 +88,34 @@ def test_rollup_emptied_completely_still_readable(eng):
     eng.put_batch([("m", {"h": "c"}, {"v": 5.0}, D0)])
     assert eng.refresh_rollup("r") == 1
     assert _materialized(eng) == _direct(eng)
+
+
+def test_query_rollup_runs_no_schema_inference_job(spark, eng):
+    """rollup() reads with the schema meta.json records, so QUERY ROLLUP
+    launches no "parquet at ..." schema-inference job."""
+    eng.create_rollup("r", "m", DAY, SPECS)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("query-rollup", "rollup read guard")
+    try:
+        rows = eng.execute("QUERY ROLLUP r").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == len(_direct(eng))
+    names = [tracker.getStageInfo(s).name
+             for j in tracker.getJobIdsForGroup("query-rollup")
+             for s in tracker.getJobInfo(j).stageIds]
+    assert names and not [n for n in names if n.startswith("parquet at")], names
+
+
+def test_rollup_rewrites_reported_in_metrics(eng):
+    """The rewrite counter exists from the start and metrics() reports
+    it beside the base-scan counters."""
+    assert eng.metrics()["rollup_rewrites"] == 0
+    eng.create_rollup("r", "m", DAY, SPECS)
+    eng.execute(f"QUERY m FROM {D0} TO {D0 + 2 * DAY - 1} AGGREGATE BY 1d "
+                "(count(*), sum(v), avg(v))").collect()
+    assert eng.metrics()["rollup_rewrites"] == eng.rollup_rewrites == 1
 
 
 @pytest.mark.nightly
@@ -187,7 +215,7 @@ def test_restore_resets_rollups(eng):
     assert eng._seq - 1 == stale_last
     rows = eng.execute(f"QUERY m FROM {D0} TO {D0 + 8 * DAY - 1} AGGREGATE BY 1d "
                        "(count(*), sum(v), avg(v))").collect()
-    assert getattr(eng, "rollup_rewrites", 0) == 0
+    assert eng.rollup_rewrites == 0
     assert D0 + 5 * DAY not in {r["window_start"] for r in rows}
     eng.refresh_rollup("r")
     assert _materialized(eng) == _direct(eng)
@@ -262,7 +290,7 @@ def test_rollup_transparent_rewrite(eng):
                 for r in eng.execute(nbql).collect()}
 
     served = run()
-    assert getattr(eng, "rollup_rewrites", 0) == 1
+    assert eng.rollup_rewrites == 1
     # unaligned range must NOT rewrite (edge windows are partial)
     eng.execute(f"QUERY m FROM {a + 1} TO {b} AGGREGATE BY 1d "
                 "(count(*), sum(v), avg(v))").collect()
@@ -292,7 +320,7 @@ def test_rollup_rewrite_serves_tag_filters(eng):
     nbql = (f'QUERY m FROM {a} TO {b} TAGGED (h="a") '
             "AGGREGATE BY 1d (count(*), sum(v), avg(v))")
     rows = eng.execute(nbql).collect()
-    assert getattr(eng, "rollup_rewrites", 0) == 1
+    assert eng.rollup_rewrites == 1
     assert rows and all(r["series_key"] == "m|h=a" for r in rows)
     # regex matcher path: unanchored =~"b" matches h=b AND h=bb; the
     # anchored form narrows to bb alone
@@ -364,11 +392,11 @@ def test_rollup_rewrite_coarser_reaggregation(eng):
     t1, t2 = D0, D0 + 4 * DAY - 1          # 2 aligned 2-day windows
     q = (f"QUERY m FROM {t1} TO {t2} AGGREGATE BY 2d "
          "(count(*), sum(v), min(v), max(v))")
-    before = getattr(eng, "rollup_rewrites", 0)
+    before = eng.rollup_rewrites
     served = {(r["series_key"], r["window_start"]):
               (r["count_*"], r["sum_v"], r["min_v"], r["max_v"])
               for r in eng.execute(q).collect()}
-    assert getattr(eng, "rollup_rewrites", 0) == before + 1
+    assert eng.rollup_rewrites == before + 1
     direct = {(r["series_key"], r["window_start"]):
               (r["count_*"], r["sum_v"], r["min_v"], r["max_v"])
               for r in eng._rollup_compute("m", 2 * DAY, specs)
@@ -377,18 +405,18 @@ def test_rollup_rewrite_coarser_reaggregation(eng):
     assert served == direct and served
 
     # avg is not re-aggregable -> no rewrite for the coarser interval
-    n = getattr(eng, "rollup_rewrites", 0)
+    n = eng.rollup_rewrites
     eng.execute(f"QUERY m FROM {t1} TO {t2} AGGREGATE BY 2d (avg(v))")
-    assert getattr(eng, "rollup_rewrites", 0) == n
+    assert eng.rollup_rewrites == n
 
     # an exact 2d rollup now exists -> it wins (still one rewrite, and
     # the direct-interval path needs no re-agg)
     eng.create_rollup("coarse", "m", 2 * DAY, specs)
-    n = getattr(eng, "rollup_rewrites", 0)
+    n = eng.rollup_rewrites
     again = {(r["series_key"], r["window_start"]):
              (r["count_*"], r["sum_v"], r["min_v"], r["max_v"])
              for r in eng.execute(q).collect()}
-    assert getattr(eng, "rollup_rewrites", 0) == n + 1
+    assert eng.rollup_rewrites == n + 1
     assert again == served
 
 
