@@ -62,10 +62,6 @@ def series_key_expr(metric: Column, tags: Column) -> Column:
     return F.concat(metric, F.lit("|"), F.array_join(kv, ","))
 
 
-def with_series_key(df: DataFrame) -> DataFrame:
-    return df.withColumn("series_key", series_key_expr(F.col("metric"), F.col("tags")))
-
-
 def source_ts_ns(df: DataFrame, col: str = "ts") -> Column:
     """Source timestamp column -> canonical long epoch-nanoseconds.
 

@@ -165,9 +165,8 @@ def _nan_blind(c: Column) -> Column:
     return F.when(F.isnan(c), F.lit(None)).otherwise(c)
 
 
-def resolve_percentile_impl(approx_percentile: bool,
-                            percentile_impl: str | None) -> str:
-    impl = percentile_impl or ("approx" if approx_percentile else "exact")
+def resolve_percentile_impl(percentile_impl: str | None) -> str:
+    impl = percentile_impl or "exact"
     if impl not in ("exact", "approx", "tdigest"):
         raise ValueError(f"unknown percentile_impl {impl!r}")
     return impl
@@ -192,7 +191,6 @@ def build_agg_exprs(
     layout: WideLayout | LongLayout,
     *,
     skip_non_finite: bool,
-    approx_percentile: bool = False,
     percentile_impl: str | None = None,
 ) -> list[Column]:
     """Build the aggregate expressions for one groupBy.
@@ -205,9 +203,8 @@ def build_agg_exprs(
     the DuckDB-oracle path), ``"approx"`` (Spark's built-in mergeable
     sketch — the JVM-side scale path), or ``"tdigest"`` (strict parity
     with the reference's go-tdigest accumulator, functions/tdigest.py).
-    ``approx_percentile=True`` is the legacy spelling of "approx".
     """
-    impl = resolve_percentile_impl(approx_percentile, percentile_impl)
+    impl = resolve_percentile_impl(percentile_impl)
     # Multi-percentile buffer sharing (r10): N separate percentile(col, q)
     # aggregates each hold an INDEPENDENT buffer of every value in the
     # group (exact) or an independent sketch (approx) — for p50/p95/p99

@@ -17,7 +17,6 @@ from nexusbase_spark.operators.order import (  # noqa: F401
     keyset_after,
     encode_cursor,
     decode_cursor,
-    paginate,
 )
 from nexusbase_spark.operators.joins import (  # noqa: F401
     asof_join,

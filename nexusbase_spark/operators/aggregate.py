@@ -25,7 +25,6 @@ def final_aggregate(
     specs: list[AggSpec],
     *,
     layout: str = "wide",
-    approx_percentile: bool = False,
     percentile_impl: str | None = None,
     keep_metric: bool = False,
 ) -> DataFrame:
@@ -36,7 +35,7 @@ def final_aggregate(
     with other functions, the percentiles aggregate separately (grouped-
     agg pandas UDFs can't share an agg() with JVM aggregates) and the two
     single-row (or per-metric) results join back."""
-    impl = resolve_percentile_impl(approx_percentile, percentile_impl)
+    impl = resolve_percentile_impl(percentile_impl)
     jvm_specs, td_specs = split_percentile_specs(specs, impl)
     lay = layout_of(df, layout)
     if not (td_specs and jvm_specs):

@@ -46,7 +46,7 @@ def align_col(c: Column, step_ns: int) -> Column:
 
 
 def _grouped_agg(df: DataFrame, win, specs: list[AggSpec], *, layout: str,
-                 skip_non_finite: bool, approx_percentile: bool,
+                 skip_non_finite: bool,
                  percentile_impl: str | None) -> DataFrame:
     """groupBy (metric, series_key, tags, window_start) with the spec
     aggregates. With percentile_impl="tdigest" and a mixed spec list the
@@ -54,7 +54,7 @@ def _grouped_agg(df: DataFrame, win, specs: list[AggSpec], *, layout: str,
     same keys (Spark forbids mixing them with JVM aggregates in one
     agg()), joined back co-partitioned; column order follows ``specs``
     either way."""
-    impl = resolve_percentile_impl(approx_percentile, percentile_impl)
+    impl = resolve_percentile_impl(percentile_impl)
     jvm_specs, td_specs = split_percentile_specs(specs, impl)
     lay = layout_of(df, layout)
     # tags is NOT a grouping key: series_key is the canonical sorted-tag
@@ -98,7 +98,6 @@ def downsample(
     q_start: int | None = None,
     q_end: int | None = None,
     empty_value: float = float("nan"),
-    approx_percentile: bool = False,
     percentile_impl: str | None = None,
     series_universe: DataFrame | None = None,
 ) -> DataFrame:
@@ -146,7 +145,7 @@ def downsample(
     ts = F.col("ts")
     rows = df
     if slide == interval_ns:
-        win = (ts - ts % F.lit(interval_ns)).alias("window_start")
+        win = align_col(ts, interval_ns).alias("window_start")
     else:
         # smallest aligned start > ts - interval; largest aligned start <= ts
         first = align_col(ts - interval_ns, slide) + slide
@@ -155,7 +154,6 @@ def downsample(
             "window_start", F.explode(F.sequence(first, last, F.lit(slide))))
         win = F.col("window_start")
     agg = _grouped_agg(rows, win, specs, layout=layout, skip_non_finite=False,
-                       approx_percentile=approx_percentile,
                        percentile_impl=percentile_impl)
 
     if emit_empty:

@@ -91,22 +91,3 @@ def decode_cursor(cursor: str) -> Cursor:
         raise
     except Exception as e:
         raise NBQLError(f"invalid cursor: {e}") from e
-
-
-def paginate(
-    df: DataFrame,
-    limit: int,
-    after: str | None = None,
-    descending: bool = False,
-) -> tuple[DataFrame, str | None]:
-    """One page + the next cursor (None when the page wasn't full)."""
-    page_df = df
-    if after:
-        page_df = keyset_after(page_df, decode_cursor(after), descending)
-    rows = order_points(page_df, descending).limit(limit).collect()
-    next_cursor = None
-    if len(rows) == limit:
-        last = rows[-1]
-        next_cursor = encode_cursor(last["ts"], last["series_key"], last["seq"])
-    page = df.sparkSession.createDataFrame(rows, df.schema) if rows else df.limit(0)
-    return page, next_cursor

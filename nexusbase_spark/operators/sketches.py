@@ -117,19 +117,11 @@ def cms_merge(*sketches: DataFrame) -> DataFrame:
 
 def cms_estimate(sketch: DataFrame, items: list[str], depth: int = 4,
                  width: int = 256) -> DataFrame:
-    """Point-query estimates: min over rows j of the item's cell count
-    (absent cell = 0). The probe plan joins a k-item literal frame
-    against the d*w-bounded sketch — milliseconds, never the corpus."""
-    spark = sketch.sparkSession
-    probe = spark.createDataFrame([(it,) for it in items], "item string")
-    cells = probe.select("item", F.explode(F.array(*[
-        F.struct(F.lit(j).alias("j"),
-                 _cms_cell(F.col("item"), j, width).alias("cell"))
-        for j in range(depth)])).alias("e")).select("item", "e.j", "e.cell")
-    joined = (cells.join(sketch, ["j", "cell"], "left")
-              .select("item", F.coalesce("cnt", F.lit(0)).alias("c")))
-    return (joined.groupBy("item")
-            .agg(F.min("c").cast("long").alias("estimate")))
+    """Point-query estimates for a driver-side item list: ``cms_estimate_df``
+    over a k-item literal frame — milliseconds, never the corpus."""
+    probe = sketch.sparkSession.createDataFrame([(it,) for it in items],
+                                                "item string")
+    return cms_estimate_df(sketch, probe, "item", depth, width)
 
 
 # the CMSStore layer cms_candidate_gate appends its threshold-crossers to
@@ -190,10 +182,11 @@ class CMSStore(ParquetStore):
 
 def cms_estimate_df(sketch: DataFrame, probe: DataFrame, col: str,
                     depth: int = 4, width: int = 256) -> DataFrame:
-    """Distributed point-query estimates: like ``cms_estimate`` but the
-    probe set is a DataFrame column, never a driver-side list — the form
-    a streaming gate needs when a micro-batch's distinct-token set is
-    itself too large to collect. Output: (item, estimate). The join is
+    """Point-query estimates: min over rows j of the item's cell count
+    (absent cell = 0). The probe set is a DataFrame column, not a
+    driver-side list — the form a streaming gate needs when a
+    micro-batch's distinct-token set is itself too large to collect.
+    Output: (item, estimate), one row per distinct item. The join is
     probe x d rows against the d*w-bounded sketch (broadcast-sized by
     construction), so cost tracks the probe, not the corpus."""
     cells = (probe.select(F.col(col).alias("item")).distinct()

@@ -19,9 +19,6 @@ from nexusbase_spark.pipeline.text import (  # noqa: F401
 from nexusbase_spark.pipeline.dedup import (  # noqa: F401
     exact_dedup_groups,
     shingle_sets,
-    minhash_signatures,
-    lsh_candidate_pairs,
-    jaccard_pairs,
     near_dup_pairs,
     simhash,
 )

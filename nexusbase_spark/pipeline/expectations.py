@@ -26,6 +26,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nexusbase_spark.store import ParquetStore
+
 
 def _violation_expr(kind: str, col: str, arg) -> Column:
     c = F.col(col)
@@ -150,15 +152,8 @@ def expectations_sink(checks: list[dict], report_path: str):
     Note ref-integrity checks against a FIXED dimension work per batch;
     uniqueness is per-batch only (cross-batch uniqueness is the
     DedupIndex's job — state in a store, not in a stream)."""
-    from pyspark.sql import functions as F  # noqa: F811
-
-    def run(batch: DataFrame, batch_id: int) -> None:
-        if not batch.head(1):
-            return
-        rep = check_expectations(batch, checks)
-        (rep.withColumn("batch_id", F.lit(int(batch_id)))
-         .coalesce(1).write.mode("append").parquet(report_path))
-    return run
+    return ParquetStore.report_sink(
+        lambda batch: check_expectations(batch, checks), report_path)
 
 
 def table_diff(old: DataFrame, new: DataFrame, keys: str | list[str],
@@ -251,15 +246,9 @@ def expectations_by_group_sink(checks: list[dict], group_col: str,
     the history table carries each source's contract-violation trajectory,
     not just the table-wide one. Same single-aggregation-per-batch cost;
     the report is |groups| x |checks| rows, delta-sized forever."""
-    from pyspark.sql import functions as F  # noqa: F811
-
-    def run(batch: DataFrame, batch_id: int) -> None:
-        if not batch.head(1):
-            return
-        rep = check_expectations_by_group(batch, group_col, checks)
-        (rep.withColumn("batch_id", F.lit(int(batch_id)))
-         .coalesce(1).write.mode("append").parquet(report_path))
-    return run
+    return ParquetStore.report_sink(
+        lambda batch: check_expectations_by_group(batch, group_col, checks),
+        report_path)
 
 
 def expectations_trend(spark, report_path: str, group_col: str,
@@ -276,7 +265,6 @@ def expectations_trend(spark, report_path: str, group_col: str,
     Output: (group_col, check, n_batches, latest_rate, slope) where
     slope is d(rate)/d(batch ordinal)."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F  # noqa: F811
 
     hist = spark.read.parquet(report_path)
     rate = (F.col("violations") / F.col("n_rows").cast("double"))

@@ -44,15 +44,8 @@ def decode_image(payload: bytes) -> object:
     """Real decoder entry point — deliberately unimplemented here."""
     raise NotImplementedError(
         "image codecs are not available in this environment; "
-        "use fake_decode for deterministic plumbing tests"
+        "extract_meta derives deterministic stand-in metadata instead"
     )
-
-
-def fake_decode(payload: bytes) -> tuple[int, str, int, int]:
-    """Deterministic fake decode: byte length, sha256 hex, and fake
-    dimensions derived from the length (oracle-expressible)."""
-    n = len(payload)
-    return n, hashlib.sha256(payload).hexdigest(), 1 + n % 640, 1 + (n * 7) % 480
 
 
 def extract_meta(df: DataFrame, id_col: str = "doc_id",

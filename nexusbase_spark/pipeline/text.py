@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nexusbase_spark.store import ParquetStore
+
 # A BPE-ish pre-tokenizer: letter runs, digit runs, single punctuation.
 # Kept to a regex subset with identical semantics in Java regex (Spark) and
 # RE2 (DuckDB), so the oracle can mirror it.
@@ -534,18 +536,14 @@ def quality_mix_sink(report_path: str, text_col: str = "text"):
     the ingest-gate twin of docs_token_budget_curve, catching a
     quality-mix shift (a crawl gone bad, an upstream filter change)
     batch by batch instead of at the next corpus-wide audit."""
-    def run(batch: DataFrame, batch_id: int) -> None:
-        if not batch.head(1):
-            return
+    def report(batch: DataFrame) -> DataFrame:
         n_tok = F.size(tokens_col(F.col(text_col)))
-        (batch.select(quality_bin_expr(F.col(text_col)).alias("bin"),
-                      n_tok.alias("n_tok"))
-         .groupBy("bin")
-         .agg(F.count(F.lit(1)).alias("n_docs"),
-              F.sum("n_tok").alias("n_tokens"))
-         .withColumn("batch_id", F.lit(int(batch_id)))
-         .coalesce(1).write.mode("append").parquet(report_path))
-    return run
+        return (batch.select(quality_bin_expr(F.col(text_col)).alias("bin"),
+                             n_tok.alias("n_tok"))
+                .groupBy("bin")
+                .agg(F.count(F.lit(1)).alias("n_docs"),
+                     F.sum("n_tok").alias("n_tokens")))
+    return ParquetStore.report_sink(report, report_path)
 
 
 def quality_mix_totals(spark, report_path: str) -> DataFrame:

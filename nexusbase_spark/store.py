@@ -66,6 +66,16 @@ class ParquetStore:
                 fold(batch, batch_id)
         return run
 
+    @staticmethod
+    def report_sink(report, path: str):
+        """foreachBatch callable appending ``report(batch)``, plus a
+        ``batch_id`` column, as one parquet file per non-empty micro-batch
+        to the history table at ``path``."""
+        def fold(batch: DataFrame, batch_id: int) -> None:
+            (report(batch).withColumn("batch_id", F.lit(int(batch_id)))
+             .coalesce(1).write.mode("append").parquet(path))
+        return ParquetStore._sink(fold)
+
     # ------------------------------------------------- doc-keyed audit/heal
     # Id frames below have ONE column, named ``doc_id`` (the sampler
     # takes any one-column id frame: the rollup audit samples days).

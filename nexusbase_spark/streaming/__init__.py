@@ -5,7 +5,6 @@ from nexusbase_spark.streaming.subscribe import (  # noqa: F401
     subscribe,
     stream_ingest,
     live_downsample,
-    live_downsample_hopping,
     live_dedup,
 )
 from nexusbase_spark.streaming.sessions import live_sessionize  # noqa: F401

@@ -141,46 +141,35 @@ def _dur(ns: int) -> str:
     return f"{ns // 1_000} microseconds"
 
 
+def _event_time() -> Column:
+    """Event time of the ns ``ts`` column, floored to whole µs in integer
+    arithmetic (the batch ``align_col``'s pmod floor). ns timestamps
+    exceed 2^53, so ``ts / 1000`` as a double rounds by up to 128 ns and
+    can push a point just before a window boundary into the next window."""
+    return F.timestamp_micros(F.expr("(ts - pmod(ts, 1000)) div 1000"))
+
+
 def live_downsample(stream: DataFrame, interval_ns: int,
+                    slide_ns: int | None = None,
                     watermark_delay: str = "10 minutes") -> DataFrame:
-    """Streaming per-series tumbling aggregation with late-data handling —
+    """Streaming per-series window aggregation with late-data handling —
     the scale path for continuous rollups (the reference recomputes windows
     at query time instead; SURVEY.md §2.10).
 
-    Works on event-time derived from the ns ts column; emits
-    (metric, series_key, window_start, count/sum/avg) per closed window.
+    Windows tumble by default; with ``slide_ns`` they HOP, the live
+    counterpart of the batch ``downsample(..., slide=)``: each point
+    contributes to interval/slide overlapping windows. Structured
+    Streaming's window(ts, size, slide) assigns them natively (state per
+    open window per series, bounded by the watermark horizon), and a
+    window closes once the watermark passes its end. Emits (metric,
+    series_key, window_start, count/sum/avg) per closed window.
     """
-    with_time = stream.withColumn(
-        "event_time", F.timestamp_micros((F.col("ts") / 1000).cast("long")))
+    window = F.window("event_time", _dur(interval_ns),
+                      _dur(interval_ns if slide_ns is None else slide_ns))
     return (
-        with_time.withWatermark("event_time", watermark_delay)
-        .groupBy(F.window("event_time", _dur(interval_ns)),
-                 F.col("metric"), F.col("series_key"))
-        .agg(F.count(F.lit(1)).alias("count_*"),
-             F.sum("value").alias("sum_value"),
-             F.avg("value").alias("avg_value"))
-        .withColumn("window_start", F.unix_micros(F.col("window.start")) * 1000)
-        .drop("window")
-    )
-
-
-def live_downsample_hopping(stream: DataFrame, size_ns: int, slide_ns: int,
-                            watermark_delay: str = "10 minutes") -> DataFrame:
-    """Streaming per-series HOPPING (sliding) window aggregation — the
-    live counterpart of the batch SLIDE extension (AGGREGATE BY size
-    SLIDE slide): each point contributes to size/slide overlapping
-    windows, windows close as the watermark passes their end.
-
-    Structured Streaming's window(ts, size, slide) assigns the
-    overlapping windows natively (state per open window per series,
-    bounded by the watermark horizon) — no explode, no custom state.
-    """
-    with_time = stream.withColumn(
-        "event_time", F.timestamp_micros((F.col("ts") / 1000).cast("long")))
-    return (
-        with_time.withWatermark("event_time", watermark_delay)
-        .groupBy(F.window("event_time", _dur(size_ns), _dur(slide_ns)),
-                 F.col("metric"), F.col("series_key"))
+        stream.withColumn("event_time", _event_time())
+        .withWatermark("event_time", watermark_delay)
+        .groupBy(window, F.col("metric"), F.col("series_key"))
         .agg(F.count(F.lit(1)).alias("count_*"),
              F.sum("value").alias("sum_value"),
              F.avg("value").alias("avg_value"))
@@ -203,8 +192,7 @@ def live_dedup(stream: DataFrame, keys: tuple[str, ...] = ("series_key", "ts"),
     full-history state store without bound. First-wins (vs the reader's
     highest-seq-wins) is the documented divergence: an at-least-once
     source replays IDENTICAL points, where first == last."""
-    with_time = stream.withColumn(
-        "event_time", F.timestamp_micros((F.col("ts") / 1000).cast("long")))
-    return (with_time.withWatermark("event_time", watermark_delay)
+    return (stream.withColumn("event_time", _event_time())
+            .withWatermark("event_time", watermark_delay)
             .dropDuplicatesWithinWatermark(list(keys))
             .drop("event_time"))

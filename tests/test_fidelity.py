@@ -18,11 +18,15 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from nexusbase_spark.datamodel import with_series_key
+from nexusbase_spark.datamodel import series_key_expr
 from nexusbase_spark.functions.fidelity import AggSpec
 from nexusbase_spark.operators import downsample, final_aggregate
 
 NAN, INF = float("nan"), float("inf")
+
+
+def _keyed(df):
+    return df.withColumn("series_key", series_key_expr(F.col("metric"), F.col("tags")))
 
 
 def _pts(spark, rows):
@@ -30,7 +34,7 @@ def _pts(spark, rows):
     df = spark.createDataFrame(
         [("m", {"h": "a"}, int(ts), i, v) for i, (ts, v) in enumerate(rows)],
         "metric string, tags map<string,string>, ts long, seq long, value double")
-    return with_series_key(df)
+    return _keyed(df)
 
 
 def _one(df):
@@ -99,7 +103,7 @@ def test_stddev_n_below_2(spark):
 
 
 def test_strings_bools_counted_not_aggregated(spark):
-    df = with_series_key(spark.createDataFrame(
+    df = _keyed(spark.createDataFrame(
         [("m", {"h": "a"}, 1, 0, "hello", True),
          ("m", {"h": "a"}, 2, 1, "world", False)],
         "metric string, tags map<string,string>, ts long, seq long, s string, b boolean"))
@@ -112,7 +116,7 @@ def test_strings_bools_counted_not_aggregated(spark):
 
 def test_first_last_tie_break_by_series_then_seq(spark):
     """Equal ts: order is (ts, series_key, seq DESC) — iterator.go:41-63."""
-    df = with_series_key(spark.createDataFrame(
+    df = _keyed(spark.createDataFrame(
         [("m", {"h": "b"}, 10, 1, 100.0),
          ("m", {"h": "a"}, 10, 2, 200.0),   # same ts: series a < b -> first
          ("m", {"h": "a"}, 10, 3, 300.0)],  # same ts+series: seq desc -> 300 first
@@ -127,5 +131,5 @@ def test_percentile_exact_and_approx(spark):
     exact = _one(final_aggregate(df, [AggSpec("p95", "value")]))["p95_value"]
     assert exact == pytest.approx(95.05)  # interpolated exact percentile
     approx = _one(final_aggregate(df, [AggSpec("p95", "value")],
-                                  approx_percentile=True))["p95_value"]
+                                  percentile_impl="approx"))["p95_value"]
     assert 94.0 <= approx <= 96.0  # t-digest-like sketch tolerance

@@ -101,19 +101,23 @@ def test_param_substitution_count(params):
 def test_pagination_no_dup_no_loss(spark, limit):
     """Keyset pagination partitions the full result: no duplicates, no
     losses, any page size (fixture 6's contract, FIXTURES.md)."""
-    from nexusbase_spark.datamodel import with_series_key
-    from nexusbase_spark.operators.order import paginate
+    from nexusbase_spark.datamodel import series_key_expr
+    from nexusbase_spark.operators.order import (
+        decode_cursor, encode_cursor, keyset_after, order_points)
     # cross-series ts ties everywhere: the order tie-break does the work
     rows = [("m", {"h": str(h)}, ts, h * 100 + ts, float(ts))
             for h in range(3) for ts in range(37)]
-    df = with_series_key(spark.createDataFrame(
-        rows, "metric string, tags map<string,string>, ts long, seq long, value double"))
+    df = spark.createDataFrame(
+        rows, "metric string, tags map<string,string>, ts long, seq long, value double")
+    df = df.withColumn("series_key", series_key_expr(F.col("metric"), F.col("tags")))
     seen, cursor, pages = [], None, 0
     while True:
-        page, cursor = paginate(df, limit, after=cursor)
-        got = page.collect()
+        after = keyset_after(df, decode_cursor(cursor)) if cursor else df
+        got = order_points(after).limit(limit).collect()
         seen.extend((r["ts"], r["series_key"], r["seq"]) for r in got)
         pages += 1
+        cursor = (encode_cursor(got[-1]["ts"], got[-1]["series_key"],
+                                got[-1]["seq"]) if len(got) == limit else None)
         if cursor is None or pages > 200:
             break
     assert len(seen) == len(rows)
@@ -535,13 +539,14 @@ def _feq(x, y):
 
 
 def _points_df(spark, pts):
-    from nexusbase_spark.datamodel import with_series_key
+    from nexusbase_spark.datamodel import series_key_expr
     rows = [("m", {"h": str(h)}, int(ts), i, v)
             for i, (h, ts, v) in enumerate(pts)]
-    return with_series_key(spark.createDataFrame(
+    return spark.createDataFrame(
         rows,
         "metric string, tags map<string,string>, ts long, seq long, "
-        "value double"))
+        "value double").withColumn(
+            "series_key", series_key_expr(F.col("metric"), F.col("tags")))
 
 
 @pytest.mark.slow
@@ -682,13 +687,14 @@ def test_final_aggregate_matches_bruteforce_model(spark, data):
     # series and collisions with ts happen
     seqs = data.draw(st.lists(st.integers(0, 6), min_size=len(pts),
                               max_size=len(pts)))
-    from nexusbase_spark.datamodel import with_series_key
+    from nexusbase_spark.datamodel import series_key_expr
     rows = [("m", {"h": str(h)}, int(ts), int(sq), v)
             for (h, ts, v), sq in zip(pts, seqs)]
-    df = with_series_key(spark.createDataFrame(
+    df = spark.createDataFrame(
         rows,
         "metric string, tags map<string,string>, ts long, seq long, "
-        "value double"))
+        "value double").withColumn(
+            "series_key", series_key_expr(F.col("metric"), F.col("tags")))
     specs = [AggSpec("count", "*"), AggSpec("count", "value"),
              AggSpec("sum", "value"), AggSpec("avg", "value"),
              AggSpec("min", "value"), AggSpec("max", "value"),

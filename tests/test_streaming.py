@@ -287,6 +287,32 @@ def test_kafka_shaped_stream_into_engine(spark, tmp_path):
     assert [r["fields"]["v"] for r in rows] == ["2.0"]
 
 
+def test_live_window_starts_match_batch_downsample(spark):
+    """On a static frame, live_downsample puts each point in the windows
+    the batch downsample does: 1 ns before a boundary above 2^53 ns (a
+    double ts/1000 rounded it into the next window), on the boundary, and
+    pre-epoch; tumbling and hopping."""
+    from nexusbase_spark.datamodel import series_key_expr
+    from nexusbase_spark.functions.fidelity import AggSpec
+    from nexusbase_spark.operators.downsample import downsample
+
+    MIN = 60_000_000_000
+    B = 1_700_000_040_000_000_000  # a whole minute
+    df = spark.createDataFrame(
+        [("m", {"h": "a"}, ts, i, 1.0)
+         for i, ts in enumerate([B - 1, B, -MIN // 2 - 1])],
+        "metric string, tags map<string,string>, ts long, seq long, value double")
+    df = df.withColumn("series_key", series_key_expr(F.col("metric"), F.col("tags")))
+    for slide in (None, MIN // 2):
+        live = {(r["window_start"], r["count_*"])
+                for r in live_downsample(df, MIN, slide_ns=slide).collect()}
+        batch = {(r["window_start"], r["count_*"])
+                 for r in downsample(df, MIN, [AggSpec("count", "*")],
+                                     slide=slide).collect()}
+        assert live == batch, (slide, sorted(live ^ batch))
+        assert (B - MIN, 1) in live and (-MIN, 1) in live
+
+
 @pytest.mark.nightly
 def test_live_downsample_watermarked(spark, point_stream):
     stream, feed = point_stream
@@ -462,12 +488,10 @@ def test_live_dedup_within_watermark(spark, point_stream):
 def test_live_downsample_hopping_overlap(spark, point_stream):
     """Sliding windows: a point lands in size/slide overlapping windows;
     counts per window reflect exactly the points inside [start, start+size)."""
-    from nexusbase_spark.streaming import live_downsample_hopping
-
     stream, feed = point_stream
     NS = 1_000_000_000
-    agg = live_downsample_hopping(stream, 60 * NS, 30 * NS,
-                                  watermark_delay="0 seconds")
+    agg = live_downsample(stream, 60 * NS, slide_ns=30 * NS,
+                          watermark_delay="0 seconds")
     q = (agg.writeStream.queryName("t_hop").outputMode("update")
          .format("memory").start())
     try:
@@ -492,12 +516,10 @@ def test_live_downsample_subsecond_windows(spark, point_stream):
     shifting 500ms windows); non-µs-representable intervals raise."""
     import pytest as _pytest
 
-    from nexusbase_spark.streaming import live_downsample_hopping
-
     stream, feed = point_stream
     NS = 1_000_000_000
-    agg = live_downsample_hopping(stream, NS // 2, NS // 4,
-                                  watermark_delay="0 seconds")
+    agg = live_downsample(stream, NS // 2, slide_ns=NS // 4,
+                          watermark_delay="0 seconds")
     q = (agg.writeStream.queryName("t_hop_sub").outputMode("update")
          .format("memory").start())
     try:
@@ -514,7 +536,7 @@ def test_live_downsample_subsecond_windows(spark, point_stream):
            if r["window_start"] >= NS}
     assert got == {NS: 1, NS + 250_000_000: 1}
     with _pytest.raises(ValueError, match="microsecond"):
-        live_downsample_hopping(stream, 1500, 500)  # 1.5µs size: not whole µs
+        live_downsample(stream, 1500, slide_ns=500)  # 1.5µs size: not whole µs
 
 
 @pytest.mark.nightly

@@ -1,13 +1,20 @@
 """Simulates the spark-graft driver: import __spark_entry__, smoke entry(),
-run queries() vs oracle_sql() at sf0.01, order-insensitive value-hash compare."""
-import hashlib, json, math, sys, time
+run queries() vs oracle_sql(), order-insensitive value-hash compare.
+
+Usage:
+    python3 tools/driver_sim.py [sf_dir] [name ...]
+
+``sf_dir`` defaults to /root/testdata/sf0.01; with query names, only those
+run. On a hash mismatch the first spark-only and duck-only rows print."""
+import hashlib, math, sys, time
 import os
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import __spark_entry__ as e
 from pyspark.sql import SparkSession
 
-SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+args = sys.argv[1:]
+SF = args.pop(0) if args and os.path.isdir(args[0]) else "/root/testdata/sf0.01"
 spark = (SparkSession.builder.master("local[8]").appName("driver-sim")
          .config("spark.sql.shuffle.partitions", "8")
          .config("spark.ui.enabled", "false")
@@ -33,16 +40,23 @@ def cell(v):
         return repr(v)
     return str(v)
 
-def table_hash(cols, rows):
+def lines(cols, rows):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted("|".join(cell(r[i]) for i in order) for r in rows)
-    return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
+    return sorted("|".join(cell(r[i]) for i in order) for r in rows)
+
+def table_hash(cols, rows):
+    return hashlib.sha256("\n".join(lines(cols, rows)).encode()).hexdigest()[:16]
 
 qs, oracles = e.queries(), e.oracle_sql()
+names = args or sorted(qs)
 fail = 0
-for name, fn in sorted(qs.items()):
+for name in names:
+    if name not in qs:
+        print(f"UNKNOWN         {name}")
+        fail += 1
+        continue
     t0 = time.time()
-    sdf = fn(spark, SF)
+    sdf = qs[name](spark, SF)
     srows = [tuple(r) for r in sdf.collect()]
     scols = sdf.columns
     status, detail = "ROWS-ONLY", f"{len(srows)} rows"
@@ -58,8 +72,14 @@ for name, fn in sorted(qs.items()):
             h1, h2 = table_hash(scols, srows), table_hash(dcols, drows)
             status = "MATCH" if h1 == h2 else "HASH-MISMATCH"
             detail = f"{len(srows)} rows hash={h1}"
+            if status == "HASH-MISMATCH":
+                s_set, d_set = set(lines(scols, srows)), set(lines(dcols, drows))
+                for x in sorted(s_set - d_set)[:3]:
+                    print("  spark-only:", x)
+                for x in sorted(d_set - s_set)[:3]:
+                    print("  duck-only: ", x)
     if status not in ("MATCH", "ROWS-ONLY"): fail += 1
     print(f"{status:15s} {name:28s} {detail}  ({time.time()-t0:.1f}s)")
-print("RESULT:", "FAIL" if fail else "PASS", f"({len(qs)} queries, {len(oracles)} oracle-checked)")
+print("RESULT:", "FAIL" if fail else "PASS", f"({len(names)} queries, {sum(n in oracles for n in names)} oracle-checked)")
 spark.stop()
 sys.exit(1 if fail else 0)
