@@ -40,11 +40,14 @@ from __future__ import annotations
 import contextlib
 import functools
 import json
+import math
 import os
+import re
 import shutil
 import threading
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,7 +63,7 @@ from nexusbase_spark.operators.downsample import align, align_col
 from nexusbase_spark.operators.mvcc import visible
 from nexusbase_spark.operators.order import order_windows
 from nexusbase_spark.operators.scan import (
-    apply_tag_matchers, metric_filter, tag_filter,
+    matcher_pred, metric_pred, series_pred, tag_pred, time_pred, where,
 )
 from nexusbase_spark.operators.tagindex import SeriesCatalog
 
@@ -98,6 +101,58 @@ DAY_NS = 86_400 * 1_000_000_000
 # (metric, day). Stamped into <warehouse>/_format; byte-identical to the
 # stamp earlier releases wrote, so their warehouses and snapshots open.
 FORMAT_STAMP = "point_markers=1\nlayout=metric_day\n"
+
+
+class _Base(NamedTuple):
+    """One write generation's base scan (``NexusEngine._base``)."""
+    raw: DataFrame                  # points/ ∪ l0/
+    tombs: dict[str, DataFrame]     # tombstone kind -> frame, kinds present
+    day_files: dict[str, dict[int, tuple[int, int]]]
+                                    # metric -> day -> (file bytes, files)
+    split_bytes: int                # spark.sql.files.maxPartitionBytes
+    open_cost: int                  # spark.sql.files.openCostInBytes
+
+
+_ESCAPED = re.compile(r"%([0-9A-Fa-f]{2})")
+
+
+def _entries(path: str) -> list[os.DirEntry]:
+    """The entries of ``path``; none when it is not a directory, or is
+    gone (a concurrent flush or compact removes dirs)."""
+    try:
+        with os.scandir(path) as it:
+            return list(it)
+    except OSError:
+        return []
+
+
+def _day_files(roots: list[str]) -> dict[str, dict[int, tuple[int, int]]]:
+    """metric -> day -> (bytes, count) of the data files in the
+    ``metric=/day=`` partition dirs under ``roots``, in one scandir walk.
+    Partition values are unescaped the way Spark escapes them (%XX for a
+    fixed set of ASCII characters; unicode letters stay as they are), and
+    files Spark skips (``_``/``.`` prefixes) are not counted. A file that
+    vanishes mid-walk is skipped: these sizes only choose a plan."""
+    out: dict[str, dict[int, tuple[int, int]]] = {}
+    for root in roots:
+        for m in _entries(root):
+            if not m.name.startswith("metric="):
+                continue
+            metric = _ESCAPED.sub(lambda h: chr(int(h[1], 16)), m.name[7:])
+            days = out.setdefault(metric, {})
+            for d in _entries(m.path):
+                if not d.name.startswith("day="):
+                    continue
+                n = files = 0
+                for f in _entries(d.path):
+                    if f.name[0] not in "_.":
+                        with contextlib.suppress(OSError):
+                            n += f.stat().st_size
+                            files += 1
+                day = int(d.name[4:])
+                b, c = days.get(day, (0, 0))
+                days[day] = (b + n, c + files)
+    return out
 
 
 def _window_day(ts: Column, interval_ns: int) -> Column:
@@ -294,7 +349,7 @@ class NexusEngine:
         self._catalog = SeriesCatalog(os.path.join(warehouse, "catalog"))
         has_data = os.path.isdir(self._points_path) or os.path.isdir(self._l0_path)
         if has_data and not self._catalog.exists():
-            self._catalog.rebuild(self._base()[0])
+            self._catalog.rebuild(self._base().raw)
         self._emit("post_start_engine", {"warehouse": warehouse,
                                          "next_seq": self._seq})
 
@@ -706,15 +761,18 @@ class NexusEngine:
             return None
         return self.spark.read.schema(schema).parquet(path)
 
-    def _base(self) -> tuple[DataFrame, dict[str, DataFrame]]:
-        """(points ∪ L0 frame, {tombstone kind: frame} for the kinds
-        present): the base scan every read starts from, built once
-        per write generation and handed out until the file set changes —
-        a DataFrame pins the file listing it was built with, like the
-        reference's iterators pin a table version. Each build lists the
-        directories once; reuse lists nothing. Correct only with one live
-        engine per warehouse directory (already the contract: _seq is per
-        engine), because only this engine's writes bump the generation.
+    def _base(self) -> _Base:
+        """The points ∪ L0 frame, {tombstone kind: frame} for the kinds
+        present, the file bytes and counts per (metric, day) of points/
+        and l0/, and the session's split size and file open cost: the
+        base scan every read starts from, built once per write generation
+        and handed out until the file set changes — a DataFrame pins the
+        file listing it was built with, like the reference's iterators
+        pin a table version. Each build lists the directories once
+        (Spark's listing, and one scandir walk for the sizes); reuse lists
+        nothing. Correct only with one live engine per warehouse directory
+        (already the contract: _seq is per engine), because only this
+        engine's writes bump the generation.
         The generation is read BEFORE listing, so a build that races an
         append is filed under the older generation and rebuilt."""
         with self._base_mu:
@@ -728,7 +786,11 @@ class NexusEngine:
                    else self.spark.createDataFrame([], _POINTS_DIR_SCHEMA))
             tombs = {k: df for k, p in self._tomb.items()
                      if (df := self._read_dir(p, _TOMB_SCHEMAS[k])) is not None}
-            self._base_gen, self._base_frames = gen, (raw, tombs)
+            conf = self.spark._jsparkSession.sessionState().conf()
+            self._base_gen = gen
+            self._base_frames = _Base(
+                raw, tombs, _day_files([self._points_path, self._l0_path]),
+                conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes())
             self._base_builds += 1
             return self._base_frames
 
@@ -739,37 +801,68 @@ class NexusEngine:
         """The visible long-format points view: MVCC dedup (whole-point
         last-write-wins) + all three tombstone kinds, seq-aware.
 
-        Selection predicates are applied BEFORE ``mvcc.visible``'s dedup
-        window and anti-joins: the window partitions by (series_key, ts) and
+        Selection predicates (``operators/scan``, composed into ONE
+        filter) are applied BEFORE ``mvcc.visible``'s dedup window and
+        anti-joins: the window partitions by (series_key, ts) and
         metric/tags are constant per series while ts is a partition key,
         so pre-filtering keeps whole partitions — same results, but the
-        MVCC shuffle covers only the selected slice instead of the table
+        MVCC window covers only the selected slice instead of the table
         (without this, the window blocks predicate pushdown and every
         query pays a full-table shuffle).
+
+        Small reads run in one partition, when the files of the (metric,
+        day) dirs the read prunes to fit one scan split by Spark's own
+        sizing (``_fits_one_split``). The slice is then coalesced to one
+        partition before the window. One partition satisfies every
+        required distribution, so the dedup window, a caller's groupBy and
+        its orderBy plan with no exchange: one job, one task, like the
+        reference's single merge iterator. Larger reads keep the
+        distributed plan (hash exchange for the window and the grouping,
+        range exchange for the sort). The sizes come with the base scan,
+        so the gate costs no JVM call per read.
         """
-        df, tombs = self._base()
-        if metric is not None:
-            df = metric_filter(df, metric)
+        base = self._base()
+        sel = None
         if tags:
             # Two-phase tag resolution (tag-index analog): resolve series
             # keys from the catalog driver-side, then push a series_key
-            # IN-list into the parquet scan. Map access (tags[k] = v) never
-            # reaches the scan; the IN-list does (row-group min/max skip).
+            # IN-list into the parquet scan.
             keys = self._catalog.resolve(metric, tags)
-            if keys is not None:
-                df = df.filter(F.col("series_key").isin(keys))
-            else:  # catalog absent or too many series: scan-side filter
-                df = tag_filter(df, tags)
-        df = apply_tag_matchers(df, matchers)
-        # the day partition filters prune whole day directories — the
-        # SSTable key-range skip at the directory level
-        if start is not None:
-            df = df.filter((F.col("ts") >= start)
-                           & (F.col("day") >= align(start, DAY_NS)))
-        if end is not None:
-            df = df.filter((F.col("ts") <= end)
-                           & (F.col("day") <= align(end, DAY_NS)))
-        return visible(df.drop("day"), tombs)  # day: partition bookkeeping
+            # catalog absent or too many series: scan-side map filter
+            sel = series_pred(keys) if keys is not None else tag_pred(tags)
+        df = where(base.raw, metric_pred(metric), sel,
+                   matcher_pred(self.spark, matchers),
+                   time_pred(start, end, day_ns=DAY_NS))
+        df = df.drop("day")  # partition bookkeeping
+        if self._fits_one_split(base, metric, start, end):
+            df = df.coalesce(1)
+        return visible(df, base.tombs)
+
+    @staticmethod
+    def _fits_one_split(base: _Base, metric: str | None,
+                        start: int | None, end: int | None) -> bool:
+        """Whether the files of the (metric, day) dirs a read of
+        ``metric`` (every metric when None) over [start, end] prunes to
+        fit one scan split, as Spark sizes splits. Spark's split size is
+        min(maxPartitionBytes, max(openCostInBytes, Σ(file bytes +
+        openCostInBytes) / parallelism)), so whatever the parallelism it
+        is at least min(maxPartitionBytes, openCostInBytes): data within
+        that floor is never cut finer, and only the per-file open cost
+        would spread it over tasks. Charging each file that open cost, as
+        Spark's packing does, the whole read must also fit in
+        maxPartitionBytes, the most Spark puts in one task. A read above
+        the floor (4 MB by default) always keeps the distributed plan."""
+        lo = -math.inf if start is None else align(start, DAY_NS)
+        hi = math.inf if end is None else align(end, DAY_NS)
+        data = files = 0
+        for m, days in base.day_files.items():
+            if metric is None or m == metric:
+                for day, (n, c) in days.items():
+                    if lo <= day <= hi:
+                        data += n
+                        files += c
+        return (data <= min(base.split_bytes, base.open_cost)
+                and data + files * base.open_cost <= base.split_bytes)
 
     def get(self, metric: str, tags: dict[str, str] | None,
             ts: int) -> dict | None:
@@ -917,7 +1010,8 @@ class NexusEngine:
         last = meta["last_seq"]
         dirty: set[int] = set()
 
-        raw, tombs = self._base()
+        base = self._base()
+        raw, tombs = base.raw, base.tombs
         new_pts = (raw.filter((F.col("metric") == metric) & (F.col("seq") > last))
                    .select(_window_day(F.col("ts"), iv).alias("wd")).distinct())
         dirty |= {r["wd"] for r in new_pts.collect()}
@@ -1230,7 +1324,7 @@ class NexusEngine:
             if ((os.path.isdir(self._points_path)
                  or os.path.isdir(self._l0_path))
                     and not self._catalog.exists()):
-                self._catalog.rebuild(self._base()[0])
+                self._catalog.rebuild(self._base().raw)
         self._seq = self._load_max_seq() + 1
         self._set_l0_batches(0)  # pending-batch count died with the old L0
         self._known_series = self._known_metrics = None  # reload from catalog
@@ -1381,10 +1475,10 @@ class NexusEngine:
         # aligned: start and end are set. The range filter runs before
         # any re-windowing, because fine windows in [start, end] exactly
         # compose the aligned coarse range
-        df = apply_tag_matchers(tag_filter(self.rollup(name), q.tags or {}),
-                                q.tag_matchers)
-        df = df.filter((F.col("window_start") >= q.start)
-                       & (F.col("window_start") <= q.end))
+        df = where(self.rollup(name), tag_pred(q.tags or {}),
+                   matcher_pred(self.spark, q.tag_matchers),
+                   (F.col("window_start") >= q.start)
+                   & (F.col("window_start") <= q.end))
         if exact_hit is None:
             # re-window the finer rollup: epoch alignment makes every
             # fine window nest inside exactly one coarse window

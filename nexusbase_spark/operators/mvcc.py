@@ -35,7 +35,13 @@ def dedup_latest(df: DataFrame) -> DataFrame:
 
     Scale note: this shuffles on (series_key, ts), the same key the merge
     heap uses; at 100TB dedup-on-ingest (per partition file compaction)
-    amortizes it, exactly like the reference's LSM compaction does.
+    amortizes it, exactly like the reference's LSM compaction does. A
+    one-partition input needs no shuffle: ``NexusEngine.points``
+    coalesces a read to one partition when its pruned files fit one scan
+    split as Spark sizes splits (``_fits_one_split``: at most
+    ``spark.sql.files.openCostInBytes`` of data, 4 MB by default), and
+    the window then runs in that one task, like the reference's single
+    merge iterator.
     """
     w = Window.partitionBy("series_key", "ts")
     return (df.withColumn("__maxseq", F.max("seq").over(w))

@@ -12,7 +12,12 @@ that drops everything up to and including that key
 Spark mapping: orderBy + limit compiles to TakeOrderedAndProject — a
 distributed top-K, each partition keeps only K rows, no global sort. The
 cursor becomes a keyset predicate (strictly-after filter) that pushes down
-to the scan; pagination cost is O(page), not O(offset).
+to the scan; pagination cost is O(page), not O(offset). An orderBy without
+a limit is a range-partitioned global sort (a sampling job, then an
+exchange) — unless its input is one partition: a read whose pruned files
+fit one scan split as Spark sizes splits (``NexusEngine._fits_one_split``)
+is coalesced to one partition by ``NexusEngine.points``, and its sort is
+then an in-task sort with no exchange.
 """
 
 from __future__ import annotations

@@ -12,6 +12,8 @@ a time bucket, so these filters become partition pruning, not data reads.
 from __future__ import annotations
 
 import datetime
+import functools
+import operator
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,52 +29,119 @@ def _ts_lit(us: int, dtype: str) -> Column:
     return F.lit(s).cast(dtype)
 
 
-def metric_filter(df: DataFrame, metric: str) -> DataFrame:
-    """Exact metric equality (engine2/adapter.go:1146-1153)."""
-    return df.filter(F.col("metric") == metric)
+def where(df: DataFrame, *preds: Column | None) -> DataFrame:
+    """``df`` filtered by the conjunction of ``preds`` in ONE ``filter``
+    (``None`` = no restriction): each ``filter`` is a JVM round trip that
+    re-analyses the plan, so a read composes its predicates first."""
+    pred = _all(preds)
+    return df if pred is None else df.filter(pred)
 
 
-def tag_filter(df: DataFrame, tags: dict[str, str]) -> DataFrame:
+def metric_pred(metric: str | None) -> Column | None:
+    """Exact metric equality (engine2/adapter.go:1146-1153); None (every
+    metric) for None."""
+    return None if metric is None else F.col("metric") == metric
+
+
+def tag_pred(tags: dict[str, str]) -> Column | None:
     """Conjunctive tag equality — ALL k=v must match; the engine has no OR,
     no regex, no != (indexer/tag_index_manager2.go:253-275)."""
-    out = df
-    for k, v in tags.items():
-        out = out.filter(F.col("tags").getItem(k) == v)
-    return out
+    return _all(F.col("tags").getItem(k) == v for k, v in tags.items())
 
 
-def time_range(df: DataFrame, start: int | None, end: int | None) -> DataFrame:
+def series_pred(keys: list[str]) -> Column:
+    """Series-key IN-list: the catalog-resolved form of ``tag_pred``. Map
+    access never reaches the parquet scan; the IN-list does (row-group
+    min/max skip)."""
+    return F.col("series_key").isin(keys)
+
+
+def time_pred(start: int | None, end: int | None, raw_type: str | None = None,
+              day_ns: int | None = None) -> Column | None:
     """Inclusive BOTH ends: keys scanned in [start, end+1)
     (engine2/adapter.go:2798-2803).
 
-    When the frame carries ``__raw_ts`` (the unmodified source column —
-    datamodel.events_to_points), redundant bounds are added on it: the
-    canonical ``ts`` is derived via arithmetic the optimizer can't invert,
-    so a predicate on it never reaches the parquet scan. The raw bounds are
-    equivalent-or-wider in the raw column's own type, semantically a no-op
-    — but they ARE pushable, restoring row-group min/max pruning (the
-    SSTable min/max-key skip analog, SURVEY.md §4).
+    ``raw_type`` is the type of the frame's ``__raw_ts`` column (the
+    unmodified source column — datamodel.events_to_points), if it has one:
+    redundant bounds are added on it. The canonical ``ts`` is derived via
+    arithmetic the optimizer can't invert, so a predicate on it never
+    reaches the parquet scan. The raw bounds are equivalent-or-wider in
+    the raw column's own type, semantically a no-op — but they ARE
+    pushable, restoring row-group min/max pruning (the SSTable
+    min/max-key skip analog, SURVEY.md §4).
 
     Raw-bound derivation (ts = canonical long ns, truncated to whole µs):
     - long raw (ns):        ts >= s  =>  raw >= s;  ts <= e  =>  raw <= e+999
     - timestamp raw (µs):   ts >= s  =>  raw >= ceil(s/1000) µs;
                             ts <= e  =>  raw <= floor(e/1000) µs  (exact)
+
+    ``day_ns``: the frame carries a ``day`` partition column (ts floored
+    to ``day_ns``); bounds on it prune whole day directories — the
+    SSTable key-range skip at the directory level.
     """
-    out = df
-    raw_type = dict(df.dtypes).get("__raw_ts")
+    preds = []
     if start is not None:
-        out = out.filter(F.col("ts") >= start)
+        preds.append(F.col("ts") >= start)
         if raw_type in ("bigint", "long"):
-            out = out.filter(F.col("__raw_ts") >= start)
+            preds.append(F.col("__raw_ts") >= start)
         elif raw_type is not None:
-            out = out.filter(F.col("__raw_ts") >= _ts_lit(-(-start // 1000), raw_type))
+            preds.append(F.col("__raw_ts") >= _ts_lit(-(-start // 1000), raw_type))
+        if day_ns is not None:
+            preds.append(F.col("day") >= start - start % day_ns)
     if end is not None:
-        out = out.filter(F.col("ts") <= end)
+        preds.append(F.col("ts") <= end)
         if raw_type in ("bigint", "long"):
-            out = out.filter(F.col("__raw_ts") <= end + 999)
+            preds.append(F.col("__raw_ts") <= end + 999)
         elif raw_type is not None:
-            out = out.filter(F.col("__raw_ts") <= _ts_lit(end // 1000, raw_type))
-    return out
+            preds.append(F.col("__raw_ts") <= _ts_lit(end // 1000, raw_type))
+        if day_ns is not None:
+            preds.append(F.col("day") <= end - end % day_ns)
+    return _all(preds)
+
+
+def matcher_pred(spark: SparkSession, matchers) -> Column | None:
+    """NBQL's non-equality tag matchers, ``(key, op, value)`` with op
+    ``!=``, ``=~`` or ``!~``: the tag must EXIST and differ / (not) match.
+    These are scan-side predicates; equality rides the catalog IN-list
+    instead (``series_pred``). A future optimization is resolving regexes
+    against the catalog too (series-sized), then pushing the same
+    IN-list."""
+    preds = []
+    for k, op, v in (matchers or []):
+        tv = F.col("tags").getItem(k)
+        if op == "!=":
+            preds.append(tv.isNotNull() & (tv != v))
+        elif op == "=~":
+            preds.append(tv.isNotNull() & tv.rlike(_validated_regex(spark, v)))
+        elif op == "!~":
+            preds.append(tv.isNotNull() & ~tv.rlike(_validated_regex(spark, v)))
+        else:
+            raise ValueError(f"unknown tag matcher op: {op!r}")
+    return _all(preds)
+
+
+def _all(preds) -> Column | None:
+    """The conjunction of the non-None ``preds``; None when there are
+    none."""
+    preds = [p for p in preds if p is not None]
+    return functools.reduce(operator.and_, preds) if preds else None
+
+
+# The DataFrame forms of the predicates above, for callers that filter one
+# concern at a time.
+
+def metric_filter(df: DataFrame, metric: str) -> DataFrame:
+    return where(df, metric_pred(metric))
+
+
+def tag_filter(df: DataFrame, tags: dict[str, str]) -> DataFrame:
+    return where(df, tag_pred(tags))
+
+
+def time_range(df: DataFrame, start: int | None, end: int | None) -> DataFrame:
+    """``time_pred`` on ``df``, with raw bounds when it carries
+    ``__raw_ts``."""
+    return where(df, time_pred(start, end, dict(df.dtypes).get("__raw_ts")))
 
 
 def relative_bounds(df: DataFrame, duration_ns: int,
@@ -132,25 +201,3 @@ def _validated_regex(spark: SparkSession, pattern: str) -> str:
             f"invalid tag matcher regex {pattern!r}: "
             f"{str(msg).splitlines()[0]}") from None
     return pattern
-
-
-def apply_tag_matchers(df: DataFrame, matchers) -> DataFrame:
-    """Filter ``df`` by NBQL's non-equality tag matchers, ``(key, op,
-    value)`` with op ``!=``, ``=~`` or ``!~``: the tag must EXIST and
-    differ / (not) match. These are scan-side predicates; equality rides
-    the catalog IN-list instead (``tag_filter`` without a catalog). A
-    future optimization is resolving regexes against the catalog too
-    (series-sized), then pushing the same IN-list."""
-    for k, op, v in (matchers or []):
-        tv = F.col("tags").getItem(k)
-        if op == "!=":
-            df = df.filter(tv.isNotNull() & (tv != v))
-        elif op == "=~":
-            df = df.filter(tv.isNotNull()
-                           & tv.rlike(_validated_regex(df.sparkSession, v)))
-        elif op == "!~":
-            df = df.filter(tv.isNotNull()
-                           & ~tv.rlike(_validated_regex(df.sparkSession, v)))
-        else:
-            raise ValueError(f"unknown tag matcher op: {op!r}")
-    return df

@@ -191,7 +191,7 @@ def winnow_from_hashes(hashes: Column, w: int = 4) -> Column:
     return F.array_distinct(mins)
 
 
-def fingerprint_mink(text: Column | None = None, n: int = 3, k: int = 4,
+def fingerprint_mink(text: Column | None = None, n: int = 3, k: int = 4, *,
                      toks: Column | None = None) -> Column:
     """Document fingerprint: bottom-k sketch of word-n-gram hashes,
     concatenated to one hex string. A winnowing-style content signature:

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from nexusbase_spark.datamodel import load_table, series_key_expr, source_ts_ns
 from nexusbase_spark.nbql.parser import parse
 from nexusbase_spark.operators.scan import (
-    apply_tag_matchers, metric_filter, tag_filter, time_range,
+    matcher_pred, metric_pred, tag_pred, time_pred, where,
 )
 from nexusbase_spark.queries import DAY_NS, T1, T2, register
 
@@ -29,16 +29,15 @@ class StaticEngine:
     def __init__(self, spark: SparkSession, points: DataFrame):
         self.spark = spark
         self._points = points
+        self._raw_ts_type = dict(points.dtypes).get("__raw_ts")
 
     def points(self, metric: str | None = None,
                tags: dict[str, str] | None = None,
                start: int | None = None, end: int | None = None,
                matchers: list | None = None) -> DataFrame:
-        df = self._points
-        if metric is not None:
-            df = metric_filter(df, metric)
-        df = apply_tag_matchers(tag_filter(df, tags or {}), matchers)
-        return time_range(df, start, end)
+        return where(self._points, metric_pred(metric), tag_pred(tags or {}),
+                     matcher_pred(self.spark, matchers),
+                     time_pred(start, end, self._raw_ts_type))
 
     _now_ns = staticmethod(time.time_ns)
 

@@ -20,6 +20,7 @@ DataFrame expressions, so the detection work happens distributed; only the
 
 from __future__ import annotations
 
+from collections import deque
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -81,9 +82,13 @@ class HookBus:
     - post_* hooks run sync by default; a listener registered with
       ``is_async=True`` is dispatched on a worker thread tracked by a
       WaitGroup analog (:630-640). Errors from post-hooks never abort the
-      publisher: they are collected in ``errors`` (:627-628,636-638 log);
+      publisher: the most recent ``ERRORS_KEPT`` are kept in ``errors``
+      and ``error_count`` counts them all (:627-628,636-638 log), so a
+      long-lived server's bus stays bounded;
     - ``stop()`` drains: waits for every in-flight async listener
       (:645-648 ``wg.Wait``)."""
+
+    ERRORS_KEPT = 256
 
     def __init__(self) -> None:
         import threading
@@ -93,7 +98,8 @@ class HookBus:
         self._pool = None
         self._inflight = 0
         self._cv = threading.Condition()
-        self.errors: list[tuple[str, Exception]] = []
+        self.errors: deque[tuple[str, Exception]] = deque(maxlen=self.ERRORS_KEPT)
+        self.error_count = 0
 
     def register(self, event: str, listener: Listener, *,
                  priority: int = 100, is_async: bool = False) -> None:
@@ -146,14 +152,19 @@ class HookBus:
                     try:
                         listener(event, payload, batch_id)
                     except Exception as exc:  # post-hooks never abort
-                        self.errors.append((event, exc))
+                        self._record_error(event, exc)
             else:
                 def call(listener=listener):
                     try:
                         listener(event, payload, batch_id)
                     except Exception as exc:
-                        self.errors.append((event, exc))
+                        self._record_error(event, exc)
                 self._submit(call)
+
+    def _record_error(self, event: str, exc: Exception) -> None:
+        with self._cv:  # async listeners fail on worker threads
+            self.errors.append((event, exc))
+            self.error_count += 1
 
     def stop(self, timeout: float | None = 30.0) -> bool:
         """Drain: block until every dispatched async listener finished

@@ -299,6 +299,23 @@ def test_post_hook_errors_collected_not_raised():
         "async post failure", "sync post failure"]
 
 
+def test_post_hook_errors_keep_the_most_recent():
+    """A long-lived bus keeps only the newest ERRORS_KEPT post-hook
+    failures; error_count still counts every one."""
+    bus = HookBus()
+
+    def boom(event, payload, batch_id=-1):
+        raise RuntimeError(str(payload["i"]))
+
+    bus.register("post_put_batch", boom)
+    n = HookBus.ERRORS_KEPT + 5
+    for i in range(n):
+        bus.publish("post_put_batch", {"i": i})
+    assert bus.error_count == n
+    assert [str(e) for _ev, e in bus.errors] == [
+        str(i) for i in range(5, n)]
+
+
 def test_listener_priority_order():
     """Lower priority runs first; stable within a priority
     (hooks.go:569-586 keeps the slice sorted on Register)."""

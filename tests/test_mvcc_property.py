@@ -68,7 +68,9 @@ def model_visible(ops):
 
 def spark_visible(spark, puts, tomb_point, tomb_series, tomb_range):
     """Visible (series, ts, seq, field) rows of ``mvcc.visible`` over the
-    puts in long layout."""
+    puts in long layout, once per plan ``NexusEngine.points`` can pick:
+    the distributed one (a hash exchange for the dedup window) and the
+    one-partition one (the input coalesced to one partition first)."""
     pts = spark.createDataFrame(
         [(sk, ts, seq, f, float(seq)) for sk, ts, seq in puts for f in FIELDS],
         "series_key string, ts long, seq long, field string, value double")
@@ -78,8 +80,9 @@ def spark_visible(spark, puts, tomb_point, tomb_series, tomb_range):
                                    "max_ts long, seq long")}
     tombs = {k: spark.createDataFrame(rows, schema)
              for k, (rows, schema) in kinds.items() if rows}
-    return {(r["series_key"], r["ts"], r["seq"], r["field"])
-            for r in mvcc.visible(pts, tombs).collect()}
+    return [{(r["series_key"], r["ts"], r["seq"], r["field"])
+             for r in mvcc.visible(frame, tombs).collect()}
+            for frame in (pts, pts.coalesce(1))]
 
 
 def long_rows(versions):
@@ -96,8 +99,8 @@ def test_mvcc_tombstone_interleavings(spark, ops):
     if not any(op[0] == "put" for op in ops):
         ops = ops + [("put", SERIES[0], 0)]
     visible, puts, tp, tsr, trg = model_visible(ops)
-    got = spark_visible(spark, puts, tp, tsr, trg)
-    assert got == long_rows(visible), f"ops={ops}"
+    for got in spark_visible(spark, puts, tp, tsr, trg):
+        assert got == long_rows(visible), f"ops={ops}"
 
 
 def test_mvcc_resurrect_after_each_delete_kind(spark):
@@ -116,7 +119,8 @@ def test_mvcc_resurrect_after_each_delete_kind(spark):
     ]
     visible, puts, tp, tsr, trg = model_visible(ops)
     assert visible == {("m|h=a", 1, 2), ("m|h=b", 2, 5), ("n|h=a", 3, 8)}
-    assert spark_visible(spark, puts, tp, tsr, trg) == long_rows(visible)
+    for got in spark_visible(spark, puts, tp, tsr, trg):
+        assert got == long_rows(visible)
 
 
 def test_dedup_latest_keeps_every_row_of_the_winning_version(spark):

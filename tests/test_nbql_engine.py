@@ -661,17 +661,31 @@ def test_tag_matchers_engine_semantics(engine):
     assert none == []                      # absent tag never matches !=
 
 
-def test_explain_statement(engine):
+def test_explain_statement(spark, engine):
     """EXPLAIN QUERY returns the physical plan (one row per line), plans
-    without executing, and rejects non-readable statements."""
-    df = engine.execute(
-        "EXPLAIN QUERY e2e.test.requests FROM 0 TO 3000000000000000000 "
-        'TAGGED (service="api") AGGREGATE BY 1m (count(*))')
-    lines = [r["plan"] for r in df.orderBy("line").collect()]
-    text = "\n".join(lines)
-    assert lines and "Aggregate" in text and "Exchange" in text
+    without executing, and rejects non-readable statements. A read whose
+    files fit one split plans with no exchange; under a split size below
+    its files (a fresh engine reads the setting) it is distributed."""
+    stmt = ("EXPLAIN QUERY e2e.test.requests FROM 0 TO 3000000000000000000 "
+            'TAGGED (service="api") AGGREGATE BY 1m (count(*))')
+
+    def explain(eng) -> str:
+        lines = [r["plan"] for r in eng.execute(stmt).orderBy("line").collect()]
+        text = "\n".join(lines)
+        assert lines and "Aggregate" in text
+        return text
+
+    text = explain(engine)
+    assert "Exchange" not in text
     # the tag filter is pushed into the scan, visible in the plan
     assert "service" in text
+    key = "spark.sql.files.maxPartitionBytes"
+    spark.conf.set(key, "1024")
+    try:
+        text = explain(NexusEngine(spark, engine.warehouse))
+    finally:
+        spark.conf.unset(key)
+    assert "Exchange" in text and "service" in text
     with pytest.raises(Exception):
         engine.execute('EXPLAIN PUSH m SET (value=1.0)')
     # EXPLAIN SHOW also works

@@ -18,6 +18,7 @@ SF = args.pop(0) if args and os.path.isdir(args[0]) else "/root/testdata/sf0.01"
 spark = (SparkSession.builder.master("local[8]").appName("driver-sim")
          .config("spark.sql.shuffle.partitions", "8")
          .config("spark.ui.enabled", "false")
+         .config("spark.ui.showConsoleProgress", "false")
          .config("spark.sql.session.timeZone", "UTC")
          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
          .getOrCreate())
